@@ -31,9 +31,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .plan_cache import evict_dead_sessions
+from .plan_cache import session_memo
 
-__all__ = ["release_local_checkpoint", "memo_local_checkpoint"]
+__all__ = [
+    "release_local_checkpoint",
+    "release_checkpoint_bucket",
+    "memo_local_checkpoint",
+]
 
 
 _PROBE_WARNED = False
@@ -72,15 +76,18 @@ def release_local_checkpoint(df: DataFrame) -> None:
     df.unpersist()
 
 
-# (applicationId, semanticHash) → [(original frame, its checkpoint)].
-# The original frame is kept so a hash collision is detected by
-# sameSemantics instead of silently serving the wrong data; colliding
-# plans coexist as separate memo-owned entries in the same bucket
-# (collisions are rare, the scan is sameSemantics over a tiny list) —
-# returning an unmemoized per-call checkpoint on collision would leak
-# it, since callers treat every return as memo-owned and never
-# release it themselves.
-_CKPT_MEMO: dict[tuple[str, int], list[tuple[DataFrame, DataFrame]]] = {}
+def release_checkpoint_bucket(bucket: list) -> None:
+    """``release`` for ``SessionMemo.by_plan`` memos whose values are
+    checkpoints: free each one (the keying frames are not owned)."""
+    for _, ck in bucket:
+        release_local_checkpoint(ck)
+
+
+# (applicationId, semanticHash) → [(original frame, its checkpoint)]
+# (``SessionMemo.by_plan`` buckets) — returning an unmemoized per-call
+# checkpoint on a hash collision would leak it, since callers treat
+# every return as memo-owned and never release it themselves.
+_CKPT_MEMO = session_memo("derived", release=release_checkpoint_bucket)
 
 
 def memo_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -98,12 +105,4 @@ def memo_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     LPA rounds) should NOT go through the memo: they are dead once
     the loop advances and must be released instead.
     """
-    evict_dead_sessions(_CKPT_MEMO)
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    bucket = _CKPT_MEMO.setdefault(key, [])
-    for orig, ck in bucket:
-        if df.sameSemantics(orig):
-            return ck
-    ck = df.localCheckpoint(eager=eager)
-    bucket.append((df, ck))
-    return ck
+    return _CKPT_MEMO.by_plan(df, lambda: df.localCheckpoint(eager=eager))

@@ -23,7 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint, release_local_checkpoint
-from ..plan_cache import evict_dead_sessions, plan_memo
+from ..plan_cache import plan_memo, session_memo, unpersist_frames
 from ..functions.scalar import money
 from ..schema import load_table, table_row_count
 from ..session import default_parallelism
@@ -1289,7 +1289,7 @@ PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an integer ratio
 # and re-cached/re-checkpointed its own copy.  One bounded resident
 # entry per (session, sf) — the graph family's "signature table",
 # same policy as the simhash signature cache (dedup.py).
-_TRADE_EDGES_MEMO: dict[tuple[str, str], DataFrame] = {}
+_TRADE_EDGES_MEMO = session_memo("derived", release=unpersist_frames)
 
 
 def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
@@ -1297,7 +1297,6 @@ def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
     lineitem⋈orders pairs with bipartite node ids (2·suppkey /
     2·custkey+1), both directions materialized, cached once per
     session+sf (memo above — do NOT unpersist; the memo owns it)."""
-    evict_dead_sessions(_TRADE_EDGES_MEMO)
     key = (spark.sparkContext.applicationId, sf.rstrip("/"))
     hit = _TRADE_EDGES_MEMO.get(key)
     if hit is not None:
@@ -1657,7 +1656,7 @@ KMV_K = 32  # k-minimum-values sketch size
 # jobs (e.count + deg.count) over the cached frame — pure job-boundary
 # floor at local scale.  The stats are computed inside the ONE
 # materializing job below.
-_COPURCHASE_MEMO: dict[tuple, tuple[DataFrame, int, int]] = {}
+_COPURCHASE_MEMO = session_memo("derived", release=unpersist_frames)
 
 
 def _copurchase_edges(spark: SparkSession, sf: str) -> DataFrame:
@@ -1694,7 +1693,6 @@ def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
     # construction AND the materializing count (the cached plan
     # captures session conf at registration); consumers see only the
     # committed cache.
-    evict_dead_sessions(_COPURCHASE_MEMO)
     key = (spark.sparkContext.applicationId, sf.rstrip("/"), PAIR_MIN_SUPPORT)
     hit = _COPURCHASE_MEMO.get(key)
     if hit is not None:

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..checkpoints import memo_local_checkpoint
 from ..plan_cache import plan_memo
 from ..schema import load_table
+from ..tmpdirs import tmpdir_reclaimed_at_exit
 from .dedup import (
     _MINHASH_BANDS_CTE,
     _SHINGLES_CTE,
@@ -1162,10 +1163,6 @@ def curation_shard_write(spark: SparkSession, sf: str) -> DataFrame:
     ends with; at 100 TB the same partitionBy scales to thousands of
     shards with one shuffle.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     d = load_table(spark, sf, "documents").select(
         "doc_id",
         "source",
@@ -1179,8 +1176,7 @@ def curation_shard_write(spark: SparkSession, sf: str) -> DataFrame:
             % N_SHARDS
         ).alias("shard"),
     )
-    out = tempfile.mkdtemp(prefix="corpus_shards_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = tmpdir_reclaimed_at_exit("corpus_shards_")
     d.write.mode("overwrite").partitionBy("shard").parquet(out)
     back = spark.read.parquet(out)
     return (

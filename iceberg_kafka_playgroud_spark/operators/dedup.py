@@ -23,12 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpoints import release_local_checkpoint
-from ..plan_cache import (
-    cached,
-    durable_plan_memo,
-    evict_dead_sessions,
-)
+from ..checkpoints import release_checkpoint_bucket, release_local_checkpoint
+from ..plan_cache import cached, durable_plan_memo, session_memo
 from ..schema import load_table, table_row_count
 from .text import normalized, tokens
 
@@ -181,28 +177,17 @@ CAND_SHINGLE_BROADCAST_MAX_PAIRS = 100_000
 WJ_PRUNE_CAND_DOC_PCT = 10
 
 
-# (applicationId, cand.semanticHash()) → [(cand frame, pair count)]
-# collision buckets (same shape as checkpoints._CKPT_MEMO). The
-# candidate count gates broadcasts in four operators; the frame is
-# cached and deterministic within a session, so the count job runs
-# ONCE instead of once per operator call (a bare tiny-job count still
-# costs a full stage-scheduling round trip per invocation).
-_N_CAND_MEMO: dict = {}
+# candidate pair count per (session, cand plan) — ``by_plan`` buckets.
+# The count gates broadcasts in four operators; the frame is cached
+# and deterministic within a session, so the count job runs ONCE
+# instead of once per operator call (a bare tiny-job count still
+# costs a full stage-scheduling round trip per invocation).  No
+# release: the cand frame belongs to the durable plan tier.
+_N_CAND_MEMO = session_memo("derived")
 
 
 def _cand_count(cand: DataFrame) -> int:
-    evict_dead_sessions(_N_CAND_MEMO)
-    key = (
-        cand.sparkSession.sparkContext.applicationId,
-        cand.semanticHash(),
-    )
-    bucket = _N_CAND_MEMO.setdefault(key, [])
-    for prev, n in bucket:
-        if cand.sameSemantics(prev):
-            return n
-    n = cand.count()
-    bucket.append((cand, n))
-    return n
+    return _N_CAND_MEMO.by_plan(cand, cand.count)
 
 
 def _bcast_if_small(
@@ -770,19 +755,16 @@ def connected_components_over(pairs: DataFrame) -> DataFrame:
     # final-round checkpoint into block-manager storage (checkpoints
     # are instance-keyed, unlike cache(); see checkpoints.py). One
     # nodes-sized resident entry per distinct pair graph, intermediate
-    # rounds released as the loop advances.
-    spark = pairs.sparkSession
-    evict_dead_sessions(_CC_MEMO)
-    key = (spark.sparkContext.applicationId, pairs.semanticHash())
-    bucket = _CC_MEMO.setdefault(key, [])
-    for prev_pairs, ck in bucket:
-        if pairs.sameSemantics(prev_pairs):
-            # ck is the final round's CHECKPOINT frame (not a
-            # projection of it) so test harnesses can release its
-            # blocks; hash collisions coexist in the bucket instead
-            # of overwriting (an overwrite would orphan the resident
-            # checkpoint's blocks — the leak class this file fixes)
-            return _cc_output(ck.select("node", "label"))
+    # rounds released as the loop advances.  The memo holds the final
+    # round's CHECKPOINT frame (not a projection of it) so a reset can
+    # release its blocks.
+    ck = _CC_MEMO.by_plan(pairs, lambda: _converged_labels(pairs))
+    return _cc_output(ck.select("node", "label"))
+
+
+def _converged_labels(pairs: DataFrame) -> DataFrame:
+    """The min-label propagation loop of ``connected_components_over``:
+    returns the final round's checkpoint (node, old_label, label)."""
     # undirected adjacency (both directions), so every node appears as
     # d1 and isolated-after-filter nodes keep their own label via the
     # self row unioned into each round's aggregation.  Materialized
@@ -889,14 +871,14 @@ def connected_components_over(pairs: DataFrame) -> DataFrame:
     # checkpoint (referenced by the returned plan) stays resident,
     # owned by the memo
     release_local_checkpoint(edges)
-    # memoize the CHECKPOINT itself, not the (node, label)
-    # projection: release_local_checkpoint can only free blocks when
-    # handed the frame whose analyzed plan IS the LogicalRDD
-    bucket.append((pairs, prev_ckpt))
-    return _cc_output(labels)
+    # the CHECKPOINT itself, not the (node, label) projection:
+    # release_local_checkpoint can only free blocks when handed the
+    # frame whose analyzed plan IS the LogicalRDD
+    return prev_ckpt
 
 
-_CC_MEMO: dict = {}
+# no release for the keying pairs frame: the durable plan tier owns it
+_CC_MEMO = session_memo("derived", release=release_checkpoint_bucket)
 
 
 def _cc_output(labels: DataFrame) -> DataFrame:

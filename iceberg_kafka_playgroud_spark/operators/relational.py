@@ -43,7 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..plan_cache import session_memo
 from ..schema import load_table
+from ..tmpdirs import tmpdir_reclaimed_at_exit
 
 
 def _cents(col: str | F.Column) -> F.Column:
@@ -473,7 +475,7 @@ def events_time_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
 # staged alternate-format copies of the orders table per
 # (applicationId, sf, fmt) — written once, reclaimed at exit
-_FMT_STAGE_MEMO: dict = {}
+_FMT_STAGE_MEMO = session_memo("retained")
 
 
 def _orders_in_format(spark: SparkSession, sf: str, fmt: str) -> DataFrame:
@@ -484,16 +486,11 @@ def _orders_in_format(spark: SparkSession, sf: str, fmt: str) -> DataFrame:
     schema, exercising its field-name-based resolution. Timestamps
     round-trip as ISO-8601 text in both formats under the UTC session.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     key = (spark.sparkContext.applicationId, sf.rstrip("/"), fmt)
     stage = _FMT_STAGE_MEMO.get(key)
     o = load_table(spark, sf, "orders")
     if stage is None:
-        stage = tempfile.mkdtemp(prefix=f"orders_{fmt}_")
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
+        stage = tmpdir_reclaimed_at_exit(f"orders_{fmt}_")
         w = o.write.mode("overwrite")
         if fmt == "csv":
             w.option("header", "true").csv(stage)
@@ -2526,12 +2523,7 @@ def write_dynamic_partition_overwrite(spark: SparkSession, sf: str) -> DataFrame
     bad day without touching the other 3650; the audit is one
     partition-discovering scan folded per year.
     """
-    import atexit
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="dpo_orders_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = tmpdir_reclaimed_at_exit("dpo_orders_")
     o = load_table(spark, sf, "orders").select(
         F.year("o_orderdate").alias("y"),
         F.month("o_orderdate").alias("m"),
@@ -2590,14 +2582,10 @@ def source_json_corrupt_records(spark: SparkSession, sf: str) -> DataFrame:
     fold — the quarantine pattern is how a 100 TB ingest keeps one
     bad producer from stalling the lake.
     """
-    import atexit
     import json as _json
     import os
-    import shutil
-    import tempfile
 
-    stage = tempfile.mkdtemp(prefix="corrupt_jsonl_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    stage = tmpdir_reclaimed_at_exit("corrupt_jsonl_")
     path = os.path.join(stage, "feed.jsonl")
     with open(path, "w") as fh:
         for i in range(CORRUPT_ROWS):

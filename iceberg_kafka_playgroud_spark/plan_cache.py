@@ -1,4 +1,10 @@
-"""Prepared-plan layer: memoize built (lazy) DataFrames per session.
+"""Session-memo registry, and the prepared-plan layer built on it.
+
+Every engine memo (both plan tiers below, each module's ``_*_MEMO``)
+is a ``session_memo(kind, release)``; resets and dead-session sweeps
+loop over the registry, so this module imports no operator.
+
+Prepared plans: memoize built (lazy) DataFrames per session.
 
 Building a DataFrame plan from Python is not free: every column
 expression, join, and alias is a py4j round trip, and ``cache()`` /
@@ -59,9 +65,12 @@ from __future__ import annotations
 import functools
 from typing import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
+    "session_memo",
+    "unpersist_frames",
     "plan_memo",
     "durable_plan_memo",
     "cached",
@@ -70,8 +79,79 @@ __all__ = [
     "clear_materializations",
 ]
 
+
+class SessionMemo(dict):
+    """An engine memo keyed by tuples whose FIRST element is the owning
+    ``applicationId``.  ``"derived"`` memos (plans, models, the IVF
+    index, pair graphs, edges, labels, checkpoints) are released and
+    emptied by ``clear_materializations``; ``"retained"`` ones (lazy
+    scan handles, staged artifacts whose re-write would leak a copy
+    per rep, durable plans) survive it.  ``release(value)`` frees what
+    one entry holds.  The first write after a session change sweeps
+    every registered memo of the stopped sessions' entries."""
+
+    _swept_for: SparkContext | None = None
+
+    def __init__(self, kind: str, release: Callable | None = None):
+        if kind not in ("derived", "retained"):
+            raise ValueError(f"unknown memo kind {kind!r}")
+        super().__init__()
+        self.kind = kind
+        self.release = release
+
+    def __setitem__(self, key, value) -> None:
+        sc = SparkContext._active_spark_context
+        if sc is not SessionMemo._swept_for:
+            SessionMemo._swept_for = sc
+            evict_dead_sessions()
+        super().__setitem__(key, value)
+
+    def drop(self) -> None:
+        """Release every entry, then forget them all (callers evict
+        dead sessions first: a stopped JVM has nothing to free)."""
+        if self.release is not None:
+            for value in list(self.values()):
+                self.release(value)
+        self.clear()
+
+    def by_plan(self, df: DataFrame, build: Callable[[], object]):
+        """``build()`` memoized per (session, logical plan of ``df``):
+        (applicationId, semanticHash) buckets of ``(frame, value)``,
+        scanned with ``sameSemantics`` so a hash collision never serves
+        the wrong value nor overwrites (orphans) the first one."""
+        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
+        bucket = self.get(key)
+        if bucket is None:
+            bucket = self[key] = []
+        for prev, value in bucket:
+            if df.sameSemantics(prev):
+                return value
+        value = build()
+        bucket.append((df, value))
+        return value
+
+
+# every SessionMemo, in import order: THE memo inventory
+_REGISTRY: list[SessionMemo] = []
+
+
+def session_memo(kind: str, release: Callable | None = None) -> SessionMemo:
+    """Create an engine memo at module level; it joins the registry
+    when its module is imported."""
+    memo = SessionMemo(kind, release)
+    _REGISTRY.append(memo)
+    return memo
+
+
+def unpersist_frames(value) -> None:
+    """``release`` for a cached frame or a tuple holding some."""
+    for v in value if isinstance(value, (tuple, list)) else (value,):
+        if isinstance(v, DataFrame):
+            v.unpersist()
+
+
 # (applicationId, sf, qualname, gate-values...) → DataFrame
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
+_PLAN_CACHE = session_memo("derived")
 
 # second tier (r14 verdict #4): prepared plans that SURVIVE
 # ``clear_materializations`` — the recompute-warm reset.  Eligible
@@ -89,7 +169,9 @@ _PLAN_CACHE: dict[tuple, DataFrame] = {}
 # checkpoint blocks is both dishonest and broken).  ``clear()`` (the
 # full reset used by cold-path measurements) drops this tier too.
 # value: (DataFrame, cache handles in build = dependency order)
-_DURABLE_PLAN_CACHE: dict[tuple, tuple[DataFrame, tuple[DataFrame, ...]]] = {}
+_DURABLE_PLAN_CACHE = session_memo(
+    "retained", release=lambda entry: unpersist_frames(entry[1])
+)
 
 # collector active during a durable build (nesting-safe via
 # save/restore in the decorator; thread-local so a concurrent build —
@@ -130,124 +212,58 @@ def _fresh_view(df: DataFrame) -> DataFrame:
 
 
 def evict_dead_sessions(memo: dict | None = None) -> int:
-    """Drop memo entries owned by stopped sessions.
+    """Drop the entries owned by stopped sessions from ``memo``, or
+    from every registered memo when it is None; returns how many.
 
-    Works on any session-keyed memo whose keys are tuples with the
-    ``applicationId`` FIRST (the repo-wide memo convention —
-    checkpoints, trade/co-purchase edges, candidate counts, boiler
-    grams, this module's plan cache).  PySpark allows exactly ONE
-    active SparkContext per process, so every appId other than the
-    live one is provably dead; a long-lived process that creates
-    several sessions (test runners, notebook restarts) would
-    otherwise accumulate entries holding py4j handles to stopped
-    JVMs.  Returns the number evicted.
+    PySpark allows exactly ONE active SparkContext per process, so
+    every appId other than the live one is provably dead; a long-lived
+    process that creates several sessions (test runners, notebook
+    restarts) would otherwise accumulate py4j handles to stopped JVMs.
+    Evicted entries are not released: a stopped JVM has nothing to
+    free, and temp dirs are reclaimed at exit.
     """
-    memo = _PLAN_CACHE if memo is None else memo
-    from pyspark import SparkContext
-
     sc = SparkContext._active_spark_context
     live = None
     if sc is not None and getattr(sc, "_jsc", None) is not None:
         live = sc.applicationId
-    dead = [k for k in memo if k[0] != live]
-    for k in dead:
-        del memo[k]
-    return len(dead)
-
-
-def _drop_durable_tier() -> None:
-    """Clear ``_DURABLE_PLAN_CACHE``, unpersisting every registered
-    cache handle first (blocking=False).  Dropping an entry without
-    this would orphan its cache-manager registrations: the handles'
-    plans stay registered JVM-side until something else calls
-    ``spark.catalog.clearCache()`` (bench does; a bare ``clear()``
-    caller does not)."""
-    for _, handles in _DURABLE_PLAN_CACHE.values():
-        for h in handles:
-            try:
-                h.unpersist(blocking=False)
-            except Exception:
-                # handle owned by a stopped session — nothing to free
-                pass
-    _DURABLE_PLAN_CACHE.clear()
+    n = 0
+    for m in _REGISTRY if memo is None else (memo,):
+        for k in [k for k in list(m) if k[0] != live]:
+            dict.pop(m, k, None)
+            n += 1
+    return n
 
 
 def clear() -> None:
     """Drop every prepared plan, BOTH tiers (cold-path measurements
     use this so they cannot hit a warm plan)."""
-    _PLAN_CACHE.clear()
-    _drop_durable_tier()
+    evict_dead_sessions()
+    _PLAN_CACHE.drop()
+    _DURABLE_PLAN_CACHE.drop()
 
 
 def clear_materializations(
     spark: SparkSession | None = None, drop_prepared_plans: bool = False
 ) -> None:
-    """Forget EVERY engine-owned materialization: prepared plans,
-    session-keyed memos (CC labels, trade/co-purchase edges, PQ
-    codebooks, pair graphs, boiler grams), released localCheckpoints,
-    and — when a session is passed — the whole Spark block cache.
+    """Release and empty every ``"derived"`` registry memo and — when a
+    session is passed — drop the whole Spark block cache.
 
     This is the shared cold-path reset used by BOTH the growth
     batteries and bench.py's RECOMPUTE-warm column: after calling it,
     the next action on any operator re-executes the full distributed
     dataflow (a memo or cache hit is corpus-size-insensitive, so any
-    measurement claiming to scale must start from here).  Imports are
-    lazy so this module keeps zero operator dependencies.
-
-    Deliberately RETAINED (not derived compute, so keeping them warm
-    cannot flatter a recompute measurement): ``schema._TABLE_MEMO``
-    (lazy scan handles — pure plans, the catalog role) and the
-    one-shot fixture/sink STAGING memos (``ingest._STREAM_SRC_MEMO``/
-    ``_DOC_STAGE_MEMO``, ``relational._FMT_STAGE_MEMO``,
-    ``python_datasource._SINK_STAGE_MEMO``/``_STREAM_SINK_MEMO``) —
-    those hold /tmp paths of deterministic staged artifacts whose
-    re-write would leak a copy per rep; the artifact is the test
-    subject, not a cached answer.  Everything DERIVED — trained
-    models (k-means, PQ), the persisted IVF index, pair graphs,
-    edges, labels, checkpoints, prepared plans — is cleared here.
+    measurement claiming to scale must start from here).
+    ``drop_prepared_plans=True`` also drops the durable plan tier, for
+    cold-path measurements that must pay plan construction.
     """
-    from iceberg_kafka_playgroud_spark import checkpoints
-    from iceberg_kafka_playgroud_spark.operators import advanced as _adv
-    from iceberg_kafka_playgroud_spark.operators import dedup as _dd
-    from iceberg_kafka_playgroud_spark.operators import similarity as _sim
-
     if spark is not None:
         spark.catalog.clearCache()
-    for bucket in list(checkpoints._CKPT_MEMO.values()):
-        for _, ck in bucket:
-            checkpoints.release_local_checkpoint(ck)
-    checkpoints._CKPT_MEMO.clear()
-    for bucket in list(_dd._CC_MEMO.values()):
-        for _, lbl in bucket:
-            checkpoints.release_local_checkpoint(lbl)
-    _dd._CC_MEMO.clear()
-    _dd._N_CAND_MEMO.clear()
-    for e in _adv._TRADE_EDGES_MEMO.values():
-        e.unpersist()
-    _adv._TRADE_EDGES_MEMO.clear()
-    for e, _, _ in _adv._COPURCHASE_MEMO.values():
-        e.unpersist()
-    _adv._COPURCHASE_MEMO.clear()
-    # single-tier prepared plans hold references into the cleared
-    # caches/memos — a recompute rep must rebuild those.  The durable
-    # tier survives by contract (its plans embed nothing but re-armable
-    # cache markers); ``drop_prepared_plans=True`` drops it too, for
-    # cold-path measurements that must pay plan construction.
-    _PLAN_CACHE.clear()
+    evict_dead_sessions()
+    for memo in _REGISTRY:
+        if memo.kind == "derived":
+            memo.drop()
     if drop_prepared_plans:
-        _drop_durable_tier()
-    _sim._PQ_MODEL_MEMO.clear()
-    _sim._PAIRS_MEMO.clear()
-    # trained k-means models and the persisted IVF index are derived
-    # compute too: a recompute rep must re-run Lloyd training and the
-    # index build (the index dirs are atexit-reclaimed; ~MBs each)
-    for assigned, _ in _sim._KM_MODEL_MEMO.values():
-        assigned.unpersist()
-    _sim._KM_MODEL_MEMO.clear()
-    _sim._IVF_INDEX_MEMO.clear()
-    # (the boilerplate gram frame moved from a bespoke memo into the
-    # durable plan tier in r15 — clearCache() above dropped its blocks;
-    # the re-armed cache marker repopulates on the next action)
+        clear()
 
 
 def _memo_key(
@@ -278,7 +294,6 @@ def plan_memo(*gate_names: str) -> Callable:
     def deco(fn: Callable) -> Callable:
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-            evict_dead_sessions()
             key = _memo_key(fn, gate_names, spark, sf)
             hit = _PLAN_CACHE.get(key)
             if hit is not None:
@@ -318,8 +333,6 @@ def durable_plan_memo(*gate_names: str) -> Callable:
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-            evict_dead_sessions()
-            evict_dead_sessions(_DURABLE_PLAN_CACHE)
             key = _memo_key(fn, gate_names, spark, sf)
             hit = _DURABLE_PLAN_CACHE.get(key)
             if hit is not None:
@@ -339,11 +352,7 @@ def durable_plan_memo(*gate_names: str) -> Callable:
                 # the cache registrations it made before failing (the
                 # entry is never stored, so nothing would ever re-arm
                 # or drop them)
-                for h in _TLS.collect:
-                    try:
-                        h.unpersist(blocking=False)
-                    except Exception:
-                        pass
+                unpersist_frames(_TLS.collect)
                 raise
             finally:
                 _TLS.collect = prev

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .plan_cache import evict_dead_sessions
+from .plan_cache import session_memo
 
 # --- canonical PurchaseEvent schema (SURVEY §1.1) -------------------------
 
@@ -150,7 +150,7 @@ def _compacted_source(sf_dir: str, name: str) -> str:
 # handle for (session, dir, table) can be built once and reused — this
 # is what a catalog does; it removes repeated footer reads and
 # driver↔JVM round trips from every query's plan-construction path.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+_TABLE_MEMO = session_memo("retained")
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -276,7 +276,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # later memo hit. Runtime (not only our session factory) so the
     # engine also works under the correctness driver's own SparkSession.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    evict_dead_sessions(_TABLE_MEMO)
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
     memo = _TABLE_MEMO.get(key)
     if memo is not None:

@@ -36,10 +36,11 @@ from __future__ import annotations
 import glob as _glob
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .tmpdirs import tmpdir_reclaimed_at_exit
 
 DATA_DIR = "data"
 SNAP_DIR = "_snapshots"
@@ -241,14 +242,7 @@ def _fabric_slice(spark: SparkSession, lo: int, hi: int) -> DataFrame:
 
 
 def _build_demo_table(spark: SparkSession) -> str:
-    import atexit
-    import shutil
-
-    table_dir = tempfile.mkdtemp(prefix="snap_tbl_")
-    # demo tables can't be removed before the caller's lazy read
-    # executes; reclaim them at interpreter exit instead of leaking
-    # one per query invocation
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = tmpdir_reclaimed_at_exit("snap_tbl_")
     for k in range(N_APPENDS):
         commit_append(
             spark, table_dir, _fabric_slice(spark, k * N_PER_APPEND, (k + 1) * N_PER_APPEND)
@@ -538,11 +532,7 @@ def snapshot_partition_evolution(spark: SparkSession, sf: str) -> DataFrame:
     At 100 TB this is why evolving a spec is metadata-cheap but only
     accelerates NEW data until old files are rewritten.
     """
-    import atexit
-    import shutil
-
-    table_dir = tempfile.mkdtemp(prefix="snap_evo_")
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = tmpdir_reclaimed_at_exit("snap_evo_")
     commit_append(spark, table_dir, _fabric_slice(spark, 0, N_PER_APPEND))
     commit_append(
         spark, table_dir, _fabric_slice(spark, N_PER_APPEND, 2 * N_PER_APPEND)
@@ -687,11 +677,7 @@ def snapshot_wap_publish(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _build_demo_table_two_appends(spark: SparkSession) -> str:
-    import atexit
-    import shutil
-
-    table_dir = tempfile.mkdtemp(prefix="snap_wap_")
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = tmpdir_reclaimed_at_exit("snap_wap_")
     for k in range(2):
         commit_append(
             spark,
@@ -1291,11 +1277,7 @@ def snapshot_mor_read(spark: SparkSession, sf: str) -> DataFrame:
     every late-arriving upsert). Folded per bucket; the oracle replays
     the arithmetic from generate_series.
     """
-    import atexit
-    import shutil
-
-    table_dir = tempfile.mkdtemp(prefix="mor_tbl_")
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = tmpdir_reclaimed_at_exit("mor_tbl_")
     base = 1740787200000
     commit_append(spark, table_dir, _fabric_slice(spark, 0, MOR_BASE_ROWS))
     idx = ((F.col("timestamp") - base) / 5000).cast("long")
@@ -1363,11 +1345,7 @@ def snapshot_sorted_rewrite(spark: SparkSession, sf: str) -> DataFrame:
     scores multi-column interleaving; this op proves the WRITE path +
     the before/after pruning delta on the snapshot lifecycle.
     """
-    import atexit
-    import shutil
-
-    table_dir = tempfile.mkdtemp(prefix="sorted_tbl_")
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = tmpdir_reclaimed_at_exit("sorted_tbl_")
     n_rows = N_PER_APPEND * N_APPENDS
     commit_append(spark, table_dir, _fabric_slice(spark, 0, n_rows))
     base = 1740787200000
@@ -1465,11 +1443,7 @@ def snapshot_incremental_view_maintenance(
     min/max would need the deleted-value check that general IVM
     literature handles with auxiliary state.)
     """
-    import atexit
-    import shutil
-
-    table_dir = tempfile.mkdtemp(prefix="ivm_tbl_")
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = tmpdir_reclaimed_at_exit("ivm_tbl_")
     s1 = commit_append(spark, table_dir, _fabric_slice(spark, 0, IVM_APPEND_1))
     s2 = commit_append(
         spark, table_dir, _fabric_slice(spark, IVM_APPEND_1, IVM_APPEND_2)
@@ -1630,11 +1604,7 @@ def snapshot_file_size_audit(spark: SparkSession, sf: str) -> DataFrame:
     The fixture table is three appends WITHOUT the demo rewrite, so
     every bucket really holds N_APPENDS small files.
     """
-    import atexit
-    import shutil
-
-    table_dir = tempfile.mkdtemp(prefix="snap_fsa_")
-    atexit.register(shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = tmpdir_reclaimed_at_exit("snap_fsa_")
     for k in range(N_APPENDS):
         commit_append(
             spark,

@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from ..plan_cache import session_memo
+from ..tmpdirs import tmpdir_reclaimed_at_exit
+
 FABRIC_BASE_MS = 1740787200000
 DEFAULT_ROWS = 1200
 DEFAULT_PARTS = 8
@@ -207,7 +210,7 @@ def _register_sink(spark: SparkSession) -> None:
     _register(spark, JsonlCommitDataSource)
 
 
-_SINK_STAGE_MEMO: dict = {}
+_SINK_STAGE_MEMO = session_memo("retained")
 
 
 def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
@@ -228,12 +231,7 @@ def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, "jsonl_sink")
     out = _SINK_STAGE_MEMO.get(key)
     if out is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="jsonl_sink_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+        out = tmpdir_reclaimed_at_exit("jsonl_sink_")
         fab = (
             spark.read.format("purchase_fabric")
             .option("n_rows", str(DEFAULT_ROWS))
@@ -370,15 +368,11 @@ def source_python_stream_reader(spark: SparkSession, sf: str) -> DataFrame:
     The oracle regenerates the rows from generate_series, identical to
     the batch source's: same rule, different transport.
     """
-    import atexit
-    import shutil
-    import tempfile
     import time
     import uuid
 
     _register_stream(spark)
-    ckpt = tempfile.mkdtemp(prefix="fab_stream_ckpt_")
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    ckpt = tmpdir_reclaimed_at_exit("fab_stream_ckpt_")
     name = f"fab_stream_{uuid.uuid4().hex[:12]}"
     stream = (
         spark.readStream.format("purchase_fabric_stream")
@@ -509,7 +503,7 @@ class JsonlEpochSinkDataSource(DataSource):
         return JsonlEpochStreamWriter(self.options)
 
 
-_STREAM_SINK_MEMO: dict = {}
+_STREAM_SINK_MEMO = session_memo("retained")
 
 
 def sink_python_stream_writer(spark: SparkSession, sf: str) -> DataFrame:
@@ -532,15 +526,10 @@ def sink_python_stream_writer(spark: SparkSession, sf: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, "jsonl_stream_sink")
     out = _STREAM_SINK_MEMO.get(key)
     if out is None:
-        import atexit
-        import shutil
-        import tempfile
         import time
 
-        out = tempfile.mkdtemp(prefix="jsonl_stream_sink_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        ckpt = tempfile.mkdtemp(prefix="jsonl_stream_sink_ckpt_")
-        atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+        out = tmpdir_reclaimed_at_exit("jsonl_stream_sink_")
+        ckpt = tmpdir_reclaimed_at_exit("jsonl_stream_sink_ckpt_")
         stream = (
             spark.readStream.format("purchase_fabric_stream")
             .option("n_rows", str(DEFAULT_ROWS))

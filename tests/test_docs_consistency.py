@@ -64,3 +64,19 @@ def test_priority_covers_registry_exactly_once():
         f"missing={sorted(reg - set(prio))[:5]} "
         f"extra={sorted(set(prio) - reg)[:5]}"
     )
+
+
+def test_rotate_priority_refuses_dirty_past_window(monkeypatch):
+    """A dirty set longer than the correctness window would push dirty
+    operators past it, unchecked — the rotation tool must refuse."""
+    import importlib.util
+
+    import pytest
+
+    path = COVERAGE.parent / "tools" / "rotate_priority.py"
+    spec = importlib.util.spec_from_file_location("rotate_priority", path)
+    rot = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rot)
+    monkeypatch.setattr(rot, "DIRTY", [f"q{i}" for i in range(rot.WINDOW + 1)])
+    with pytest.raises(SystemExit, match="correctness window"):
+        rot.main()

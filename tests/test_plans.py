@@ -887,6 +887,50 @@ def test_memo_eviction_drops_dead_sessions(spark, sf_dir):
     for memo in (dedup._N_CAND_MEMO, advanced._TRADE_EDGES_MEMO):
         assert all(k[0] == live for k in memo)
 
+    # the no-argument sweep covers every registered memo, and only
+    # drops dead-session entries
+    from iceberg_kafka_playgroud_spark.plan_cache import _REGISTRY
+
+    for i, memo in enumerate(_REGISTRY):
+        memo[("app-dead-123", "planted", i)] = object()
+    n_live = sum(map(len, _REGISTRY)) - len(_REGISTRY)
+    assert evict_dead_sessions() == len(_REGISTRY)
+    assert sum(map(len, _REGISTRY)) == n_live > 0
+    assert not [k for m in _REGISTRY for k in m if k[0] != live]
+
+
+def test_reset_without_session_unpersists_memo_frames(spark, sf_dir):
+    """``clear_materializations()`` without a session (the growth
+    batteries' call) still unpersists the cached frames memos hold."""
+    from iceberg_kafka_playgroud_spark import plan_cache
+    from iceberg_kafka_playgroud_spark.operators import similarity
+
+    plan_cache.clear_materializations(spark)
+    base = _n_persistent_rdds(spark)
+    similarity.embedding_near_dup_pairs(spark, sf_dir).collect()
+    similarity.ann_pq_adc_topk(spark, sf_dir).collect()
+    assert _n_persistent_rdds(spark) > base
+    plan_cache.clear_materializations()
+    assert _n_persistent_rdds(spark) == base
+
+
+def test_reset_removes_ivf_index_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A reset removes the on-disk IVF index its memo held (each
+    rebuild writes a fresh dir), instead of leaving it until exit."""
+    import tempfile
+
+    from iceberg_kafka_playgroud_spark import plan_cache
+    from iceberg_kafka_playgroud_spark.operators import similarity
+
+    plan_cache.clear_materializations(spark)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for _ in range(2):
+        plan_cache.clear_materializations(spark)
+        similarity._ivf_index_on_disk(spark, sf_dir)
+    assert len(list(tmp_path.glob("ivf_index_*"))) == 1
+    plan_cache.clear_materializations(spark)
+    assert not list(tmp_path.glob("ivf_index_*"))
+
 
 def test_boilerplate_docs_single_cache_entry(spark, sf_dir):
     """The corpus-sized boilerplate gram frame must stay ONE bounded

@@ -971,63 +971,56 @@ def test_stream_sink_epoch_commit_protocol(tmp_path):
     assert strays == [], strays
 
 
-def test_every_engine_memo_is_classified():
-    """Review-pass guard (r12): every module-level ``*_MEMO`` dict in
-    the package must be either CLEARED by
-    ``plan_cache.clear_materializations`` (derived compute — models,
-    indexes, pair graphs, labels, checkpoints) or on the documented
-    RETAINED list (lazy plan handles / one-shot staged fixture paths).
-    A new memo that is neither fails here, so it cannot silently stay
-    warm through the recompute-warm bench column or the growth
-    batteries (the exact defect the r12 review found twice)."""
+def test_every_engine_memo_is_classified(spark, sf_dir):
+    """Every module-level ``*_MEMO`` in the package is a
+    ``plan_cache.session_memo`` registry member (a plain-dict memo
+    fails here, so it cannot silently stay warm through the
+    recompute-warm bench column or the growth batteries), and the
+    registry's kinds hold: after ops populated the memos,
+    ``clear_materializations(spark)`` empties every derived memo and
+    leaves every retained memo untouched."""
     import importlib
     import pkgutil
 
     import iceberg_kafka_playgroud_spark as pkg
+    from iceberg_kafka_playgroud_spark import plan_cache
+    from iceberg_kafka_playgroud_spark.operators import (
+        advanced,
+        dedup,
+        relational,
+        similarity,
+    )
 
-    CLEARED = {
-        "checkpoints._CKPT_MEMO",
-        "operators.dedup._CC_MEMO",
-        "operators.dedup._N_CAND_MEMO",
-        "operators.advanced._TRADE_EDGES_MEMO",
-        "operators.advanced._COPURCHASE_MEMO",
-        "operators.similarity._PQ_MODEL_MEMO",
-        "operators.similarity._PAIRS_MEMO",
-        "operators.similarity._KM_MODEL_MEMO",
-        "operators.similarity._IVF_INDEX_MEMO",
-    }
-    RETAINED = {
-        # lazy scan handles — pure plans, no materialization
-        "schema._TABLE_MEMO",
-        # one-shot staged fixture/sink artifacts (paths in /tmp whose
-        # re-write would leak a copy per rep; the artifact is the test
-        # subject, not derived compute)
-        "streaming.ingest._STREAM_SRC_MEMO",
-        "streaming.ingest._DOC_STAGE_MEMO",
-        "operators.relational._FMT_STAGE_MEMO",
-        "sources.python_datasource._SINK_STAGE_MEMO",
-        "sources.python_datasource._STREAM_SINK_MEMO",
-    }
-    found = set()
+    registry = plan_cache._REGISTRY
+    unregistered = []
     for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
         try:
             mod = importlib.import_module(info.name)
         except ImportError:
             continue
-        rel = info.name.removeprefix(pkg.__name__ + ".")
         for attr, val in vars(mod).items():
-            if attr.endswith("_MEMO") and isinstance(val, dict):
-                found.add(f"{rel}.{attr}")
-    unclassified = found - CLEARED - RETAINED
-    assert not unclassified, (
-        "new engine memo(s) neither cleared by clear_materializations "
-        f"nor on its documented retained list: {sorted(unclassified)} — "
-        "classify them (clear derived compute; document staging/plan "
-        "handles) in plan_cache.clear_materializations AND this test"
+            if attr.endswith("_MEMO") and not any(val is m for m in registry):
+                unregistered.append(f"{info.name}.{attr}")
+    assert not unregistered, (
+        f"engine memo(s) outside the registry: {unregistered} — create "
+        "them with plan_cache.session_memo(kind, release)"
     )
-    # the cleared list must actually exist (catch renames)
-    missing = CLEARED - found
-    assert not missing, f"expected memos vanished: {sorted(missing)}"
+
+    dedup.dedup_connected_components(spark, sf_dir).collect()
+    advanced._trade_edges(spark, sf_dir)
+    similarity.ann_pq_adc_topk(spark, sf_dir).collect()
+    relational._orders_in_format(spark, sf_dir, "csv")
+    derived = [m for m in registry if m.kind == "derived"]
+    retained = [m for m in registry if m.kind == "retained"]
+    # derived: plans, CC labels, trade edges, PQ models; retained:
+    # durable plans, table scans, the staged csv
+    assert sum(map(bool, derived)) >= 4 and sum(map(bool, retained)) >= 3
+    before = [dict(m) for m in retained]
+    plan_cache.clear_materializations(spark)
+    assert not [m for m in derived if m]
+    for m, snap in zip(retained, before):
+        assert m.keys() == snap.keys()
+        assert all(m[k] is v for k, v in snap.items())
 
 
 def test_durable_builders_are_eligible():

@@ -105,10 +105,12 @@ def _clear_engine_memos() -> None:
     """Forget the engine's session-keyed materialization memos (CC
     labels, pinned range partitionings, trade edges): the growth claim
     is about the COLD dataflow, and a memo hit is corpus-size-
-    insensitive just like a cache hit.  The actual clear list lives in
-    ``plan_cache.clear_materializations`` — ONE inventory shared with
-    bench.py's recompute-warm column, so a new memo added to the
-    engine cannot silently stay warm in just one of the harnesses."""
+    insensitive just like a cache hit.  ``clear_materializations``
+    releases and empties every ``"derived"`` memo in the
+    ``plan_cache`` registry — ONE inventory shared with bench.py's
+    recompute-warm column: an engine memo is created through
+    ``session_memo``, so it cannot silently stay warm in just one of
+    the harnesses."""
     from iceberg_kafka_playgroud_spark import plan_cache as _pc
 
     _pc.clear_materializations()

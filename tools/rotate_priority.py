@@ -33,6 +33,9 @@ sys.path.insert(0, str(ROOT))
 # not exist yet, or the staleness ordering would double-credit it).
 ROUND = 18
 
+# the driver's correctness window: the first WINDOW _PRIORITY entries
+WINDOW = 50
+
 # EDIT EACH ROUND: this round's dirty set, most-critical first.
 # r18: transitive consumers of this round's optimization commits
 # (AST call-graph trace from the registry to the changed functions:
@@ -68,6 +71,13 @@ DIRTY = [
 
 
 def main() -> None:
+    # every dirty name must land inside the checked window, or the
+    # rotation silently stops covering the names it exists for
+    if len(DIRTY) > WINDOW:
+        raise SystemExit(
+            f"DIRTY ({len(DIRTY)}) exceeds the {WINDOW}-entry "
+            "correctness window: split this round's dirty set"
+        )
     entry_path = ROOT / "__spark_entry__.py"
     src = entry_path.read_text()
     head, rest = src.split("_PRIORITY = [", 1)
@@ -124,13 +134,13 @@ def main() -> None:
     entry_path.write_text(
         head + "_PRIORITY = [\n" + "\n".join(lines) + "\n]" + tail
     )
-    window = out[:50]
+    window = out[:WINDOW]
     stale_after = sorted(
-        {last.get(n, 0) for n in out[50:] if n not in DIRTY}
+        {last.get(n, 0) for n in out[WINDOW:] if n not in DIRTY}
     )
-    print(f"window-50 head: {window[:8]} ...")
+    print(f"window-{WINDOW} head: {window[:8]} ...")
     print(f"rounds represented in post-window tail: {stale_after}")
-    n_old = sum(1 for n in out[50:] if last.get(n, 0) < 8)
+    n_old = sum(1 for n in out[WINDOW:] if last.get(n, 0) < 8)
     print(f"tail rows still pre-r8 after this window drains: {n_old}")
 
 
