@@ -130,28 +130,18 @@ def main() -> None:
     #   recompute-warm  best of N runs, each preceded by
     #                   plan_cache.clear_materializations(spark):
     #                   operator memos, released checkpoints, trained
-    #                   models, the block cache, and SINGLE-tier
-    #                   prepared plans are all dropped; DURABLE-tier
-    #                   prepared plans (r15, plan_cache.py — pure lazy
-    #                   trees whose cache markers are re-armed empty)
-    #                   are RETAINED, so reps skip only the py4j plan
-    #                   rebuild (0.2-0.9 s driver cost) while every
-    #                   timed run still re-executes the FULL
-    #                   distributed dataflow with a hot JVM.  This is
-    #                   the HEADLINE ratio.  DATA work is
-    #                   apples-to-apples against DuckDB (which
-    #                   recomputes every run); PLAN work is not quite —
-    #                   DuckDB re-plans each rep, while the
-    #                   durable-tier queries serve a prepared plan
-    #                   (the prepared-statement role; DuckDB's own
-    #                   planner cost on these is ~ms, so the asymmetry
-    #                   flatters Spark by the plan-build delta on
-    #                   those rows only — the summary's
-    #                   "durable_plans" count makes it visible).
+    #                   models, the block cache and every prepared plan
+    #                   are dropped, so every timed run rebuilds its
+    #                   plan and re-executes the FULL distributed
+    #                   dataflow with a hot JVM.  This is the HEADLINE
+    #                   ratio, and it is apples-to-apples against
+    #                   DuckDB, which re-plans and recomputes every run
+    #                   (only plan-shaping statistics such as the
+    #                   MinHash candidate count are kept, as a planner
+    #                   keeps table stats).
     #   cache-warm      best of N runs with memos/caches left warm —
     #                   the prepared-plan + cached-intermediate
     #                   steady state a resident engine serves.
-    from iceberg_kafka_playgroud_spark import plan_cache as _pc
     from iceberg_kafka_playgroud_spark.plan_cache import (
         clear_materializations,
     )
@@ -203,13 +193,6 @@ def main() -> None:
 
     jobs_recompute_all: dict[str, list[int]] = {}
     jobs_cold: dict[str, int] = {}
-    # durable-tier prepared plans retained across recompute reps (r15
-    # verdict task 4).  Counted as the UNION of builder qualnames seen
-    # in the tier after each query's recompute loop — each query's
-    # cold reset drops the whole tier (drop_prepared_plans=True), so a
-    # single end-of-section len() would only see the last query's
-    # plans.
-    durable_seen: set[str] = set()
     probe_start = _calibration_probe()
     for name in names:
 
@@ -229,10 +212,7 @@ def main() -> None:
                 jobs_sink.append(_max_job_id() - j0)
             return dt
 
-        # cold pays plan construction too: drop BOTH prepared-plan
-        # tiers (recompute reps below keep the durable tier — the
-        # analyzed-tree retention is exactly what it exists for)
-        clear_materializations(spark, drop_prepared_plans=True)
+        clear_materializations(spark)
         cold_jobs_sink: list[int] = []
         cold[name] = round(timed_run(jobs_sink=cold_jobs_sink), 3)
         jobs_cold[name] = cold_jobs_sink[0]
@@ -248,14 +228,12 @@ def main() -> None:
                 ),
             )
         recompute[name] = round(best, 3)
-        durable_seen.update(k[2] for k in _pc._DURABLE_PLAN_CACHE)
         best = float("inf")
         runs_cache_warm_all[name] = []
         for _ in range(runs_warm):
             best = min(best, timed_run(runs_cache_warm_all[name]))
         timings[name] = round(best, 3)
     probe_mid = _calibration_probe()
-    durable_plans = len(durable_seen)
 
     # streaming lifecycle floor (r11 verdict #4): time stream_
     # sessionize's machinery over ZERO rows so the detail JSON
@@ -349,10 +327,6 @@ def main() -> None:
         # (check the calibration probes), not a plan change.
         "queries_jobs_recompute": jobs_recompute_all,
         "queries_jobs_cold": jobs_cold,
-        # durable-tier prepared plans (plan_cache.durable_plan_memo)
-        # retained across recompute reps — the plan-work asymmetry vs
-        # the DuckDB comparator, quantified (cold runs drop them)
-        "durable_plans": durable_plans,
         # fixed 10M-row sum, 3 reps at bench start / after the Spark
         # section / after DuckDB: the host-health reading the noise
         # adjudication keys on (scale-independent, ~0.05-0.3 s on a
@@ -424,10 +398,6 @@ def main() -> None:
         # raw per-checkpoint minima (start/mid/end), kept for
         # continuity with pre-r17 summary lines
         "probe": [min(probe_start), min(probe_mid), min(probe_end)],
-        # durable-tier prepared plans retained during recompute reps:
-        # "recompute_warm" = full data re-execution per rep, but these
-        # N builders keep their analyzed py4j tree (see plan_cache.py)
-        "durable_plans": durable_plans,
         "sf": sf,
     }
     if duckdb_timings:

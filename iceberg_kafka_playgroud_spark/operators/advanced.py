@@ -4574,10 +4574,14 @@ def graph_kcore_peel(spark: SparkSession, sf: str) -> DataFrame:
     peel", which equals the true k-core whenever the peeling cascade is
     shorter than R (pinned on the fixture by an invariant test).
 
-    Scale: each round is one degree aggregate + two node-list semi
-    joins on the CURRENT edge set — all equi-joins AQE can re-balance;
-    the edge set only shrinks. The loop is lazily composed (one
-    pipelined job, the LPA lesson) since R is a small constant.
+    Scale: each round is two window counts over the CURRENT edge set,
+    keyed by pa and by pb; the edge set only shrinks. The loop is
+    lazily composed (one pipelined job, the LPA lesson) since R is a
+    small constant. Each round reads the previous edge set ONCE: the
+    directed set is symmetric, so the count of rows keyed by pb IS
+    pb's degree. A degree-aggregate + two-join round reads it three
+    times, so its plan triples per round (3^R copies of the edge scan
+    to analyze and optimize).
     """
     e = _copurchase_edges(spark, sf).select("pa", "pb")
     # both directions from one scan of the cached edge list (union
@@ -4591,14 +4595,15 @@ def graph_kcore_peel(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("ud")
     ).select("ud.pa", "ud.pb")
     for _ in range(KCORE_ROUNDS):
-        keep = (
-            alive.groupBy("pa")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= KCORE_K)
-            .select("pa")
-        )
-        alive = alive.join(keep, "pa").join(
-            keep.select(F.col("pa").alias("pb")), "pb"
+        alive = (
+            alive.select(
+                "pa",
+                "pb",
+                F.count("*").over(W.partitionBy("pa")).alias("_da"),
+                F.count("*").over(W.partitionBy("pb")).alias("_db"),
+            )
+            .where((F.col("_da") >= KCORE_K) & (F.col("_db") >= KCORE_K))
+            .select("pa", "pb")
         )
     return (
         alive.groupBy("pa")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoints import release_checkpoint_bucket, release_local_checkpoint
-from ..plan_cache import cached, durable_plan_memo, session_memo
+from ..plan_cache import cached, plan_memo, session_memo
 from ..schema import load_table, table_row_count
 from .text import normalized, tokens
 
@@ -178,12 +178,15 @@ WJ_PRUNE_CAND_DOC_PCT = 10
 
 
 # candidate pair count per (session, cand plan) — ``by_plan`` buckets.
-# The count gates broadcasts in four operators; the frame is cached
-# and deterministic within a session, so the count job runs ONCE
-# instead of once per operator call (a bare tiny-job count still
-# costs a full stage-scheduling round trip per invocation).  No
-# release: the cand frame belongs to the durable plan tier.
-_N_CAND_MEMO = session_memo("derived")
+# The count only chooses whether four operators add a broadcast hint
+# (both branches return identical rows), and the candidate set is
+# deterministic for a session's source tables, so the count is a
+# plan-shaping statistic like a footer row count: retained across
+# resets, it runs ONCE per session instead of once per rebuilt plan
+# (a bare tiny-job count still costs a full stage-scheduling round
+# trip).  No release: the cand frame's cache belongs to the plan that
+# built it.
+_N_CAND_MEMO = session_memo("retained")
 
 
 def _cand_count(cand: DataFrame) -> int:
@@ -300,7 +303,7 @@ def _minhash_candidates(spark: SparkSession, sf: str):
     return sh, cand
 
 
-@durable_plan_memo("CAND_BROADCAST_MAX_PAIRS")
+@plan_memo("CAND_BROADCAST_MAX_PAIRS")
 def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs via MinHash LSH + exact-Jaccard verification.
 
@@ -309,14 +312,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     Verification computes true Jaccard only on candidates
     (``_jaccard_on_candidates``).
 
-    DURABLE prepared plan (r14 verdict #4): this is the CC family's
-    shared pipeline, and its py4j expression-tree build measured
-    ~0.7 s per recompute rep — pure driver cost at any scale.  The
-    plan (and its plan-shaping candidate count, which gates the
-    broadcast hints) is built once per (session, sf, budget); every
-    ``cached`` intermediate (shingles, bands, candidates, the pruned
-    verify table, the result) is re-armed on warm hits so a recompute
-    rep re-executes the identical dataflow as a fresh build.
+    Prepared plan: this is the CC family's shared pipeline, built
+    once per (session, sf, budget) until the next reset; its
+    ``cached`` intermediates (shingles, bands, candidates, the result)
+    belong to that entry and are released with it.  The candidate
+    count that gates the broadcast hint is kept across resets
+    (``_N_CAND_MEMO``).
     """
     sh, cand = _minhash_candidates(spark, sf)
     # cache the RESULT frame too: the pair set is near-dup-sized
@@ -564,7 +565,7 @@ def dedup_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@durable_plan_memo()
+@plan_memo()
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash Hamming-0 bucket sizes: doc_id, signature, and how many
     docs share it exactly (near-dup group size). The signature table is
@@ -605,7 +606,7 @@ SIMHASH_BANDS = K_HAMMING + 1  # pigeonhole: d(x,y) ≤ k ⇒ ≥1 band equal
 SIMHASH_BITS = 128
 
 
-@durable_plan_memo("K_HAMMING", "SIMHASH_BANDS", "SIMHASH_BITS")
+@plan_memo("K_HAMMING", "SIMHASH_BANDS", "SIMHASH_BITS")
 def dedup_simhash_hamming(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs at Hamming distance ≤ 3 via banded 128-bit SimHash.
 
@@ -877,7 +878,7 @@ def _converged_labels(pairs: DataFrame) -> DataFrame:
     return prev_ckpt
 
 
-# no release for the keying pairs frame: the durable plan tier owns it
+# no release for the keying pairs frame: its prepared plan owns it
 _CC_MEMO = session_memo("derived", release=release_checkpoint_bucket)
 
 
@@ -1569,7 +1570,7 @@ FROM sizes GROUP BY band_idx ORDER BY band_idx
 """
 
 
-@durable_plan_memo("CAND_BROADCAST_MAX_PAIRS", "CAND_SHINGLE_BROADCAST_MAX_PAIRS")
+@plan_memo("CAND_BROADCAST_MAX_PAIRS", "CAND_SHINGLE_BROADCAST_MAX_PAIRS")
 def dedup_minhash_calibration(spark: SparkSession, sf: str) -> DataFrame:
     """Signature-calibration audit: how well does MinHash agreement
     predict exact Jaccard? For every banded candidate pair, count the
@@ -1622,8 +1623,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf: str) -> DataFrame:
     )
     # candidate-doc-sized (~1k rows); cached so the g1/g2 broadcast
     # builds don't each re-run the groupBy, and repeat calls hit the
-    # cache-manager entry like `cand` above (re-armable for the
-    # durable plan)
+    # cache-manager entry like `cand` above
     docdata = cached(docdata)
     i_ = F.size(F.array_intersect(F.col("g1.shs"), F.col("g2.shs"))).cast(
         "long"
@@ -2022,7 +2022,7 @@ ORDER BY n_stitch_pairs DESC, t.gram LIMIT {STITCH_TOP}
 # -- IDF-weighted Jaccard scoring -------------------------------------
 
 
-@durable_plan_memo(
+@plan_memo(
     "WJ_PRUNE_CAND_DOC_PCT",
     "CAND_BROADCAST_MAX_PAIRS",
     "CAND_SHINGLE_BROADCAST_MAX_PAIRS",

@@ -62,7 +62,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint
-from ..plan_cache import plan_memo, session_memo, unpersist_frames
+from ..plan_cache import cached, plan_memo, session_memo, unpersist_frames
 from ..schema import load_table, table_row_count
 from ..tmpdirs import tmpdir_reclaimed_at_exit
 
@@ -2925,11 +2925,10 @@ def embedding_dbscan_core(spark: SparkSession, sf: str) -> DataFrame:
     # and every broadcast build over an uncached deg re-scans the
     # pair cache in its own job (measured: 12 of dbscan's 16 warm
     # jobs were exactly these rescans)
-    deg = (
+    deg = cached(
         nbrs.groupBy("v")
         .agg(F.count("*").cast("long").alias("degree"))
         .coalesce(4)
-        .cache()
     )
     core = deg.where(F.col("degree") >= DBSCAN_MIN_NEIGHBORS).select("v")
     border = (

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plan_cache import cached, durable_plan_memo
+from ..plan_cache import cached, plan_memo
 from ..schema import load_table
 
 # minimal English function-word list for the stopword heuristics
@@ -1247,11 +1247,11 @@ BOILER_N = 3  # n-gram width of the boilerplate unit
 BOILER_MIN_DF = 5  # grams in >= this many docs are boilerplate
 
 # The per-doc gram frame is corpus-sized, so ownership is explicit:
-# the durable plan tier (plan_cache.durable_plan_memo) holds ONE
-# prepared plan per (session, sf, gates) whose cached() marker on the
-# gram frame is re-armed on warm hits — see the docstring's "Plan at
-# 100 TB" paragraph for the full policy.
-@durable_plan_memo("BOILER_N", "BOILER_MIN_DF")
+# plan_cache.plan_memo holds ONE prepared plan per (session, sf,
+# gates), and its entry owns the cached() gram frame until the next
+# reset releases both — see the docstring's "Plan at 100 TB"
+# paragraph for the full policy.
+@plan_memo("BOILER_N", "BOILER_MIN_DF")
 def text_boilerplate_coverage(spark: SparkSession, sf: str) -> DataFrame:
     """Boilerplate-coverage audit: trigrams appearing in >=
     BOILER_MIN_DF distinct documents are "boilerplate" (the
@@ -1264,14 +1264,12 @@ def text_boilerplate_coverage(spark: SparkSession, sf: str) -> DataFrame:
 
     Plan at 100 TB: tokenize runs ONCE — a compact one-row-per-doc
     frame (doc_id, source, dl, grams-with-positions array) is
-    cached (memory-and-disk, spill-safe) inside the DURABLE prepared
-    plan (r15; previously a bespoke per-(session, sf) memo), so repeat
-    invocations share ONE session-lifetime entry by construction — an
-    intentional, bounded cache with explicit ownership, not a per-call
-    leak (the r9-verdict follow-up; pinned by
+    cached (memory-and-disk, spill-safe) inside the prepared plan, so
+    repeat invocations share ONE entry until the next reset by
+    construction — an intentional, bounded cache with explicit
+    ownership, not a per-call leak (the r9-verdict follow-up; pinned by
     tests/test_plans.py::test_boilerplate_docs_single_cache_entry).
-    Document
-    frequency explodes the PER-DOC-DISTINCT grams, so the shuffle is a
+    Document frequency explodes the PER-DOC-DISTINCT grams, so the shuffle is a
     plain map-side-combined count keyed by gram — no (gram, doc_id)
     distinct pass. The boilerplate set joins back as a gram-keyed
     equi-join (never broadcast-forced — the high-df vocabulary can be

@@ -1,6 +1,6 @@
 """Session-memo registry, and the prepared-plan layer built on it.
 
-Every engine memo (both plan tiers below, each module's ``_*_MEMO``)
+Every engine memo (the plan cache below, each module's ``_*_MEMO``)
 is a ``session_memo(kind, release)``; resets and dead-session sweeps
 loop over the registry, so this module imports no operator.
 
@@ -22,28 +22,22 @@ FIRST call per (session, sf, gate-constants) builds the plan; later
 calls return the same DataFrame object.  Two distinct things are
 saved on warm calls: (a) the py4j plan build is skipped for every
 wrapped operator, and (b) where the builder itself owns a
-``cache()``/``localCheckpoint()`` of a shared intermediate (MinHash
-signatures, the oriented edge list, the near-dup pair graph), warm
-actions read those materialized intermediates instead of recomputing
-them — that is answer-fragment caching, not just plan caching, and
-it is why bench reports a separate RECOMPUTE-warm column that calls
-``clear_materializations(spark)`` between timed reps (block cache,
-memos, and single-tier plans all dropped; durable-tier plans are
-retained BY DESIGN — their re-armed caches repopulate from a full
-re-execution — while cold runs add ``drop_prepared_plans=True`` to
-pay plan construction too; the growth batteries use the same reset).
+``cached()`` intermediate (MinHash signatures, the candidate pairs,
+the near-dup pair graph), warm actions read those materialized
+intermediates instead of recomputing them — that is answer-fragment
+caching, not just plan caching, and it is why bench reports a
+separate RECOMPUTE-warm column that calls
+``clear_materializations(spark)`` between timed reps: the block
+cache, every derived memo and every prepared plan are dropped, so a
+rep rebuilds its plan and re-executes the full dataflow, the same
+work DuckDB pays per run (the growth batteries use the same reset).
 At 100 TB the saved plan-build work is the same fixed driver cost
 (plan building does not scale with data); the cached intermediates
 are doc-count-sized tables any production system would persist.
 
-Two tiers (r15): ``plan_memo`` entries are dropped by
-``clear_materializations`` (their plans may reference cleared
-memos/checkpoints); ``durable_plan_memo`` entries survive it — pure
-lazy trees whose only materialization points are ``cached()``
-markers, re-armed on warm hits so recompute reps skip ONLY the py4j
-tree build, never any data work (contract pinned by
-``test_durable_plan_memo_contract`` and the eligibility tripwire in
-``test_properties.py``).
+A plan's ``cached()`` intermediates are owned by its entry: dropping
+the entry — with or without a session — unpersists them, and a build
+that raises unpersists the ones it registered before failing.
 
 Rules for wrapping an operator:
 
@@ -58,11 +52,14 @@ Rules for wrapping an operator:
    includes the named globals read at call time, so a test that
    monkeypatches a broadcast budget or prune gate gets a fresh build
    (and the patched plan), never a stale hit.
+3. CACHE INTERMEDIATES WITH ``cached()``, never a bare ``.cache()``,
+   so the entry can release them.
 """
 
 from __future__ import annotations
 
 import functools
+import threading
 from typing import Callable
 
 from pyspark import SparkContext
@@ -72,10 +69,8 @@ __all__ = [
     "session_memo",
     "unpersist_frames",
     "plan_memo",
-    "durable_plan_memo",
     "cached",
     "evict_dead_sessions",
-    "clear",
     "clear_materializations",
 ]
 
@@ -86,9 +81,9 @@ class SessionMemo(dict):
     index, pair graphs, edges, labels, checkpoints) are released and
     emptied by ``clear_materializations``; ``"retained"`` ones (lazy
     scan handles, staged artifacts whose re-write would leak a copy
-    per rep, durable plans) survive it.  ``release(value)`` frees what
-    one entry holds.  The first write after a session change sweeps
-    every registered memo of the stopped sessions' entries."""
+    per rep, candidate counts) survive it.  ``release(value)`` frees
+    what one entry holds.  The first write after a session change
+    sweeps every registered memo of the stopped sessions' entries."""
 
     _swept_for: SparkContext | None = None
 
@@ -150,65 +145,28 @@ def unpersist_frames(value) -> None:
             v.unpersist()
 
 
-# (applicationId, sf, qualname, gate-values...) → DataFrame
-_PLAN_CACHE = session_memo("derived")
-
-# second tier (r14 verdict #4): prepared plans that SURVIVE
-# ``clear_materializations`` — the recompute-warm reset.  Eligible
-# builders are pure lazy trees over source parquet whose ONLY
-# materialization points are ``cache()`` markers on intermediates,
-# registered via ``cached()`` so a warm hit can re-arm them after
-# ``spark.catalog.clearCache()`` dropped their registrations.  This
-# stays recompute-honest: retaining the DataFrame object retains the
-# ANALYZED EXPRESSION TREE only (0.2-0.9 s of py4j round trips to
-# rebuild — a fixed driver cost, the prepared-statement role); no
-# result blocks survive the reset, so the next action re-executes the
-# full distributed dataflow and re-populates the re-armed caches from
-# scratch.  Builders embedding a localCheckpoint or any other eager
-# materialization are NOT eligible (a retained plan over released
-# checkpoint blocks is both dishonest and broken).  ``clear()`` (the
-# full reset used by cold-path measurements) drops this tier too.
-# value: (DataFrame, cache handles in build = dependency order)
-_DURABLE_PLAN_CACHE = session_memo(
-    "retained", release=lambda entry: unpersist_frames(entry[1])
+# (applicationId, sf, qualname, gate-values...) →
+# (DataFrame, cache handles its build registered via ``cached()``)
+_PLAN_CACHE = session_memo(
+    "derived", release=lambda entry: unpersist_frames(entry[1])
 )
 
-# collector active during a durable build (nesting-safe via
-# save/restore in the decorator; thread-local so a concurrent build —
-# e.g. a streaming micro-batch thread calling a helper that uses
-# cached() — can never attribute handles to another thread's entry)
-import threading as _threading
-
-_TLS = _threading.local()
-
-# every durable_plan_memo-decorated builder, for the eligibility
-# tripwire test (no localCheckpoint / collect / sink in their source)
-_DURABLE_BUILDERS: list[Callable] = []
+# collector active during a plan build (nesting-safe via save/restore
+# in the decorator; thread-local so a concurrent build — e.g. a
+# streaming micro-batch thread calling a helper that uses cached() —
+# can never attribute handles to another thread's entry)
+_TLS = threading.local()
 
 
 def cached(df: DataFrame) -> DataFrame:
     """``df.cache()`` that also registers the handle with an enclosing
-    ``durable_plan_memo`` build for re-arming (plain cache otherwise).
-    """
+    ``plan_memo`` build, whose entry then owns it (plain cache
+    otherwise)."""
     df = df.cache()
     collect = getattr(_TLS, "collect", None)
     if collect is not None:
         collect.append(df)
     return df
-
-
-def _fresh_view(df: DataFrame) -> DataFrame:
-    """A new Dataset (hence a new JVM QueryExecution) over the same
-    analyzed tree.  A Dataset freezes its execution plan on first
-    action — cache substitutions and the scan's file-listing snapshot
-    included — so handing the RETAINED object to a caller would let a
-    direct re-collect serve that frozen plan after a reset instead of
-    re-resolving against the CURRENT cache registrations (measured:
-    stale result on a mutated source; pinned by
-    ``test_durable_plan_not_frozen_across_reset``).  One py4j call +
-    a JVM-side re-analysis per hand-out — negligible next to the
-    hundreds of py4j round trips the retained tree saves."""
-    return df.select("*")
 
 
 def evict_dead_sessions(memo: dict | None = None) -> int:
@@ -234,27 +192,17 @@ def evict_dead_sessions(memo: dict | None = None) -> int:
     return n
 
 
-def clear() -> None:
-    """Drop every prepared plan, BOTH tiers (cold-path measurements
-    use this so they cannot hit a warm plan)."""
-    evict_dead_sessions()
-    _PLAN_CACHE.drop()
-    _DURABLE_PLAN_CACHE.drop()
-
-
-def clear_materializations(
-    spark: SparkSession | None = None, drop_prepared_plans: bool = False
-) -> None:
-    """Release and empty every ``"derived"`` registry memo and — when a
-    session is passed — drop the whole Spark block cache.
+def clear_materializations(spark: SparkSession | None = None) -> None:
+    """Release and empty every ``"derived"`` registry memo — prepared
+    plans included — and, when a session is passed, drop the whole
+    Spark block cache.
 
     This is the shared cold-path reset used by BOTH the growth
-    batteries and bench.py's RECOMPUTE-warm column: after calling it,
-    the next action on any operator re-executes the full distributed
-    dataflow (a memo or cache hit is corpus-size-insensitive, so any
-    measurement claiming to scale must start from here).
-    ``drop_prepared_plans=True`` also drops the durable plan tier, for
-    cold-path measurements that must pay plan construction.
+    batteries and bench.py's cold and RECOMPUTE-warm columns: after
+    calling it, the next call of any operator rebuilds its plan and
+    the next action re-executes the full distributed dataflow (a memo
+    or cache hit is corpus-size-insensitive, so any measurement
+    claiming to scale must start from here).
     """
     if spark is not None:
         spark.catalog.clearCache()
@@ -262,24 +210,6 @@ def clear_materializations(
     for memo in _REGISTRY:
         if memo.kind == "derived":
             memo.drop()
-    if drop_prepared_plans:
-        clear()
-
-
-def _memo_key(
-    fn: Callable, gate_names: tuple, spark: SparkSession, sf: str
-) -> tuple:
-    """ONE key recipe for both plan-cache tiers: (applicationId, sf,
-    qualname, gate values looked up in the builder's module at CALL
-    time).  Kept single-sourced so a schema change can never split
-    the tiers' keyspaces."""
-    gates = tuple(fn.__globals__[g] for g in gate_names)
-    return (
-        spark.sparkContext.applicationId,
-        sf.rstrip("/"),
-        fn.__qualname__,
-        gates,
-    )
 
 
 def plan_memo(*gate_names: str) -> Callable:
@@ -288,79 +218,37 @@ def plan_memo(*gate_names: str) -> Callable:
     ``gate_names`` are module-global constants (looked up in the
     function's own module at CALL time) that alter the built plan —
     broadcast budgets, prune gates, iteration counts.  Their current
-    values are part of the memo key.
+    values are part of the memo key.  The ``cached()`` handles the
+    build registers are stored with the plan and unpersisted when the
+    entry is dropped, or at once when the build raises.
     """
 
     def deco(fn: Callable) -> Callable:
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-            key = _memo_key(fn, gate_names, spark, sf)
+            key = (
+                spark.sparkContext.applicationId,
+                sf.rstrip("/"),
+                fn.__qualname__,
+                tuple(fn.__globals__[g] for g in gate_names),
+            )
             hit = _PLAN_CACHE.get(key)
             if hit is not None:
-                return hit
-            df = fn(spark, sf)
-            _PLAN_CACHE[key] = df
-            return df
-
-        wrapped.__wrapped__ = fn
-        return wrapped
-
-    return deco
-
-
-def durable_plan_memo(*gate_names: str) -> Callable:
-    """``plan_memo`` whose prepared plan survives
-    ``clear_materializations`` (see ``_DURABLE_PLAN_CACHE``).
-
-    Eligibility is STRICTER than ``plan_memo``: the builder must be a
-    pure lazy tree over source parquet whose only materialization
-    points are ``cached()`` markers (never ``localCheckpoint`` /
-    ``createDataFrame`` of computed rows / sink writes).  Eager
-    plan-SHAPING statistics (e.g. a candidate count that gates a
-    broadcast hint) are permitted and run once per (session, sf,
-    gates) — that is query-planner work a production engine reads
-    from table stats, not answer computation.
-
-    On a warm hit after ``spark.catalog.clearCache()``, every
-    registered cache handle whose registration was dropped is
-    re-armed in build (= dependency) order, so within-rep cache reuse
-    matches a fresh build while the next action still re-executes the
-    full dataflow to populate them.
-    """
-
-    def deco(fn: Callable) -> Callable:
-        _DURABLE_BUILDERS.append(fn)
-
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-            key = _memo_key(fn, gate_names, spark, sf)
-            hit = _DURABLE_PLAN_CACHE.get(key)
-            if hit is not None:
-                df, handles = hit
-                for h in handles:
-                    lvl = h.storageLevel
-                    if not (lvl.useMemory or lvl.useDisk):
-                        h.cache()
-                return _fresh_view(df)
+                return hit[0]
             prev = getattr(_TLS, "collect", None)
             _TLS.collect = []
             try:
                 df = fn(spark, sf)
                 handles = tuple(_TLS.collect)
             except BaseException:
-                # a builder raising mid-build would otherwise orphan
-                # the cache registrations it made before failing (the
-                # entry is never stored, so nothing would ever re-arm
-                # or drop them)
+                # the entry is never stored, so nothing would ever
+                # release what the build cached before failing
                 unpersist_frames(_TLS.collect)
                 raise
             finally:
                 _TLS.collect = prev
-            _DURABLE_PLAN_CACHE[key] = (df, handles)
-            # the build call hands out a fresh view too, so every
-            # consumer sees the identical plan shape (semanticHash-
-            # keyed memos stay consistent across build and hit calls)
-            return _fresh_view(df)
+            _PLAN_CACHE[key] = (df, handles)
+            return df
 
         wrapped.__wrapped__ = fn
         return wrapped

@@ -858,7 +858,7 @@ def test_plan_memo_contract(spark, sf_dir):
         assert [r["x"] for r in a.collect()] == [0, 7, 14]
     finally:
         SOME_GATE = old
-    plan_cache.clear()
+    plan_cache.clear_materializations(spark)
     d = build(spark, sf_dir)
     assert d is not a and calls["n"] == 3
 
@@ -900,15 +900,17 @@ def test_memo_eviction_drops_dead_sessions(spark, sf_dir):
 
 
 def test_reset_without_session_unpersists_memo_frames(spark, sf_dir):
-    """``clear_materializations()`` without a session (the growth
-    batteries' call) still unpersists the cached frames memos hold."""
+    """``clear_materializations()`` without a session still unpersists
+    the cached frames memos and prepared plans hold."""
     from iceberg_kafka_playgroud_spark import plan_cache
-    from iceberg_kafka_playgroud_spark.operators import similarity
+    from iceberg_kafka_playgroud_spark.operators import dedup, similarity
 
     plan_cache.clear_materializations(spark)
     base = _n_persistent_rdds(spark)
     similarity.embedding_near_dup_pairs(spark, sf_dir).collect()
     similarity.ann_pq_adc_topk(spark, sf_dir).collect()
+    similarity.embedding_dbscan_core(spark, sf_dir).collect()
+    dedup.dedup_connected_components(spark, sf_dir).collect()
     assert _n_persistent_rdds(spark) > base
     plan_cache.clear_materializations()
     assert _n_persistent_rdds(spark) == base
@@ -934,8 +936,8 @@ def test_reset_removes_ivf_index_dir(spark, sf_dir, tmp_path, monkeypatch):
 
 def test_boilerplate_docs_single_cache_entry(spark, sf_dir):
     """The corpus-sized boilerplate gram frame must stay ONE bounded
-    resident entry across repeat calls (r9 follow-up; since r15 the
-    ownership is the durable prepared plan, not a bespoke memo)."""
+    resident entry across repeat calls (r9 follow-up; the owner is
+    the prepared plan, not a bespoke memo)."""
     from iceberg_kafka_playgroud_spark import plan_cache
     from iceberg_kafka_playgroud_spark.operators import text
 
@@ -946,7 +948,7 @@ def test_boilerplate_docs_single_cache_entry(spark, sf_dir):
     assert _n_persistent_rdds(spark) == base
     entries = [
         k
-        for k in plan_cache._DURABLE_PLAN_CACHE
+        for k in plan_cache._PLAN_CACHE
         if "text_boilerplate_coverage" in k[2]
         and k[1] == sf_dir.rstrip("/")
     ]
@@ -1153,96 +1155,10 @@ def test_scoped_advisory_restored_after_edge_builds(spark, sf_dir):
     assert spark.conf.get(key) == before
 
 
-DUR_GATE = 3
-
-
-def test_durable_plan_memo_contract(spark, sf_dir):
-    """durable_plan_memo (r15): the prepared plan survives
-    clear_materializations (same object, no rebuild) yet every
-    materialized block is gone after the reset — a warm hit must
-    RECOMPUTE; gate changes key fresh builds; drop_prepared_plans=True
-    and clear() both drop the durable tier (cold paths pay plan
-    construction)."""
-    from pyspark.sql import functions as F
-
-    from iceberg_kafka_playgroud_spark import plan_cache
-
-    calls = {"n": 0}
-
-    @plan_cache.durable_plan_memo("DUR_GATE")
-    def build(sp, sf):
-        calls["n"] += 1
-        base = plan_cache.cached(
-            sp.range(5).select((F.col("id") * DUR_GATE).alias("x"))
-        )
-        return base.select(F.sum("x").alias("s"))
-
-    a = build(spark, sf_dir)
-    assert a.collect()[0]["s"] == 30  # populates the cache
-    plan_cache.clear_materializations(spark)
-    b = build(spark, sf_dir)
-    # analyzed tree retained (no rebuild), but handed out as a FRESH
-    # Dataset so no frozen execution plan can serve a stale answer
-    assert calls["n"] == 1 and b is not a and b.sameSemantics(a)
-    # nothing materialized survived the reset: the hit recomputes
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    assert all(i.memSize() == 0 and i.diskSize() == 0 for i in infos)
-    assert b.collect()[0]["s"] == 30
-    # a changed gate constant keys a separate durable build
-    global DUR_GATE
-    old = DUR_GATE
-    try:
-        DUR_GATE = 4
-        c = build(spark, sf_dir)
-        assert c is not a and calls["n"] == 2
-        assert c.collect()[0]["s"] == 40
-    finally:
-        DUR_GATE = old
-    # cold resets drop the durable tier too
-    plan_cache.clear_materializations(spark, drop_prepared_plans=True)
-    d = build(spark, sf_dir)
-    assert d is not a and calls["n"] == 3
-    plan_cache.clear()
-    e = build(spark, sf_dir)
-    assert e is not d and calls["n"] == 4
-
-
-def test_minhash_lsh_durable_plan_recomputes(spark, sf_dir):
-    """The CC family's shared pipeline keeps its prepared plan across
-    the recompute reset: same DataFrame object back, every registered
-    cache handle re-armed (registered, blocks not yet populated), and
-    the re-collected result hash-identical to the fresh build."""
-    from iceberg_kafka_playgroud_spark import plan_cache
-    from iceberg_kafka_playgroud_spark.operators import dedup
-
-    plan_cache.clear_materializations(spark, drop_prepared_plans=True)
-    a = dedup.dedup_minhash_lsh(spark, sf_dir)
-    base = sorted(map(tuple, a.collect()))
-    plan_cache.clear_materializations(spark)
-    b = dedup.dedup_minhash_lsh(spark, sf_dir)
-    assert b is not a and b.sameSemantics(a)  # retained tree, fresh view
-    key = next(
-        k
-        for k in plan_cache._DURABLE_PLAN_CACHE
-        if "dedup_minhash_lsh" in k[2]
-    )
-    _, handles = plan_cache._DURABLE_PLAN_CACHE[key]
-    # shingles, bands, candidates, result (r18: the pruned verify
-    # table's cache fell away with the membership-broadcast verify
-    # shape — the single aggregation has no fan-out to feed)
-    assert len(handles) == 4
-    assert all(h.storageLevel.useMemory for h in handles)
-    assert sorted(map(tuple, b.collect())) == base
-
-
 def test_durable_plan_not_frozen_across_reset(spark, tmp_path):
-    """Regression pin (r15 review finding): a Dataset freezes its
-    execution plan — file-listing snapshot included — on first action,
-    so the durable tier must hand out a FRESH view per call.  With the
-    retained object returned directly, this scenario served the OLD
-    data after the reset (measured): build over a parquet source,
-    act, overwrite the source, reset, call again — the result must
-    reflect the new data."""
+    """A reset drops the prepared plan, so a call after the source
+    was overwritten must rebuild over the NEW data (a retained
+    Dataset would serve its frozen file listing)."""
     from pyspark.sql import functions as F
 
     from iceberg_kafka_playgroud_spark import plan_cache
@@ -1250,7 +1166,7 @@ def test_durable_plan_not_frozen_across_reset(spark, tmp_path):
     src = str(tmp_path / "src")
     spark.range(10).write.mode("overwrite").parquet(src)
 
-    @plan_cache.durable_plan_memo()
+    @plan_cache.plan_memo()
     def build(sp, sf):
         base = plan_cache.cached(
             sp.read.parquet(src).select(F.col("id").alias("x"))
@@ -1263,49 +1179,37 @@ def test_durable_plan_not_frozen_across_reset(spark, tmp_path):
     assert build(spark, "sf-frozen-test").collect()[0]["s"] == 4950
 
 
-def test_durable_drop_unpersists_handles(spark, sf_dir):
-    """Regression pin (r15 ADVICE): dropping a durable entry — via
-    clear() or clear_materializations(drop_prepared_plans=True) —
-    must unpersist its registered cache handles, not just forget the
-    Python references; otherwise the cache-manager registrations (and
-    any populated blocks) are orphaned until someone happens to call
-    spark.catalog.clearCache()."""
+def test_durable_drop_unpersists_handles(spark):
+    """Dropping a plan entry must unpersist the cache handles its
+    build registered, not just forget the Python references —
+    checked on a reset WITHOUT a session, so ``clearCache()`` is not
+    what frees them."""
     from pyspark.sql import functions as F
 
     from iceberg_kafka_playgroud_spark import plan_cache
 
-    @plan_cache.durable_plan_memo()
+    @plan_cache.plan_memo()
     def build(sp, sf):
         base = plan_cache.cached(
             sp.range(7).select((F.col("id") + 1).alias("x"))
         )
         return base.select(F.sum("x").alias("s"))
 
-    for drop in ("clear", "drop_prepared_plans"):
-        assert build(spark, f"sf-unpersist-{drop}").collect()[0]["s"] == 28
-        key = next(
-            k
-            for k in plan_cache._DURABLE_PLAN_CACHE
-            if k[1] == f"sf-unpersist-{drop}"
-        )
-        _, handles = plan_cache._DURABLE_PLAN_CACHE[key]
-        assert handles and all(h.storageLevel.useMemory for h in handles)
-        if drop == "clear":
-            plan_cache.clear()
-        else:
-            # NO spark arg: clearCache() must not be what frees them
-            plan_cache.clear_materializations(drop_prepared_plans=True)
-        assert key not in plan_cache._DURABLE_PLAN_CACHE
-        for h in handles:
-            lvl = h.storageLevel
-            assert not (lvl.useMemory or lvl.useDisk)
+    assert build(spark, "sf-unpersist").collect()[0]["s"] == 28
+    key = next(k for k in plan_cache._PLAN_CACHE if k[1] == "sf-unpersist")
+    _, handles = plan_cache._PLAN_CACHE[key]
+    assert handles and all(h.storageLevel.useMemory for h in handles)
+    plan_cache.clear_materializations()
+    assert key not in plan_cache._PLAN_CACHE
+    for h in handles:
+        lvl = h.storageLevel
+        assert not (lvl.useMemory or lvl.useDisk)
 
 
 def test_durable_build_failure_unpersists_partial_handles(spark):
-    """Regression pin (r15 ADVICE): a durable builder raising
-    mid-build must unpersist the cache handles it registered before
-    failing — the entry is never stored, so nothing would ever re-arm
-    or drop them."""
+    """A plan builder raising mid-build must unpersist the cache
+    handles it registered before failing — the entry is never stored,
+    so no reset would ever drop them."""
     from pyspark.sql import functions as F
 
     import pytest
@@ -1314,7 +1218,7 @@ def test_durable_build_failure_unpersists_partial_handles(spark):
 
     stash = []
 
-    @plan_cache.durable_plan_memo()
+    @plan_cache.plan_memo()
     def build(sp, sf):
         stash.append(
             plan_cache.cached(sp.range(3).select(F.col("id").alias("x")))
@@ -1323,15 +1227,13 @@ def test_durable_build_failure_unpersists_partial_handles(spark):
 
     with pytest.raises(RuntimeError, match="mid-build failure"):
         build(spark, "sf-failed-build")
-    assert not any(
-        k[1] == "sf-failed-build" for k in plan_cache._DURABLE_PLAN_CACHE
-    )
+    assert not any(k[1] == "sf-failed-build" for k in plan_cache._PLAN_CACHE)
     (handle,) = stash
     lvl = handle.storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
     # the collector was restored (finally, not just the except path):
-    # a later successful durable build registers its own handles
-    @plan_cache.durable_plan_memo()
+    # a later successful build registers its own handles
+    @plan_cache.plan_memo()
     def build_ok(sp, sf):
         base = plan_cache.cached(
             sp.range(4).select(F.col("id").alias("x"))
@@ -1340,7 +1242,7 @@ def test_durable_build_failure_unpersists_partial_handles(spark):
 
     assert build_ok(spark, "sf-after-failure").collect()[0]["s"] == 6
     key = next(
-        k for k in plan_cache._DURABLE_PLAN_CACHE if k[1] == "sf-after-failure"
+        k for k in plan_cache._PLAN_CACHE if k[1] == "sf-after-failure"
     )
-    _, handles = plan_cache._DURABLE_PLAN_CACHE[key]
+    _, handles = plan_cache._PLAN_CACHE[key]
     assert len(handles) == 1 and handles[0].storageLevel.useMemory

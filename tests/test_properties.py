@@ -1013,7 +1013,7 @@ def test_every_engine_memo_is_classified(spark, sf_dir):
     derived = [m for m in registry if m.kind == "derived"]
     retained = [m for m in registry if m.kind == "retained"]
     # derived: plans, CC labels, trade edges, PQ models; retained:
-    # durable plans, table scans, the staged csv
+    # candidate counts, table scans, the staged csv
     assert sum(map(bool, derived)) >= 4 and sum(map(bool, retained)) >= 3
     before = [dict(m) for m in retained]
     plan_cache.clear_materializations(spark)
@@ -1021,140 +1021,3 @@ def test_every_engine_memo_is_classified(spark, sf_dir):
     for m, snap in zip(retained, before):
         assert m.keys() == snap.keys()
         assert all(m[k] is v for k, v in snap.items())
-
-
-def test_durable_builders_are_eligible():
-    """Eligibility tripwire for the durable prepared-plan tier (r15):
-    a durable builder's plan survives clear_materializations, so
-    nothing it executes may eagerly materialize state a recompute rep
-    ought to re-pay — no localCheckpoint, no .collect(), no
-    createDataFrame of computed rows, no sink writes.  The scan is
-    TRANSITIVE (review finding, r15): starting from each registered
-    builder it follows every called function defined inside the
-    package, so an eager construct added to a shared helper
-    (_minhash_candidates, _jaccard_on_candidates, simhash_signatures*)
-    trips it too.  Documented plan-shaping exceptions — query-planner
-    statistics a production engine reads from table stats — are
-    skipped BY NAME: _cand_count (candidate count gating broadcast
-    hints) and table_row_count (footer metadata)."""
-    import ast
-    import inspect
-    import textwrap
-
-    from iceberg_kafka_playgroud_spark import plan_cache
-    # import the modules that register durable builders
-    from iceberg_kafka_playgroud_spark.operators import dedup  # noqa: F401
-    from iceberg_kafka_playgroud_spark.operators import text  # noqa: F401
-
-    assert plan_cache._DURABLE_BUILDERS, "expected registered builders"
-    forbidden = (
-        "localCheckpoint",
-        ".collect()",
-        "createDataFrame",
-        "foreachBatch",
-        "writeStream",
-        ".write.",
-        "toPandas",
-        # direct eager actions (r15 ADVICE): an eager materialization
-        # via these would be just as ineligible as .collect() —
-        # ALLOWED_STATS (_cand_count / table_row_count) carry the only
-        # sanctioned plan-shaping counts, and they are skipped by name.
-        # '.count()' is NOT in this substring list: DataFrame.count()
-        # is eager but GroupedData.count() — df.groupBy(...).count()
-        # — is a lazy transformation (r16 ADVICE false positive), so
-        # count is checked via AST on the receiver below instead.
-        ".first()",
-        ".take(",
-        ".head(",
-    )
-    ALLOWED_STATS = {"_cand_count", "table_row_count"}
-    PKG = "iceberg_kafka_playgroud_spark"
-
-    def code_only_src(fn):
-        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
-        # scan CODE only: docstrings legitimately discuss these
-        # constructs (e.g. "cache() beats localCheckpoint here")
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Constant) and isinstance(node.value, str):
-                node.value = ""
-        return ast.unparse(tree), tree
-
-    GROUPED = {"groupBy", "groupby", "rollup", "cube", "pivot"}
-
-    def eager_count_calls(tree):
-        # zero-arg .count() is the eager DataFrame action UNLESS its
-        # receiver is a direct grouping call (groupBy/rollup/cube/
-        # pivot chain), where count() is a lazy GroupedData
-        # transformation.  A count() on a bare NAME bound earlier to
-        # a grouped frame is statically indistinguishable from the
-        # eager action and stays forbidden (conservative — no durable
-        # builder writes that shape today; chain the count instead).
-        out = []
-        for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "count"
-                and not node.args
-                and not node.keywords
-            ):
-                recv = node.func.value
-                if (
-                    isinstance(recv, ast.Call)
-                    and isinstance(recv.func, ast.Attribute)
-                    and recv.func.attr in GROUPED
-                ):
-                    continue
-                out.append(ast.unparse(node))
-        return out
-
-    # self-check the discriminator on the two shapes it must split
-    assert not eager_count_calls(ast.parse("df.groupBy('k').count()"))
-    assert eager_count_calls(ast.parse("df.count()")) == ["df.count()"]
-
-    def package_callees(fn, tree):
-        out = []
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call):
-                continue
-            # bare-name call: helper(...)
-            if isinstance(node.func, ast.Name):
-                target = fn.__globals__.get(node.func.id)
-            # module-attribute call (r15 ADVICE): module.helper(...) —
-            # resolvable when the base name is a module (or any
-            # object) in the builder's globals
-            elif isinstance(node.func, ast.Attribute) and isinstance(
-                node.func.value, ast.Name
-            ):
-                base = fn.__globals__.get(node.func.value.id)
-                target = getattr(base, node.func.attr, None)
-            else:
-                continue
-            target = inspect.unwrap(target) if callable(target) else None
-            if (
-                target is not None
-                and inspect.isfunction(target)
-                and (target.__module__ or "").startswith(PKG)
-                and target.__name__ not in ALLOWED_STATS
-            ):
-                out.append(target)
-        return out
-
-    for builder in plan_cache._DURABLE_BUILDERS:
-        seen = set()
-        stack = [builder]
-        while stack:
-            fn = stack.pop()
-            if fn in seen:
-                continue
-            seen.add(fn)
-            src, tree = code_only_src(fn)
-            hits = [t for t in forbidden if t in src]
-            hits += [f"eager {c}" for c in eager_count_calls(tree)]
-            assert not hits, (
-                f"durable builder {builder.__qualname__} reaches "
-                f"{fn.__qualname__}, which contains eager "
-                f"construct(s) {hits} — not eligible for the durable "
-                "tier (see plan_cache._DURABLE_PLAN_CACHE)"
-            )
-            stack.extend(package_callees(fn, tree))

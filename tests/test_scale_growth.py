@@ -21,6 +21,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from iceberg_kafka_playgroud_spark import plan_cache
+
 PERF = os.environ.get("SPARK_GRAFT_PERF") == "1"
 pytestmark = pytest.mark.skipif(
     not PERF, reason="timing test; set SPARK_GRAFT_PERF=1 to run"
@@ -101,29 +103,13 @@ def _ops():
     }
 
 
-def _clear_engine_memos() -> None:
-    """Forget the engine's session-keyed materialization memos (CC
-    labels, pinned range partitionings, trade edges): the growth claim
-    is about the COLD dataflow, and a memo hit is corpus-size-
-    insensitive just like a cache hit.  ``clear_materializations``
-    releases and empties every ``"derived"`` memo in the
-    ``plan_cache`` registry — ONE inventory shared with bench.py's
-    recompute-warm column: an engine memo is created through
-    ``session_memo``, so it cannot silently stay warm in just one of
-    the harnesses."""
-    from iceberg_kafka_playgroud_spark import plan_cache as _pc
-
-    _pc.clear_materializations()
-
-
 def _best_of(fn, spark, sf_dir, n=2):
     best = float("inf")
     for _ in range(n):
-        # drop the plan-keyed caches (pair graphs, signature tables):
-        # the growth claim is about the COLD dataflow, and a cached
-        # re-read is corpus-size-insensitive
-        spark.catalog.clearCache()
-        _clear_engine_memos()
+        # drop the block cache, every derived memo and every prepared
+        # plan: the growth claim is about the COLD dataflow, and a memo
+        # or cache hit is corpus-size-insensitive
+        plan_cache.clear_materializations(spark)
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         best = min(best, time.perf_counter() - t0)
@@ -548,13 +534,11 @@ def test_incremental_cc_merge_beats_reclustering(spark):
         union_pairs = pairs.unionByName(new_edges)
         t_merge = t_full = float("inf")
         for _ in range(2):
-            spark.catalog.clearCache()
-            _clear_engine_memos()
+            plan_cache.clear_materializations(spark)
             t0 = time.perf_counter()
             run(dedup.incremental_components_merge(labels, new_edges))
             t_merge = min(t_merge, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-            _clear_engine_memos()
+            plan_cache.clear_materializations(spark)
             t0 = time.perf_counter()
             run(dedup.connected_components_over(union_pairs))
             t_full = min(t_full, time.perf_counter() - t0)

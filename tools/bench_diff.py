@@ -267,8 +267,6 @@ def adjudicate(old: dict, new: dict) -> tuple[list[dict], dict]:
         "probe_spark_section_new": probe_new,
         "probe_burst_reps_old": _probe_burst_reps(old),
         "probe_burst_reps_new": _probe_burst_reps(new),
-        "durable_plans_old": old.get("durable_plans"),
-        "durable_plans_new": new.get("durable_plans"),
         "verdict_counts": {},
         # rows whose job-count sets differed only by the tolerated
         # equal-minimum +1-2 tail — visible here so a recurring
