@@ -12,13 +12,12 @@ session catalog + parquet tables carry the identical surface.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sources.rate_fabric import purchase_events_batch
 from .streaming.ingest import iceberg_available
+from .tmpdirs import tmpdir_reclaimed_at_exit
 
 # table properties the reference sink configures (connector-config.json:24-26)
 REFERENCE_TBLPROPERTIES = {
@@ -50,7 +49,7 @@ def create_namespace(
     Always pins LOCATION (default: fresh temp dir) so a caller-owned
     session never materializes ./spark-warehouse in its cwd.
     """
-    loc = location or tempfile.mkdtemp(prefix=f"ns_{namespace}_")
+    loc = location or tmpdir_reclaimed_at_exit(f"ns_{namespace}_")
     spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {namespace} LOCATION '{loc}'")
 
 
@@ -99,7 +98,7 @@ def streaming_query_status(spark: SparkSession) -> DataFrame:
 def catalog_table_columns(spark: SparkSession, sf: str) -> DataFrame:
     """C3/C4 end-to-end: create namespace + canonical table, then
     DESCRIBE. Output is deterministic → exact VALUES oracle."""
-    loc = tempfile.mkdtemp(prefix="purchase_events_tbl_")
+    loc = tmpdir_reclaimed_at_exit("purchase_events_tbl_")
     fq = create_purchase_events_table(spark, "default_db", location=loc)
     return (
         describe_table(spark, fq)
@@ -123,7 +122,7 @@ def catalog_write_read_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     table, read it back through the catalog, aggregate. Deterministic
     fabric → exact oracle (computed over the same derivations)."""
     ns = "roundtrip_db"
-    loc = tempfile.mkdtemp(prefix="roundtrip_tbl_")
+    loc = tmpdir_reclaimed_at_exit("roundtrip_tbl_")
     create_namespace(spark, ns)
     spark.sql(f"DROP TABLE IF EXISTS {ns}.purchase_events")
     fq = f"{ns}.purchase_events"
@@ -164,7 +163,7 @@ def schema_evolution_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """
     from .functions.schema_compat import SchemaRegistry
 
-    out = tempfile.mkdtemp(prefix="evolve_tbl_")
+    out = tmpdir_reclaimed_at_exit("evolve_tbl_")
     base = 1_740_787_200_000
     fab = purchase_events_batch(spark, 800).select(
         "timestamp", "user_id", "action", "amount"

@@ -26,7 +26,7 @@ from ..checkpoints import memo_local_checkpoint, release_local_checkpoint
 from ..plan_cache import plan_memo, session_memo, unpersist_frames
 from ..functions.scalar import money
 from ..schema import load_table, table_row_count
-from ..session import default_parallelism
+from ..session import default_parallelism, scoped_conf
 
 
 def asof_last_purchase(spark: SparkSession, sf: str) -> DataFrame:
@@ -1315,13 +1315,9 @@ def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
     # 4.3 s -> 0.75 s for the distinct at 1 MB).  Scope ends before
     # any consumer plan is built, so no other query's coalescing is
     # touched; at 100 TB this exchange is far above any advisory.
-    advisory_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    prev = spark.conf.get(advisory_key)
-    # try starts immediately after capturing prev: plan construction
-    # (joins, cache registration) can throw, and the finally must
-    # restore the advisory in every path — not just around the count.
-    try:
-        spark.conf.set(advisory_key, str(1024 * 1024))
+    with scoped_conf(
+        spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(1024 * 1024)
+    ):
         pairs = (
             li.join(o, li.l_orderkey == o.o_orderkey)
             .select("a", "b")
@@ -1365,8 +1361,6 @@ def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
         # each of them (the MinHash race class).  The eager count is
         # the once-a-session index-build cost.
         edges.count()
-    finally:
-        spark.conf.set(advisory_key, prev)
     _TRADE_EDGES_MEMO[key] = edges
     return edges
 
@@ -1697,12 +1691,9 @@ def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
     hit = _COPURCHASE_MEMO.get(key)
     if hit is not None:
         return hit
-    advisory_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    prev = spark.conf.get(advisory_key)
-    # try starts immediately after capturing prev so the finally
-    # restores the advisory even if plan construction throws.
-    try:
-        spark.conf.set(advisory_key, str(1024 * 1024))
+    with scoped_conf(
+        spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(1024 * 1024)
+    ):
         baskets = (
             load_table(spark, sf, "lineitem")
             .groupBy(F.col("l_orderkey").alias("o"))
@@ -1779,8 +1770,6 @@ def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
             .collect()[0]
         )
         stats = (edges, int(srow["two_e"]) // 2, int(srow["n_nodes"]))
-    finally:
-        spark.conf.set(advisory_key, prev)
     _COPURCHASE_MEMO[key] = stats
     return stats
 

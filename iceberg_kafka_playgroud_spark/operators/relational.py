@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..plan_cache import session_memo
 from ..schema import load_table
+from ..session import scoped_conf
 from ..tmpdirs import tmpdir_reclaimed_at_exit
 
 
@@ -1330,7 +1331,6 @@ def join_bucketed_colocated(spark: SparkSession, sf: str) -> DataFrame:
     difference between re-shuffling 100 TB per join and zero.
     """
     import re as _re
-    import tempfile as _tf
 
     tag = _re.sub(r"\W", "_", sf.rstrip("/").rsplit("/", 1)[-1])
     sides = {
@@ -1343,7 +1343,7 @@ def join_bucketed_colocated(spark: SparkSession, sf: str) -> DataFrame:
                 load_table(spark, sf, src)
                 .write.bucketBy(8, key)
                 .sortBy(key)
-                .option("path", _tf.mkdtemp(prefix=f"{tbl}_"))
+                .option("path", tmpdir_reclaimed_at_exit(f"{tbl}_"))
                 .mode("overwrite")
                 .saveAsTable(tbl)
             )
@@ -2919,14 +2919,11 @@ def sql_scripting_control_flow(spark: SparkSession, sf: str) -> DataFrame:
     aggregate.
     """
     _views(spark, sf, "orders")
-    # Scoped conf (the stream_state_rocksdb save/restore discipline):
-    # the script body executes — loop jobs and all — inside spark.sql,
-    # and the returned frame is the already-planned final SELECT, so
-    # restoring the flag immediately after the call is safe and keeps
-    # the shared grading session's conf untouched.
-    prior = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    # Scoped conf: the script body executes — loop jobs and all —
+    # inside spark.sql, and the returned frame is the already-planned
+    # final SELECT, so restoring the flag immediately after the call is
+    # safe and keeps the shared grading session's conf untouched.
+    with scoped_conf(spark, "spark.sql.scripting.enabled", "true"):
         return spark.sql(
             """
             BEGIN
@@ -2947,11 +2944,6 @@ def sql_scripting_control_flow(spark: SparkSession, sf: str) -> DataFrame:
             END
             """
         )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prior)
 
 
 QUERIES["sql_scripting_control_flow"] = sql_scripting_control_flow

@@ -9,13 +9,15 @@ for the Python boundary, shuffle parallelism sized to the machine
 rather than Spark's legacy default of 200.
 
 At 100 TB on a real cluster the same factory applies — only
-``shuffle_partitions`` (≈ 2-3× total executor cores) and the S3A
-credentials change; nothing in the engine code assumes local mode.
+``spark.sql.shuffle.partitions`` (≈ 2-3× total executor cores, via
+``extra_conf``) and the S3A credentials change; nothing in the engine
+code assumes local mode.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -30,7 +32,6 @@ def default_parallelism() -> int:
 
 def get_spark(
     app_name: str = "iceberg_kafka_playgroud_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -40,12 +41,11 @@ def get_spark(
     DuckDB correctness oracle compares naive-UTC timestamps.
     """
     cores = default_parallelism()
-    n_shuffle = shuffle_partitions or cores
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]"))
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -83,14 +83,25 @@ def get_spark(
         .config("spark.hadoop.fs.s3a.path.style.access", "true")
         .config("spark.hadoop.fs.s3a.connection.timeout", "300000")
     )
-    # ad-hoc conf overrides for tuning runs: "k=v;k=v" (env wins over
-    # factory defaults, loses to explicit extra_conf)
-    env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
-    for item in filter(None, env_conf.split(";")):
-        k, _, v = item.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set a runtime conf for the body only: afterwards the prior value
+    is restored, or the key unset if it had none, even when the body
+    raises — so a scoped setting never leaks into later queries on a
+    shared session."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

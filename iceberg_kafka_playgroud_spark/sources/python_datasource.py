@@ -703,8 +703,8 @@ def source_python_pushdown(spark: SparkSession, sf: str) -> DataFrame:
     Same row rule as ``purchase_fabric``, so the oracle replays the
     surviving range from generate_series.
     """
-    # Pushdown is opt-in (runtime conf).  Deliberately NOT
-    # save/restored like _stream_partitions' confs: the returned
+    # Pushdown is opt-in (runtime conf).  Deliberately NOT scoped
+    # with session.scoped_conf like the streaming confs: the returned
     # frame is lazy and every later action RE-PLANS it (AQE + DSv2
     # pushFilters run per QueryExecution), so restoring after build
     # would silently disable the pushdown this operator exists to

@@ -7,7 +7,8 @@ collapses into Structured Streaming:
     source stream → foreachBatch { lake append  +  partitioned parquet }
 
 - ST1  5 s micro-batch cadence → ``trigger(processingTime="5 seconds")``
-  (tests use ``availableNow`` for determinism);
+  (bounded replays run ``availableNow`` through ``_drain`` for
+  determinism);
 - ST2  dual-sink fan-out → one ``foreachBatch`` writing both sinks;
 - ST3  hour partitions from event time (UTC) → year/month/day/hour
   columns derived with built-ins (s3-connector-config.json:17-25);
@@ -28,16 +29,19 @@ The fixture `events` table is the batch stand-in for the topic
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..plan_cache import session_memo
 from ..schema import normalize_event_ts
+from ..session import scoped_conf
 from ..tmpdirs import tmpdir_reclaimed_at_exit
 
 MAX_RECORDS_PER_FILE = 1000  # reference flush.size, s3-connector-config.json:18
@@ -77,23 +81,67 @@ def _staged_docs_stream(spark: SparkSession, sf_dir: str, df, subset: str):
     )
 
 
-def _ckpt_dir(prefix: str) -> str:
-    """Checkpoint dirs on tmpfs when available — offset/commit logs are
-    tiny and rewritten per micro-batch, so page-cache-backed is right."""
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, ckpt: str | None = None
+) -> None:
+    """Run a configured bounded replay to completion: every streaming
+    query in this module starts here, with the availableNow trigger and
+    STREAM_SHUFFLE_PARTITIONS state partitions (a streaming query pins
+    its shuffle-partition count from the session conf at start).
 
-
-@contextmanager
-def _stream_partitions(spark: SparkSession):
-    """Scope streaming-query state partitioning: a streaming query
-    pins its shuffle-partition count from the session conf at start."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
+    Without ``ckpt`` the checkpoint is a private tmpfs dir — offset and
+    commit logs are tiny and rewritten per micro-batch, so
+    page-cache-backed is right — removed once the query has stopped.
+    A caller that reads the checkpoint afterwards passes its own."""
+    owned = ckpt is None
+    if owned:
+        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+        ckpt = tempfile.mkdtemp(prefix="stream_ckpt_", dir=base)
     try:
-        yield
+        with scoped_conf(
+            spark, "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
+        ):
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        if owned:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _replay_batches(
+    spark: SparkSession,
+    stream: DataFrame,
+    per_batch: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Drain a staged drop-zone replay through ``per_batch`` and return
+    the appended per-micro-batch frames. Each frame is tagged with its
+    epoch to prove the replay really ran as several micro-batches: the
+    probes' whole point is per-batch work, so one batch means the staged
+    drop zone degenerated — a real error, not an assert (asserts vanish
+    under -O)."""
+    out_dir = tmpdir_reclaimed_at_exit("replay_out_")
+
+    def append(batch_df: DataFrame, epoch_id: int) -> None:
+        (
+            per_batch(batch_df)
+            .withColumn("epoch_id", F.lit(epoch_id).cast("long"))
+            .write.mode("append")
+            .parquet(out_dir)
+        )
+
+    _drain(spark, stream.writeStream.foreachBatch(append))
+    out = spark.read.parquet(out_dir)
+    n_epochs = out.select("epoch_id").distinct().count()
+    if n_epochs <= 1:
+        raise RuntimeError(
+            f"staged replay ran in {n_epochs} micro-batch(es); "
+            "expected the 4-file drop zone to yield several"
+        )
+    return out.drop("epoch_id")
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -200,14 +248,10 @@ def run_dual_sink_ingest(
 ) -> None:
     """Drive the full ingest synchronously (availableNow trigger)."""
     stream = events_file_stream(spark, sf_dir)
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(dual_sink_batch_writer(lake_dir, raw_dir))
-            .option("checkpointLocation", _ckpt_dir("ingest_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(dual_sink_batch_writer(lake_dir, raw_dir)),
+    )
 
 
 def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
@@ -215,16 +259,10 @@ def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
     return the sink contents as a batch DataFrame."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
-    with _stream_partitions(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", _ckpt_dir("mem_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        stream_df.writeStream.format("memory").queryName(name).outputMode(mode),
+    )
     return spark.table(name)
 
 
@@ -299,7 +337,7 @@ def stream_dual_sink(spark: SparkSession, sf: str) -> DataFrame:
     """ST2/ST3/ST4 end-to-end: run the dual-sink ingest into temp dirs,
     read the partitioned sink back, and return per-partition counts
     (oracle: the same counts straight off the events table)."""
-    base = tempfile.mkdtemp(prefix="dual_sink_")
+    base = tmpdir_reclaimed_at_exit("dual_sink_")
     lake_dir, raw_dir = f"{base}/lake", f"{base}/raw"
     run_dual_sink_ingest(spark, sf, lake_dir, raw_dir)
     raw = spark.read.parquet(raw_dir)
@@ -403,7 +441,7 @@ def _stage_even_split(events: DataFrame, prefix: str) -> str:
     partition — a multi-partition read of events (e.g. sf0.1 under a
     32-way layout) would yield batches differing by several rows and
     break the exact per-batch oracles that pin max=min=total/4."""
-    stage = tempfile.mkdtemp(prefix=prefix)
+    stage = tmpdir_reclaimed_at_exit(prefix)
     for i in range(N_RATE_FILES):
         (
             events.filter(F.pmod(F.col("event_id"), F.lit(N_RATE_FILES)) == i)
@@ -432,17 +470,13 @@ def stream_rate_limited_ingest(spark: SparkSession, sf: str) -> DataFrame:
     def count_batch(bdf: DataFrame, _bid: int) -> None:
         batch_rows.append(bdf.count())
 
-    with _stream_partitions(spark):
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(count_batch)
-            .option("checkpointLocation", _ckpt_dir("rate_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+        .writeStream.foreachBatch(count_batch),
+    )
     return spark.createDataFrame(
         [
             (
@@ -476,7 +510,7 @@ def stream_upsert_latest(spark: SparkSession, sf: str) -> DataFrame:
 
     events = load_table(spark, sf, "events")
     stage = _stage_even_split(events, "upsert_src_")
-    state_root = tempfile.mkdtemp(prefix="upsert_state_")
+    state_root = tmpdir_reclaimed_at_exit("upsert_state_")
     state: dict[str, str | None] = {"dir": None}
 
     latest_w = W.partitionBy("user_id").orderBy(
@@ -499,17 +533,13 @@ def stream_upsert_latest(spark: SparkSession, sf: str) -> DataFrame:
         )
         state["dir"] = new_dir  # swap only after the full write succeeds
 
-    with _stream_partitions(spark):
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", _ckpt_dir("upsert_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+        .writeStream.foreachBatch(merge_batch),
+    )
     assert state["dir"] is not None
     return spark.read.parquet(state["dir"]).select(
         "user_id",
@@ -539,7 +569,7 @@ def stream_snapshot_ingest(spark: SparkSession, sf: str) -> DataFrame:
 
     events = load_table(spark, sf, "events")
     stage = _stage_even_split(events, "snap_ingest_src_")
-    table_dir = tempfile.mkdtemp(prefix="snap_ingest_tbl_")
+    table_dir = tmpdir_reclaimed_at_exit("snap_ingest_tbl_")
 
     def commit_batch(bdf: DataFrame, _bid: int) -> None:
         S.commit_append(
@@ -553,17 +583,13 @@ def stream_snapshot_ingest(spark: SparkSession, sf: str) -> DataFrame:
             ),
         )
 
-    with _stream_partitions(spark):
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", _ckpt_dir("snap_ingest_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+        .writeStream.foreachBatch(commit_batch),
+    )
     snaps = S.snapshots_df(spark, table_dir)
     w = W.orderBy("snapshot_id")
     return snaps.select(
@@ -747,9 +773,8 @@ def stream_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     # session) and replay it one file per trigger — the bounded
     # stand-in for the Kafka doc topic
     stream = _staged_docs_stream(spark, sf, d.filter(is_new), "newbatch")
-    out_dir = tmpdir_reclaimed_at_exit("incdedup_out_")
 
-    def probe(batch_df: DataFrame, epoch_id: int) -> None:
+    def probe(batch_df: DataFrame) -> DataFrame:
         sh_new = dedup.shingle_set(batch_df)
         nb = dedup.lsh_bands(dedup.minhash_signatures(sh_new)).select(
             F.col("doc_id").alias("d_new"), "band_idx", "band_val"
@@ -774,7 +799,7 @@ def stream_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
                 ).alias("best_old_id"),
             )
         )
-        (
+        return (
             batch_df.select(F.col("doc_id").alias("d_new"))
             .join(agg, "d_new", "left")
             .select(
@@ -782,34 +807,10 @@ def stream_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
                 F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
                 F.col("best_jaccard").cast("double").alias("best_jaccard"),
                 F.col("best_old_id").cast("long").alias("best_old_id"),
-                # epoch provenance: proves the probe really ran as
-                # multiple micro-batches (enforced below); dropped
-                # from the oracle-checked result
-                F.lit(epoch_id).cast("long").alias("epoch_id"),
             )
-            .write.mode("append")
-            .parquet(out_dir)
         )
 
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", _ckpt_dir("incdedup_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.read.parquet(out_dir)
-    n_epochs = out.select("epoch_id").distinct().count()
-    if n_epochs <= 1:
-        # a real error, not an assert (asserts vanish under -O): the
-        # operator's whole point is the per-micro-batch probe; one
-        # batch means the staged drop zone degenerated
-        raise RuntimeError(
-            f"incremental dedup ran in {n_epochs} micro-batch(es); "
-            "expected the 4-file staged replay to yield several"
-        )
-    return out.drop("epoch_id")
+    return _replay_batches(spark, stream, probe)
 
 
 def stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
@@ -832,10 +833,9 @@ def stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
 
     d = load_table(spark, sf, "documents")
     stream = _staged_docs_stream(spark, sf, d, "all")
-    out_dir = tmpdir_reclaimed_at_exit("qgate_out_")
 
-    def gate(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+    def gate(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 "source",
                 F.col("n_chars").between(MIN_CHARS, MAX_CHARS)
@@ -854,20 +854,10 @@ def stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
                 F.sum("len_ok").alias("n_len"),
                 F.sum("lang_ok").alias("n_len_lang"),
             )
-            .write.mode("append")
-            .parquet(out_dir)
         )
 
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", _ckpt_dir("qgate_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.read.parquet(out_dir)
+        _replay_batches(spark, stream, gate)
         .groupBy("source")
         .agg(
             F.sum("n_raw").cast("long").alias("n_raw"),
@@ -952,10 +942,9 @@ def stream_state_rocksdb(spark: SparkSession, sf: str) -> DataFrame:
     save/restore cannot affect the running query or other operators.
     """
     stream = events_file_stream(spark, sf)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
+    with scoped_conf(
+        spark, "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
+    ):
         agg = (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "6 hours"), "event_type")
@@ -967,11 +956,6 @@ def stream_state_rocksdb(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
         out = _run_to_memory(agg, "complete")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     return out.select(
         F.col("window.start").alias("bucket_start"), "event_type", "n", "cents"
     )
@@ -1227,9 +1211,8 @@ def stream_ann_cell_assign(spark: SparkSession, sf: str) -> DataFrame:
     _, cents = _kmeans_final_assign(spark, sf)  # frozen trained model
     em = load_table(spark, sf, "embeddings")
     stream = _staged_docs_stream(spark, sf, em, "embs")
-    out_dir = tmpdir_reclaimed_at_exit("annassign_out_")
 
-    def assign_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def assign_batch(batch_df: DataFrame) -> DataFrame:
         base = batch_df.select(
             "vec_id",
             F.transform(
@@ -1239,34 +1222,11 @@ def stream_ann_cell_assign(spark: SparkSession, sf: str) -> DataFrame:
                 ).cast("long"),
             ).alias("qx"),
         )
-        (
-            _km_assign_frame(base, cents)
-            .select(
-                "vec_id",
-                "cid",
-                F.lit(epoch_id).cast("long").alias("epoch_id"),
-            )
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        return _km_assign_frame(base, cents).select("vec_id", "cid")
 
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(assign_batch)
-            .option("checkpointLocation", _ckpt_dir("annassign_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.read.parquet(out_dir)
-    n_epochs = out.select("epoch_id").distinct().count()
-    if n_epochs <= 1:
-        raise RuntimeError(
-            f"streaming cell assign ran in {n_epochs} micro-batch(es); "
-            "expected the 4-file staged replay to yield several"
-        )
     return (
-        out.groupBy("cid")
+        _replay_batches(spark, stream, assign_batch)
+        .groupBy("cid")
         .agg(
             F.count("*").cast("long").alias("n_vecs"),
             F.sum("vec_id").cast("long").alias("vec_id_sum"),
@@ -1320,9 +1280,8 @@ def stream_decontaminate_gate(spark: SparkSession, sf: str) -> DataFrame:
         .cache()
     )
     stream = _staged_docs_stream(spark, sf, d.filter(~is_eval), "trainset")
-    out_dir = tmpdir_reclaimed_at_exit("decongate_out_")
 
-    def probe(batch_df: DataFrame, epoch_id: int) -> None:
+    def probe(batch_df: DataFrame) -> DataFrame:
         sh_new = dedup.shingle_set(batch_df)
         nb = dedup.lsh_bands(dedup.minhash_signatures(sh_new)).select(
             F.col("doc_id").alias("d_tr"), "band_idx", "band_val"
@@ -1340,36 +1299,15 @@ def stream_decontaminate_gate(spark: SparkSession, sf: str) -> DataFrame:
             .distinct()
             .withColumn("hit", F.lit(1))
         )
-        (
+        return (
             batch_df.select(F.col("doc_id").alias("d_tr"), "source")
             .join(hits, "d_tr", "left")
-            .select(
-                "d_tr",
-                "source",
-                F.coalesce("hit", F.lit(0)).alias("hit"),
-                F.lit(epoch_id).cast("long").alias("epoch_id"),
-            )
-            .write.mode("append")
-            .parquet(out_dir)
+            .select("d_tr", "source", F.coalesce("hit", F.lit(0)).alias("hit"))
         )
 
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", _ckpt_dir("decongate_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.read.parquet(out_dir)
-    n_epochs = out.select("epoch_id").distinct().count()
-    if n_epochs <= 1:
-        raise RuntimeError(
-            f"decontamination gate ran in {n_epochs} micro-batch(es); "
-            "expected the 4-file staged replay to yield several"
-        )
     return (
-        out.groupBy("source")
+        _replay_batches(spark, stream, probe)
+        .groupBy("source")
         .agg(
             F.count("*").cast("long").alias("n_train"),
             F.sum("hit").cast("long").alias("n_fuzzy_contaminated"),
@@ -1756,29 +1694,21 @@ def stream_state_store_read(spark: SparkSession, sf: str) -> DataFrame:
     its schema), so state inspection at 100 TB is a distributed scan,
     not a driver dump.
     """
-    with _stream_partitions(spark):
-        stream = events_file_stream(spark, sf)
-        agg = stream.groupBy("event_type").agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long"))
-            .cast("long")
-            .alias("cents_sum"),
-        )
-        # NOT _ckpt_dir (tmpfs, never reclaimed — right for tiny
-        # offset logs only): this checkpoint carries the state-store
-        # shards the returned frame lazily reads, so it lives on disk
-        # and is reclaimed at exit.  The sink is noop — the state IS
-        # the output here; retaining a memory-sink copy per call would
-        # stack dead driver-side aggregates across warm repetitions.
-        ckpt = tmpdir_reclaimed_at_exit("ssread_ckpt_")
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = events_file_stream(spark, sf)
+    agg = stream.groupBy("event_type").agg(
+        F.count("*").alias("n_events"),
+        F.sum(F.floor(F.col("value") * 100).cast("long"))
+        .cast("long")
+        .alias("cents_sum"),
+    )
+    # its own checkpoint, not _drain's tmpfs one (removed on stop):
+    # this checkpoint carries the state-store shards the returned frame
+    # lazily reads, so it lives on disk and is reclaimed at exit.  The
+    # sink is noop — the state IS the output here; retaining a
+    # memory-sink copy per call would stack dead driver-side aggregates
+    # across warm repetitions.
+    ckpt = tmpdir_reclaimed_at_exit("ssread_ckpt_")
+    _drain(spark, agg.writeStream.format("noop").outputMode("complete"), ckpt)
     return (
         spark.read.format("statestore")
         .load(ckpt)

@@ -83,7 +83,7 @@ def test_rocksdb_state_spills_under_bounded_memory(spark):
             .groupBy("k")
             .agg(F.count("*").alias("n"))
         )
-        # checkpoint on real DISK, not the _ckpt_dir tmpfs default:
+        # checkpoint on real DISK, not ingest._drain's tmpfs default:
         # this query uploads state-store snapshots comparable to the
         # full state size, and the test's claim is precisely that the
         # state does NOT live in host memory

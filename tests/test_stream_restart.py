@@ -120,3 +120,17 @@ def test_footer_max_matches_scan(spark, sf_dir):
         load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
     )
     assert table_column_max(sf_dir, "events", "ts") == scan_max
+
+
+@pytest.mark.skipif(not os.path.isdir("/dev/shm"), reason="no tmpfs checkpoint base")
+def test_stream_runs_leave_no_checkpoint_behind(spark, sf_dir):
+    """Bounded replays checkpoint on tmpfs (RAM), so each run must
+    remove its checkpoint once the query stops: a memory-sink query
+    and a foreachBatch query leave no new entry in /dev/shm."""
+    from iceberg_kafka_playgroud_spark.streaming import ingest
+
+    before = set(os.listdir("/dev/shm"))
+    assert ingest.stream_tumbling_counts(spark, sf_dir).count() > 0
+    rate = ingest.stream_rate_limited_ingest(spark, sf_dir).first()
+    assert rate["n_batches"] == ingest.N_RATE_FILES
+    assert set(os.listdir("/dev/shm")) - before == set()
