@@ -8,27 +8,41 @@ jar is not in this container, so the same CAPABILITIES are provided by
 a minimal manifest-per-commit layer over parquet, following the public
 Iceberg spec's shape:
 
-- a **snapshot** is an immutable JSON manifest under ``_snapshots/``
+- a **snapshot** is an immutable JSON manifest ``_snapshots/v{sid}.json``
   listing every live data file (with per-file record counts, the
-  file-level stats Iceberg keeps in manifests);
-- an **append** writes new data files and a manifest = parent's files
-  + the new ones — old snapshots stay readable (time travel);
-- **compaction** (``rewrite_data_files`` analog) rewrites the current
-  file set into fewer files and commits an operation="replace"
-  manifest — bytes change, logical content doesn't;
+  file-level stats Iceberg keeps in manifests) and every live
+  equality-delete file;
+- **one commit path**: every operation writes its files under
+  ``data/s{sid}`` (deletes under ``data/s{sid}-del``), builds its
+  manifest with ``_manifest`` (snapshot id, parent, ``added_files`` and
+  ``total_records`` derived there, from the one parent manifest the
+  commit loaded) and publishes it with ``_publish`` — a temp file
+  renamed over ``v{sid}.json``, so a reader sees the whole manifest or
+  none of it;
+- **one read path**: ``read_snapshot`` opens exactly the manifest's
+  files and anti-joins the equality deletes under Iceberg's sequence
+  rule (a delete drops a row only if the row's file is older). The
+  sequence number is the ``s{sid}`` segment of each file's path; with
+  no delete files the plan is a bare parquet scan;
+- **appends** carry the parent's data and delete files; **rollback**
+  re-publishes the target's; **rewrites** (compaction, COW delete,
+  MERGE, sort clustering — ``_rewrite``) read the live rows and list
+  only their new files, so the deletes they applied leave the manifest;
 - ``snapshots_df`` / ``files_df`` are the ``tbl.snapshots`` /
   ``tbl.files`` metadata tables.
 
 With the Iceberg jar on the classpath, use the native path instead
 (``USING iceberg``, ``VERSION AS OF``, ``CALL rewrite_data_files``) —
 ``streaming.ingest.iceberg_available`` is the gate. This module is the
-jar-absent analog, not a replacement for the real runtime.
+jar-absent analog, not a replacement for the real runtime. Commits
+assume one writer per table: the rename is atomic for readers, not a
+compare-and-swap between concurrent writers.
 
 100 TB posture: commits are metadata-only over the written files (the
 per-bucket counts come from a map-side groupBy, no re-read); a time-
 travel read opens exactly the manifest's file list, so planning cost is
-O(live files) and data files are never copied. Compaction is the only
-data-moving operation and is a straight repartition-rewrite.
+O(live files) and data files are never copied. Rewrites are the only
+data-moving operations and are a straight repartition-rewrite.
 """
 
 from __future__ import annotations
@@ -36,6 +50,7 @@ from __future__ import annotations
 import glob as _glob
 import json
 import os
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,16 +66,20 @@ def _snap_path(table_dir: str, sid: int) -> str:
     return os.path.join(table_dir, SNAP_DIR, f"v{sid}.json")
 
 
-def current_snapshot_id(table_dir: str) -> int:
+def _snapshot_ids(table_dir: str) -> list[int]:
+    """Ids of the manifests on disk, ascending (expiry leaves gaps)."""
     d = os.path.join(table_dir, SNAP_DIR)
     if not os.path.isdir(d):
-        return 0
-    ids = [
+        return []
+    return sorted(
         int(f[1:-5])
         for f in os.listdir(d)
         if f.startswith("v") and f.endswith(".json")
-    ]
-    return max(ids, default=0)
+    )
+
+
+def current_snapshot_id(table_dir: str) -> int:
+    return max(_snapshot_ids(table_dir), default=0)
 
 
 def load_manifest(table_dir: str, sid: int) -> dict:
@@ -68,88 +87,145 @@ def load_manifest(table_dir: str, sid: int) -> dict:
         return json.load(fh)
 
 
-def _write_manifest(table_dir: str, manifest: dict) -> None:
-    os.makedirs(os.path.join(table_dir, SNAP_DIR), exist_ok=True)
-    with open(_snap_path(table_dir, manifest["snapshot_id"]), "w") as fh:
-        json.dump(manifest, fh, indent=1)
+def _head(table_dir: str) -> dict:
+    """The current manifest — the parent of the next commit ({} for a
+    table with no commits)."""
+    sid = current_snapshot_id(table_dir)
+    return load_manifest(table_dir, sid) if sid else {}
 
 
-def _schema_json(df: DataFrame) -> str:
-    return df.schema.json()
+def _out_dir(table_dir: str, head: dict, suffix: str = "") -> str:
+    """Where the commit after ``head`` writes its files. The ``s{sid}``
+    segment is the files' sequence number for ``read_snapshot``."""
+    sid = head.get("snapshot_id", 0) + 1
+    return os.path.join(table_dir, DATA_DIR, f"s{sid}{suffix}")
 
 
-def _write_bucketed(df: DataFrame, out_dir: str) -> list[dict]:
-    """Write df partitioned by BUCKET_COL (one file per bucket) and
-    return file entries [{path, bucket, record_count}] with counts
-    taken from the dataframe itself — no post-write re-read."""
-    counts = {
-        r[BUCKET_COL]: r["cnt"]
-        for r in df.groupBy(BUCKET_COL).agg(F.count("*").alias("cnt")).collect()
+def _manifest(
+    head: dict,
+    operation: str,
+    schema: str,
+    files: list[dict],
+    delete_files: Iterable[dict] = (),
+    **summary,
+) -> dict:
+    """The snapshot committed on top of ``head``: ``files`` and
+    ``delete_files`` are its complete live lists; the files it added
+    are the ones under its own ``s{sid}/`` directory."""
+    sid = head.get("snapshot_id", 0) + 1
+    return {
+        "snapshot_id": sid,
+        "parent_id": head.get("snapshot_id"),
+        "operation": operation,
+        "schema": schema,
+        "files": files,
+        "delete_files": list(delete_files),
+        "added_files": sum(f["path"].startswith(f"s{sid}/") for f in files),
+        "total_records": sum(f["record_count"] for f in files),
+        **summary,
     }
-    # one task → exactly one file per bucket value
-    df.repartition(1).write.partitionBy(BUCKET_COL).parquet(out_dir)
+
+
+def _publish(table_dir: str, manifest: dict, path: str | None = None) -> int:
+    """Make ``manifest`` visible at ``path`` (default: its ``v{sid}.json``)
+    by writing a temp file and renaming it over the target."""
+    path = path or _snap_path(table_dir, manifest["snapshot_id"])
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh, indent=1)
+    os.replace(tmp, path)
+    return manifest["snapshot_id"]
+
+
+def _write_files(df: DataFrame, out_dir: str, col: str = BUCKET_COL) -> list[dict]:
+    """Write df partitioned by ``col`` (one file per value) and return
+    file entries [{path, col, record_count}] with counts taken from the
+    dataframe itself — no post-write re-read."""
+    counts = {
+        r[col]: r["cnt"]
+        for r in df.groupBy(col).agg(F.count("*").alias("cnt")).collect()
+    }
+    # one task → exactly one file per partition value
+    df.repartition(1).write.partitionBy(col).parquet(out_dir)
     entries = []
-    for f in sorted(_glob.glob(f"{out_dir}/{BUCKET_COL}=*/part-*.parquet")):
-        bucket = int(f.split(f"{BUCKET_COL}=")[1].split("/")[0])
+    for f in sorted(_glob.glob(f"{out_dir}/{col}=*/part-*.parquet")):
+        value = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
         entries.append(
             {
                 "path": os.path.relpath(f, os.path.dirname(out_dir)),
-                "bucket": bucket,
-                "record_count": counts[bucket],
+                col: value,
+                "record_count": counts[value],
             }
         )
     return entries
 
 
-def commit_append(spark: SparkSession, table_dir: str, df: DataFrame) -> int:
-    """Append commit: write df's buckets as new data files, manifest =
-    parent files + new files."""
-    parent = current_snapshot_id(table_dir)
-    sid = parent + 1
-    out = os.path.join(table_dir, DATA_DIR, f"s{sid}")
-    new_files = _write_bucketed(df, out)
-    prev_m = load_manifest(table_dir, parent) if parent else {}
-    prev = prev_m.get("files", [])
-    _write_manifest(
-        table_dir,
-        {
-            "snapshot_id": sid,
-            "parent_id": parent or None,
-            "operation": "append",
-            "schema": _schema_json(df),
-            "files": prev + new_files,
-            # row-delta (equality-delete) files stay live across
-            # appends — they still apply to the older data files
-            "delete_files": prev_m.get("delete_files", []),
-            "added_files": len(new_files),
-            "total_records": sum(f["record_count"] for f in prev + new_files),
-        },
-    )
-    return sid
+def _read_files(spark: SparkSession, table_dir: str, paths: list[str]) -> DataFrame:
+    """One scan over table-relative file paths."""
+    return spark.read.parquet(*[os.path.join(table_dir, DATA_DIR, p) for p in paths])
 
 
-def rewrite_data_files(spark: SparkSession, table_dir: str) -> int:
-    """Compaction commit (Iceberg ``rewrite_data_files`` analog):
-    rewrite the current snapshot into one file per bucket; manifest
-    lists ONLY the new files with operation="replace"."""
-    parent = current_snapshot_id(table_dir)
-    sid = parent + 1
-    cur = read_snapshot(spark, table_dir, parent, keep_bucket=True)
-    out = os.path.join(table_dir, DATA_DIR, f"s{sid}")
-    new_files = _write_bucketed(cur, out)
-    _write_manifest(
-        table_dir,
-        {
-            "snapshot_id": sid,
-            "parent_id": parent,
-            "operation": "replace",
-            "schema": _schema_json(cur),
-            "files": new_files,
-            "added_files": len(new_files),
-            "total_records": sum(f["record_count"] for f in new_files),
-        },
+def _with_bucket(df: DataFrame) -> DataFrame:
+    # bucket= dirs aren't hive-discovered under per-file paths;
+    # recover the bucket from each row's input file
+    return df.withColumn(
+        BUCKET_COL,
+        F.regexp_extract(F.input_file_name(), f"{BUCKET_COL}=(\\d+)", 1).cast(
+            "long"
+        ),
     )
-    return sid
+
+
+def _with_seq(df: DataFrame, name: str) -> DataFrame:
+    # the committing snapshot id: the last data/s{sid} segment of the path
+    return df.withColumn(
+        name,
+        F.regexp_extract(
+            F.input_file_name(), f".*/{DATA_DIR}/s(\\d+)", 1
+        ).cast("long"),
+    )
+
+
+def _read(
+    spark: SparkSession, table_dir: str, m: dict, keep_bucket: bool = False
+) -> DataFrame:
+    """The live rows of manifest ``m``: its data files minus its
+    equality deletes, each delete dropping a matching row only when the
+    row's file is older than the delete (Iceberg's sequence rule, so a
+    later re-insert of a deleted key survives). Planning stays O(files);
+    the apply is one equi-anti-join keyed on the equality columns —
+    deletes are usually tiny next to data, so AQE broadcast-sizes them."""
+    if not m["files"]:
+        # delete-all leaves a file-less snapshot: an EMPTY table, not
+        # an unreadable one — rebuild the frame from the manifest's
+        # recorded schema (a parquet scan of zero paths raises)
+        from pyspark.sql import types as T
+
+        if m.get("schema") is None:
+            raise ValueError(
+                f"snapshot {m['snapshot_id']} has no files and no recorded schema"
+            )
+        return spark.createDataFrame([], T.StructType.fromJson(json.loads(m["schema"])))
+    df = _read_files(spark, table_dir, [f["path"] for f in m["files"]])
+    if keep_bucket:
+        df = _with_bucket(df)
+    dels = m.get("delete_files", [])
+    if not dels:
+        return df
+    cols = dels[0]["equality_cols"]
+    keys = _with_seq(
+        _read_files(spark, table_dir, [d["path"] for d in dels]).select(*cols),
+        "_del_seq",
+    )
+    cond = F.col("d._seq") < F.col("k._del_seq")
+    for c in cols:
+        cond = cond & (F.col(f"d.{c}") == F.col(f"k.{c}"))
+    return (
+        _with_seq(df, "_seq").alias("d")
+        .join(keys.alias("k"), cond, "left_anti")
+        .drop("_seq")
+    )
 
 
 def read_snapshot(
@@ -158,36 +234,52 @@ def read_snapshot(
     snapshot_id: int | None = None,
     keep_bucket: bool = False,
 ) -> DataFrame:
-    """Time-travel read: the file list of the requested (default:
-    current) snapshot, nothing else."""
+    """Time-travel read of the requested (default: current) snapshot:
+    its live rows, equality deletes applied."""
     sid = snapshot_id or current_snapshot_id(table_dir)
-    m = load_manifest(table_dir, sid)
-    paths = [os.path.join(table_dir, DATA_DIR, f["path"]) for f in m["files"]]
-    if not paths:
-        # delete-all leaves a file-less snapshot: an EMPTY table, not
-        # an unreadable one — rebuild the frame from the manifest's
-        # recorded schema (spark.read.parquet() with zero paths raises)
-        from pyspark.sql import types as T
+    return _read(spark, table_dir, load_manifest(table_dir, sid), keep_bucket)
 
-        schema_json = m.get("schema")
-        if schema_json is None:
-            raise ValueError(
-                f"snapshot {sid} has no files and no recorded schema"
-            )
-        return spark.createDataFrame(
-            [], T.StructType.fromJson(json.loads(schema_json))
-        )
-    df = spark.read.parquet(*paths)
-    if keep_bucket:
-        # bucket= dirs aren't hive-discovered under per-file paths;
-        # recover the bucket from each row's input file
-        df = df.withColumn(
-            BUCKET_COL,
-            F.regexp_extract(F.input_file_name(), f"{BUCKET_COL}=(\\d+)", 1).cast(
-                "long"
-            ),
-        )
-    return df
+
+def commit_append(spark: SparkSession, table_dir: str, df: DataFrame) -> int:
+    """Append commit: write df's buckets as new data files; the
+    manifest carries the parent's data files and its delete files —
+    they still apply to the older data files."""
+    head = _head(table_dir)
+    new_files = _write_files(df, _out_dir(table_dir, head))
+    return _publish(
+        table_dir,
+        _manifest(
+            head,
+            "append",
+            df.schema.json(),
+            head.get("files", []) + new_files,
+            head.get("delete_files", []),
+        ),
+    )
+
+
+def _rewrite(
+    spark: SparkSession,
+    table_dir: str,
+    operation: str,
+    transform: Callable[[DataFrame], DataFrame],
+) -> int:
+    """Copy-on-write commit: ``transform`` the current snapshot's live
+    rows (with their bucket) and write the result as the snapshot's
+    only files. The deletes the read applied are not carried."""
+    head = _head(table_dir)
+    out = transform(_read(spark, table_dir, head, keep_bucket=True))
+    new_files = _write_files(out, _out_dir(table_dir, head))
+    return _publish(
+        table_dir, _manifest(head, operation, out.schema.json(), new_files)
+    )
+
+
+def rewrite_data_files(spark: SparkSession, table_dir: str) -> int:
+    """Compaction commit (Iceberg ``rewrite_data_files`` analog):
+    rewrite the current snapshot into one file per bucket; manifest
+    lists ONLY the new files with operation="replace"."""
+    return _rewrite(spark, table_dir, "replace", lambda cur: cur)
 
 
 def snapshots_df(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -200,10 +292,7 @@ def snapshots_df(spark: SparkSession, table_dir: str) -> DataFrame:
             len(m["files"]),
             m["total_records"],
         )
-        for m in (
-            load_manifest(table_dir, s)
-            for s in range(1, current_snapshot_id(table_dir) + 1)
-        )
+        for m in (load_manifest(table_dir, s) for s in _snapshot_ids(table_dir))
     ]
     return spark.createDataFrame(
         rows,
@@ -219,6 +308,24 @@ def files_df(spark: SparkSession, table_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "file_path string, bucket long, record_count long"
     )
+
+
+def _live_paths(table_dir: str, sids: Iterable[int]) -> set[str]:
+    """Every data and delete file the given snapshots reference."""
+    live: set[str] = set()
+    for sid in sids:
+        m = load_manifest(table_dir, sid)
+        live.update(f["path"] for f in m["files"] + m.get("delete_files", []))
+    return live
+
+
+def _stored_files(table_dir: str) -> dict[str, str]:
+    """Every parquet file under the table's data dir: relative → full path."""
+    root = os.path.join(table_dir, DATA_DIR)
+    return {
+        os.path.relpath(p, root): p
+        for p in _glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+    }
 
 
 # --- queries() entries ------------------------------------------------------
@@ -241,12 +348,18 @@ def _fabric_slice(spark: SparkSession, lo: int, hi: int) -> DataFrame:
     )
 
 
-def _build_demo_table(spark: SparkSession) -> str:
-    table_dir = tmpdir_reclaimed_at_exit("snap_tbl_")
-    for k in range(N_APPENDS):
+def _appended_table(spark: SparkSession, prefix: str, n_appends: int = N_APPENDS) -> str:
+    """A fresh table holding n_appends appends of N_PER_APPEND fabric rows."""
+    table_dir = tmpdir_reclaimed_at_exit(prefix)
+    for k in range(n_appends):
         commit_append(
             spark, table_dir, _fabric_slice(spark, k * N_PER_APPEND, (k + 1) * N_PER_APPEND)
         )
+    return table_dir
+
+
+def _build_demo_table(spark: SparkSession) -> str:
+    table_dir = _appended_table(spark, "snap_tbl_")
     rewrite_data_files(spark, table_dir)
     return table_dir
 
@@ -296,28 +409,22 @@ def expire_snapshots(
     spark: SparkSession, table_dir: str, keep_last: int = 1
 ) -> dict:
     """Iceberg ``expire_snapshots`` analog: drop all but the last
-    ``keep_last`` snapshot manifests and delete data files no live
-    manifest references.  Metadata-only except the orphan unlink —
+    ``keep_last`` snapshot manifests and unlink the files (data or
+    equality-delete) no kept manifest references.  Metadata-only except
+    the orphan unlink —
     planning cost is O(total files), no data is read or moved.
     Returns counts for inspection."""
-    cur = current_snapshot_id(table_dir)
-    keep = set(range(max(1, cur - keep_last + 1), cur + 1))
-    live: set[str] = set()
-    for sid in keep:
-        live |= {f["path"] for f in load_manifest(table_dir, sid)["files"]}
-    expired = 0
-    for sid in range(1, cur + 1):
-        if sid not in keep:
-            os.remove(_snap_path(table_dir, sid))
-            expired += 1
+    ids = _snapshot_ids(table_dir)
+    cut = max(0, len(ids) - keep_last)
+    live = _live_paths(table_dir, ids[cut:])
+    for sid in ids[:cut]:
+        os.remove(_snap_path(table_dir, sid))
     removed = 0
-    for p in _glob.glob(os.path.join(table_dir, DATA_DIR, "**", "*.parquet"),
-                        recursive=True):
-        rel = os.path.relpath(p, os.path.join(table_dir, DATA_DIR))
+    for rel, p in _stored_files(table_dir).items():
         if rel not in live:
             os.remove(p)
             removed += 1
-    return {"expired_snapshots": expired, "removed_files": removed,
+    return {"expired_snapshots": cut, "removed_files": removed,
             "live_files": len(live)}
 
 
@@ -329,25 +436,9 @@ def delete_where(spark: SparkSession, table_dir: str, predicate) -> int:
     ids {0, 1000}, both ≡ 0 mod 4) — a file-pruned implementation
     would rewrite only matching files, which is exactly Iceberg's COW
     planning; at scale pair the predicate with partition pruning."""
-    parent = current_snapshot_id(table_dir)
-    sid = parent + 1
-    cur = read_snapshot(spark, table_dir, parent, keep_bucket=True)
-    remaining = cur.filter(~predicate)
-    out = os.path.join(table_dir, DATA_DIR, f"s{sid}")
-    new_files = _write_bucketed(remaining, out)
-    _write_manifest(
-        table_dir,
-        {
-            "snapshot_id": sid,
-            "parent_id": parent,
-            "operation": "delete",
-            "schema": _schema_json(remaining),
-            "files": new_files,
-            "added_files": len(new_files),
-            "total_records": sum(f["record_count"] for f in new_files),
-        },
+    return _rewrite(
+        spark, table_dir, "delete", lambda cur: cur.filter(~predicate)
     )
-    return sid
 
 
 def snapshot_delete_rows(spark: SparkSession, sf: str) -> DataFrame:
@@ -386,23 +477,18 @@ def rollback_to(table_dir: str, target_sid: int) -> int:
     snapshot whose state is the target's (Iceberg's
     ``rollback_to_snapshot`` semantics: history is preserved, the
     current pointer moves; no data files are touched)."""
-    parent = current_snapshot_id(table_dir)
     tgt = load_manifest(table_dir, target_sid)
-    sid = parent + 1
-    _write_manifest(
+    return _publish(
         table_dir,
-        {
-            "snapshot_id": sid,
-            "parent_id": parent or None,
-            "operation": "rollback",
-            "rolled_back_to": target_sid,
-            "schema": tgt.get("schema"),
-            "files": tgt["files"],
-            "added_files": 0,
-            "total_records": tgt["total_records"],
-        },
+        _manifest(
+            _head(table_dir),
+            "rollback",
+            tgt.get("schema"),
+            tgt["files"],
+            tgt.get("delete_files", []),
+            rolled_back_to=target_sid,
+        ),
     )
-    return sid
 
 
 def snapshot_rollback(spark: SparkSession, sf: str) -> DataFrame:
@@ -483,8 +569,7 @@ def read_incremental(
     added = [f["path"] for f in target["files"] if f["path"] not in base]
     if not added:
         return read_snapshot(spark, table_dir, to_sid).limit(0)
-    paths = [os.path.join(table_dir, DATA_DIR, p) for p in added]
-    return spark.read.parquet(*paths)
+    return _read_files(spark, table_dir, added)
 
 
 def snapshot_incremental_read(spark: SparkSession, sf: str) -> DataFrame:
@@ -537,7 +622,8 @@ def snapshot_partition_evolution(spark: SparkSession, sf: str) -> DataFrame:
     commit_append(
         spark, table_dir, _fabric_slice(spark, N_PER_APPEND, 2 * N_PER_APPEND)
     )
-    spec1_files = load_manifest(table_dir, 2)["files"]
+    head = _head(table_dir)
+    spec1_files = head["files"]
 
     cents = F.round(F.col("amount") * 100).cast("long")
     df3 = (
@@ -545,45 +631,23 @@ def snapshot_partition_evolution(spark: SparkSession, sf: str) -> DataFrame:
         .drop(BUCKET_COL)
         .withColumn("band", F.floor(cents / BAND_CENTS).cast("long"))
     )
-    counts = {
-        r["band"]: r["cnt"]
-        for r in df3.groupBy("band").agg(F.count("*").alias("cnt")).collect()
-    }
-    out = os.path.join(table_dir, DATA_DIR, "s3")
-    df3.repartition(1).write.partitionBy("band").parquet(out)
-    spec2_files = []
-    for f in sorted(_glob.glob(f"{out}/band=*/part-*.parquet")):
-        band = int(f.split("band=")[1].split("/")[0])
-        spec2_files.append(
-            {
-                "path": os.path.relpath(f, os.path.join(table_dir, DATA_DIR)),
-                "spec": "band",
-                "band": band,
-                "record_count": counts[band],
-            }
-        )
-    _write_manifest(
+    # each manifest entry names its spec's partition field (bucket/band)
+    spec2_files = _write_files(df3, _out_dir(table_dir, head), col="band")
+    _publish(
         table_dir,
-        {
-            "snapshot_id": 3,
-            "parent_id": 2,
-            "operation": "append",
-            "schema": _schema_json(df3.drop("band")),
-            "files": spec1_files + spec2_files,
-            "added_files": len(spec2_files),
-            "total_records": sum(
-                f["record_count"] for f in spec1_files + spec2_files
-            ),
-        },
+        _manifest(
+            head,
+            "append",
+            df3.drop("band").schema.json(),
+            spec1_files + spec2_files,
+            head["delete_files"],
+        ),
     )
 
     # pruned read under band = 2: all spec-1 files + only the matching
     # spec-2 band directory
-    pruned = [f for f in spec1_files] + [
-        f for f in spec2_files if f["band"] == 2
-    ]
-    paths = [os.path.join(table_dir, DATA_DIR, f["path"]) for f in pruned]
-    scanned = spark.read.parquet(*paths).where(
+    pruned = spec1_files + [f for f in spec2_files if f["band"] == 2]
+    scanned = _read_files(spark, table_dir, [f["path"] for f in pruned]).where(
         F.floor(cents / BAND_CENTS) == 2
     )
     agg = scanned.agg(
@@ -619,9 +683,7 @@ def snapshot_wap_publish(spark: SparkSession, sf: str) -> DataFrame:
     manifest; bytes never need rollback because they were never
     referenced.
     """
-    import shutil
-
-    table_dir = _build_demo_table_two_appends(spark)
+    table_dir = _appended_table(spark, "snap_wap_", 2)
 
     def visible():
         cur = read_snapshot(spark, table_dir)
@@ -637,54 +699,39 @@ def snapshot_wap_publish(spark: SparkSession, sf: str) -> DataFrame:
     stages.append(("1_pre_stage", *visible()))
 
     # stage: write files + manifest under a NON-versioned name
-    parent = current_snapshot_id(table_dir)
+    head = _head(table_dir)
     df3 = _fabric_slice(spark, 2 * N_PER_APPEND, 3 * N_PER_APPEND)
-    out = os.path.join(table_dir, DATA_DIR, "staged_s3")
-    new_files = _write_bucketed(df3, out)
-    staged = {
-        "snapshot_id": parent + 1,
-        "parent_id": parent,
-        "operation": "append",
-        "schema": _schema_json(df3),
-        "files": load_manifest(table_dir, parent)["files"] + new_files,
-        "added_files": len(new_files),
-        "total_records": load_manifest(table_dir, parent)["total_records"]
-        + sum(f["record_count"] for f in new_files),
-    }
+    new_files = _write_files(df3, _out_dir(table_dir, head))
     staged_path = os.path.join(table_dir, SNAP_DIR, "staged_v3.json")
-    with open(staged_path, "w") as fh:
-        json.dump(staged, fh)
+    sid = _publish(
+        table_dir,
+        _manifest(
+            head,
+            "append",
+            df3.schema.json(),
+            head["files"] + new_files,
+            head["delete_files"],
+        ),
+        staged_path,
+    )
     stages.append(("2_staged_invisible", *visible()))
 
     # audit the staged data directly (not via the snapshot log)
-    audit_paths = [
-        os.path.join(table_dir, DATA_DIR, f["path"]) for f in new_files
-    ]
-    audit = spark.read.parquet(*audit_paths).agg(
-        F.count("*").cast("long").alias("n")
-    ).collect()[0]
-    assert audit["n"] == sum(f["record_count"] for f in new_files), (
-        "WAP audit failed — staged manifest row-count claim is wrong"
-    )
+    n = _read_files(spark, table_dir, [f["path"] for f in new_files]).count()
+    claimed = sum(f["record_count"] for f in new_files)
+    if n != claimed:
+        raise RuntimeError(
+            f"WAP audit failed: staged files hold {n} rows, manifest "
+            f"claims {claimed}"
+        )
 
     # publish: promote the staged manifest (atomic rename)
-    shutil.move(staged_path, _snap_path(table_dir, parent + 1))
+    os.replace(staged_path, _snap_path(table_dir, sid))
     stages.append(("3_published", *visible()))
 
     return spark.createDataFrame(
         stages, "stage string, n_rows long, amount_cents long"
     )
-
-
-def _build_demo_table_two_appends(spark: SparkSession) -> str:
-    table_dir = tmpdir_reclaimed_at_exit("snap_wap_")
-    for k in range(2):
-        commit_append(
-            spark,
-            table_dir,
-            _fabric_slice(spark, k * N_PER_APPEND, (k + 1) * N_PER_APPEND),
-        )
-    return table_dir
 
 
 def snapshot_orphan_audit(spark: SparkSession, sf: str) -> DataFrame:
@@ -718,16 +765,9 @@ def snapshot_orphan_audit(spark: SparkSession, sf: str) -> DataFrame:
     with open(ghost, "wb") as fh:
         fh.write(b"PAR1 expired bytes")
 
-    live = set()
-    for sid in range(1, current_snapshot_id(table_dir) + 1):
-        path = _snap_path(table_dir, sid)
-        if os.path.exists(path):
-            live.update(f["path"] for f in load_manifest(table_dir, sid)["files"])
+    live = _live_paths(table_dir, _snapshot_ids(table_dir))
     on_disk = {
-        os.path.relpath(p, os.path.join(table_dir, DATA_DIR)): os.path.getsize(p)
-        for p in _glob.glob(
-            os.path.join(table_dir, DATA_DIR, "**", "*.parquet"), recursive=True
-        )
+        rel: os.path.getsize(p) for rel, p in _stored_files(table_dir).items()
     }
     orphans = {p: sz for p, sz in on_disk.items() if p not in live}
     rows = [
@@ -771,8 +811,7 @@ def snapshot_changelog_diff(spark: SparkSession, sf: str) -> DataFrame:
     fb = {f["path"] for f in mb["files"]}
 
     def _rows(paths: set[str]) -> DataFrame:
-        full = [os.path.join(table_dir, DATA_DIR, p) for p in sorted(paths)]
-        return spark.read.parquet(*full).select(
+        return _read_files(spark, table_dir, sorted(paths)).select(
             "user_id", "timestamp", "amount"
         )
 
@@ -995,7 +1034,7 @@ def snapshot_branch_tag(spark: SparkSession, sf: str) -> DataFrame:
     commits to main only (connector-config.json); refs are the
     engine-side surface a warehouse on top of it needs.
     """
-    table_dir = _build_demo_table_two_appends(spark)  # s1, s2
+    table_dir = _appended_table(spark, "snap_wap_", 2)  # s1, s2
 
     refs: dict[str, tuple[str, int]] = {
         "main": ("branch", current_snapshot_id(table_dir)),  # s2
@@ -1064,27 +1103,14 @@ def merge_upsert(
     "merge"). This analog rewrites the full bucket set; Iceberg's COW
     planner rewrites only files containing matches — pair the merge
     key with partition pruning at scale."""
-    parent = current_snapshot_id(table_dir)
-    sid = parent + 1
-    cur = read_snapshot(spark, table_dir, parent, keep_bucket=True)
-    merged = cur.join(
-        updates.select(key), key, "left_anti"
-    ).unionByName(updates)
-    out = os.path.join(table_dir, DATA_DIR, f"s{sid}")
-    new_files = _write_bucketed(merged, out)
-    _write_manifest(
+    return _rewrite(
+        spark,
         table_dir,
-        {
-            "snapshot_id": sid,
-            "parent_id": parent,
-            "operation": "merge",
-            "schema": _schema_json(merged),
-            "files": new_files,
-            "added_files": len(new_files),
-            "total_records": sum(f["record_count"] for f in new_files),
-        },
+        "merge",
+        lambda cur: cur.join(updates.select(key), key, "left_anti").unionByName(
+            updates
+        ),
     )
-    return sid
 
 
 UPSERT_LO, UPSERT_HI = 1190, 1210  # 10 updates (matched) + 10 inserts
@@ -1166,99 +1192,27 @@ def commit_equality_delete(
     whose data file was committed BEFORE it (Iceberg's data-sequence <
     delete-sequence rule), so later re-inserts of the same key survive.
     """
-    parent = current_snapshot_id(table_dir)
-    sid = parent + 1
-    rel = f"s{sid}-del"
-    out = os.path.join(table_dir, DATA_DIR, rel)
+    head = _head(table_dir)
+    out = _out_dir(table_dir, head, "-del")
     keys_df.select(*cols).repartition(1).write.parquet(out)
     n_keys = keys_df.count()
-    files = sorted(_glob.glob(f"{out}/part-*.parquet"))
-    prev = load_manifest(table_dir, parent)
-    _write_manifest(
+    return _publish(
         table_dir,
-        {
-            "snapshot_id": sid,
-            "parent_id": parent,
-            "operation": "delete",
-            "schema": prev["schema"],
-            "files": prev["files"],
-            "delete_files": prev.get("delete_files", [])
+        _manifest(
+            head,
+            "delete",
+            head["schema"],
+            head["files"],
+            head.get("delete_files", [])
             + [
                 {
                     "path": os.path.relpath(f, os.path.dirname(out)),
-                    "seq": sid,
                     "equality_cols": cols,
                     "record_count": n_keys,
                 }
-                for f in files
+                for f in sorted(_glob.glob(f"{out}/part-*.parquet"))
             ],
-            "added_files": 0,
-            "total_records": prev["total_records"],
-        },
-    )
-    return sid
-
-
-def _data_file_seq(path: str) -> int:
-    # data files live under data/s{sid}/... — the layout commit_append
-    # writes; the leading segment IS the committing snapshot id
-    return int(path.split("/")[0].lstrip("s").split("-")[0])
-
-
-def read_snapshot_mor(
-    spark: SparkSession,
-    table_dir: str,
-    snapshot_id: int | None = None,
-    keep_bucket: bool = False,
-) -> DataFrame:
-    """Merge-on-read time travel: the snapshot's data files ANTI-JOINED
-    against its equality-delete files under the sequence rule (a delete
-    drops a row only if the row's data file is OLDER than the delete).
-    Planning stays O(files); the apply is one equi-anti-join keyed on
-    the equality columns — deletes are usually tiny next to data, so
-    AQE broadcast-sizes them; nothing here materializes the table.
-    """
-    sid = snapshot_id or current_snapshot_id(table_dir)
-    m = load_manifest(table_dir, sid)
-    dels = m.get("delete_files", [])
-    by_seq: dict[int, list[str]] = {}
-    for f in m["files"]:
-        by_seq.setdefault(_data_file_seq(f["path"]), []).append(
-            os.path.join(table_dir, DATA_DIR, f["path"])
-        )
-    data = None
-    for seq, paths in sorted(by_seq.items()):
-        part = spark.read.parquet(*paths).withColumn(
-            "_seq", F.lit(seq).cast("long")
-        )
-        if keep_bucket:
-            part = part.withColumn(
-                BUCKET_COL,
-                F.regexp_extract(
-                    F.input_file_name(), f"{BUCKET_COL}=(\\d+)", 1
-                ).cast("long"),
-            )
-        data = part if data is None else data.unionByName(part)
-    if not dels:
-        return data.drop("_seq")
-    cols = dels[0]["equality_cols"]
-    keys = None
-    for df_entry in dels:
-        part = (
-            spark.read.parquet(
-                os.path.join(table_dir, DATA_DIR, df_entry["path"])
-            )
-            .select(*cols)
-            .withColumn("_del_seq", F.lit(df_entry["seq"]).cast("long"))
-        )
-        keys = part if keys is None else keys.unionByName(part)
-    cond = F.col("d._seq") < F.col("k._del_seq")
-    for c in cols:
-        cond = cond & (F.col(f"d.{c}") == F.col(f"k.{c}"))
-    return (
-        data.alias("d")
-        .join(keys.alias("k"), cond, "left_anti")
-        .drop("_seq")
+        ),
     )
 
 
@@ -1289,7 +1243,7 @@ def snapshot_mor_read(spark: SparkSession, sf: str) -> DataFrame:
     commit_equality_delete(spark, table_dir, del_keys, ["timestamp"])
     commit_append(spark, table_dir, _fabric_slice(spark, 0, MOR_REINSERT))
     return (
-        read_snapshot_mor(spark, table_dir, keep_bucket=True)
+        read_snapshot(spark, table_dir, keep_bucket=True)
         .groupBy(BUCKET_COL)
         .agg(
             F.count("*").cast("long").alias("n_rows"),
@@ -1347,28 +1301,16 @@ def snapshot_sorted_rewrite(spark: SparkSession, sf: str) -> DataFrame:
     """
     table_dir = tmpdir_reclaimed_at_exit("sorted_tbl_")
     n_rows = N_PER_APPEND * N_APPENDS
-    commit_append(spark, table_dir, _fabric_slice(spark, 0, n_rows))
+    parent = commit_append(spark, table_dir, _fabric_slice(spark, 0, n_rows))
     base = 1740787200000
-    parent = current_snapshot_id(table_dir)
-    cur = read_snapshot(spark, table_dir, parent)
     idx = ((F.col("timestamp") - base) / 5000).cast("long")
-    clustered = cur.withColumn(
-        BUCKET_COL, (idx * SORTED_REWRITE_FILES / n_rows).cast("long")
-    )
-    sid = parent + 1
-    out = os.path.join(table_dir, DATA_DIR, f"s{sid}")
-    new_files = _write_bucketed(clustered, out)
-    _write_manifest(
+    sid = _rewrite(
+        spark,
         table_dir,
-        {
-            "snapshot_id": sid,
-            "parent_id": parent,
-            "operation": "replace-sorted",
-            "schema": _schema_json(cur),
-            "files": new_files,
-            "added_files": len(new_files),
-            "total_records": sum(f["record_count"] for f in new_files),
-        },
+        "replace-sorted",
+        lambda cur: cur.withColumn(
+            BUCKET_COL, (idx * SORTED_REWRITE_FILES / n_rows).cast("long")
+        ),
     )
 
     def audit(snapshot_id: int, stage: str) -> DataFrame:
@@ -1466,14 +1408,7 @@ def snapshot_incremental_view_maintenance(
     view = agg_of(read_snapshot(spark, table_dir, s1, keep_bucket=True))
     # +append delta: manifest-pruned incremental read
     view = view.unionByName(
-        agg_of(
-            read_incremental(spark, table_dir, s1, s2).withColumn(
-                BUCKET_COL,
-                F.regexp_extract(
-                    F.input_file_name(), f"{BUCKET_COL}=(\\d+)", 1
-                ).cast("long"),
-            )
-        )
+        agg_of(_with_bucket(read_incremental(spark, table_dir, s1, s2)))
     )
     # ±changelog of the delete commit: exceptAll over changed files
     ma = load_manifest(table_dir, s2)
@@ -1482,14 +1417,9 @@ def snapshot_incremental_view_maintenance(
     fb = {f["path"] for f in mb["files"]}
 
     def _rows(paths: set[str]) -> DataFrame:
-        full = [os.path.join(table_dir, DATA_DIR, p) for p in sorted(paths)]
-        df = spark.read.parquet(*full)
-        return df.withColumn(
-            BUCKET_COL,
-            F.regexp_extract(
-                F.input_file_name(), f"{BUCKET_COL}=(\\d+)", 1
-            ).cast("long"),
-        ).select(BUCKET_COL, "timestamp", "user_id", "amount")
+        return _with_bucket(_read_files(spark, table_dir, sorted(paths))).select(
+            BUCKET_COL, "timestamp", "user_id", "amount"
+        )
 
     rows_a = _rows(fa - fb)
     rows_b = _rows(fb - fa)
@@ -1604,13 +1534,7 @@ def snapshot_file_size_audit(spark: SparkSession, sf: str) -> DataFrame:
     The fixture table is three appends WITHOUT the demo rewrite, so
     every bucket really holds N_APPENDS small files.
     """
-    table_dir = tmpdir_reclaimed_at_exit("snap_fsa_")
-    for k in range(N_APPENDS):
-        commit_append(
-            spark,
-            table_dir,
-            _fabric_slice(spark, k * N_PER_APPEND, (k + 1) * N_PER_APPEND),
-        )
+    table_dir = _appended_table(spark, "snap_fsa_")
     f = files_df(spark, table_dir)
     return (
         f.groupBy("bucket")

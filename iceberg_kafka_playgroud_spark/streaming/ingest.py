@@ -13,12 +13,14 @@ collapses into Structured Streaming:
 - ST3  hour partitions from event time (UTC) → year/month/day/hour
   columns derived with built-ins (s3-connector-config.json:17-25);
 - ST4  file rotation → ``maxRecordsPerFile`` (flush.size=1000 analog);
-- ST5/ST6  exactly-once per epoch: the lake append is idempotent per
-  (epoch, partition) via deterministic file layout; with the Iceberg
-  runtime on the classpath the same writer targets
-  ``.format("iceberg")`` and gets snapshot-atomic commits
-  (connector-config.json:24-27) — strictly stronger than the
-  reference's at-least-once;
+- ST5/ST6  delivery: the plain-parquet lake sink is AT-LEAST-ONCE —
+  ``foreachBatch`` re-runs an epoch after a crash and the append
+  writes its rows again (a crash-replay of 1,000 events left 1,250
+  lake rows). Exactly-once needs an epoch-keyed commit: the query and
+  epoch ids recorded in the snapshot manifest, a replayed epoch a
+  no-op (ROADMAP direction 1). With the Iceberg runtime on the
+  classpath the same writer targets ``.format("iceberg")`` and gets
+  snapshot-atomic commits (connector-config.json:24-27);
 - ST7  late/duplicate handling → ``withWatermark`` + ``dropDuplicates``
   (absent in the reference; idiomatic upgrade).
 

@@ -13,8 +13,6 @@ sink table, format-version 2, snappy) and
 init-iceberg-catalog.sql:10-38 (catalog DDL).
 """
 
-import tempfile
-
 import pytest
 
 from pyspark.sql import functions as F
@@ -36,11 +34,11 @@ def _provider(spark, fq: str) -> str:
     ).lower()
 
 
-def test_catalog_falls_back_to_parquet_without_jar(spark):
+def test_catalog_falls_back_to_parquet_without_jar(spark, tmp_path):
     if iceberg_available(spark):
         pytest.skip("jar present; fallback path not exercised")
     fq = create_purchase_events_table(
-        spark, "fallback_db", location=tempfile.mkdtemp(prefix="fb_tbl_")
+        spark, "fallback_db", location=str(tmp_path)
     )
     assert _provider(spark, fq) == "parquet"
     props = {
@@ -52,7 +50,7 @@ def test_catalog_falls_back_to_parquet_without_jar(spark):
 
 
 @pytest.fixture(scope="module")
-def iceberg_spark(spark):
+def iceberg_spark(spark, tmp_path_factory):
     if not iceberg_available(spark):
         pytest.skip("iceberg-spark-runtime jar not on classpath")
     # native path needs the Iceberg SQL extensions + a catalog; the
@@ -64,18 +62,18 @@ def iceberg_spark(spark):
     spark.conf.set("spark.sql.catalog.spark_catalog.type", "hadoop")
     spark.conf.set(
         "spark.sql.catalog.spark_catalog.warehouse",
-        tempfile.mkdtemp(prefix="iceberg_wh_"),
+        str(tmp_path_factory.mktemp("iceberg_wh_")),
     )
     return spark
 
 
-def test_native_iceberg_write_snapshots_time_travel(iceberg_spark):
+def test_native_iceberg_write_snapshots_time_travel(iceberg_spark, tmp_path):
     """K1/S3 native form: USING iceberg table, two appends, snapshot
     metadata table, VERSION AS OF time travel — the real-runtime twin
     of snapshots.py's parquet+manifest analog."""
     spark = iceberg_spark
     fq = create_purchase_events_table(
-        spark, "native_db", location=tempfile.mkdtemp(prefix="native_tbl_")
+        spark, "native_db", location=str(tmp_path)
     )
     assert _provider(spark, fq) == "iceberg"
 

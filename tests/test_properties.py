@@ -649,15 +649,13 @@ def test_theta_sketch_estimates_match_exact_small(spark, sf_dir):
     assert all(r["within_bound"] for r in rows)
 
 
-def test_mor_read_applies_sequence_rule(spark):
+def test_mor_read_applies_sequence_rule(spark, tmp_path):
     """Equality-delete MOR: a key deleted at seq 2 disappears from the
     seq-1 data but its seq-3 re-insert survives; and time travel to
     the pre-delete snapshot still sees every original row."""
     from iceberg_kafka_playgroud_spark import snapshots as S
 
-    import tempfile
-
-    table_dir = tempfile.mkdtemp(prefix="mor_prop_")
+    table_dir = str(tmp_path / "tbl")
     base = 1740787200000
     S.commit_append(spark, table_dir, S._fabric_slice(spark, 0, 200))
     idx = ((F.col("timestamp") - base) / 5000).cast("long")
@@ -669,13 +667,10 @@ def test_mor_read_applies_sequence_rule(spark):
     S.commit_equality_delete(spark, table_dir, keys, ["timestamp"])
     S.commit_append(spark, table_dir, S._fabric_slice(spark, 0, 50))
     # pre-delete snapshot unaffected (time travel reads raw files)
-    assert S.read_snapshot_mor(spark, table_dir, 1).count() == 200
+    assert S.read_snapshot(spark, table_dir, 1).count() == 200
     # post: 200 - 20 deleted + 50 re-inserted (5 of which are
     # resurrected deleted keys)
-    assert S.read_snapshot_mor(spark, table_dir, 3).count() == 230
-    import shutil
-
-    shutil.rmtree(table_dir, ignore_errors=True)
+    assert S.read_snapshot(spark, table_dir, 3).count() == 230
 
 
 # --- LSH regime guard (r7 verdict task #3) --------------------------------

@@ -110,16 +110,15 @@ def test_list_and_query_parquet(client, sf_dir):
     assert len(r2.get_json()["rows"]) == 3
 
 
-def test_namespaces_tables_table(client, spark):
+def test_namespaces_tables_table(client, spark, tmp_path):
     r = client.get("/namespaces")
     assert "default" in r.get_json()["namespaces"]
     r2 = client.get("/tables?namespace=default")
     assert r2.status_code == 200
     # create the canonical table, then describe it through the API
     from iceberg_kafka_playgroud_spark.catalog import create_purchase_events_table
-    import tempfile
 
-    create_purchase_events_table(spark, "default_db", tempfile.mkdtemp())
+    create_purchase_events_table(spark, "default_db", str(tmp_path))
     r3 = client.get("/table?namespace=default_db&table=purchase_events")
     body = r3.get_json()
     names = [f["name"] for f in body["schema"]]
@@ -127,18 +126,17 @@ def test_namespaces_tables_table(client, spark):
     assert body["properties"].get("format-version") == "2"
 
 
-def test_table_query_limit_honored(client, spark):
+def test_table_query_limit_honored(client, spark, tmp_path):
     # the reference IGNORES this limit (pyiceberg_rest_server.py:210-215);
     # we assert it is honored
     from iceberg_kafka_playgroud_spark.catalog import create_namespace
     from iceberg_kafka_playgroud_spark.sources.rate_fabric import (
         purchase_events_batch,
     )
-    import tempfile
 
     create_namespace(spark, "apitest_db")
     spark.sql("DROP TABLE IF EXISTS apitest_db.pe")
-    loc = tempfile.mkdtemp()
+    loc = str(tmp_path / "pe")
     purchase_events_batch(spark, 50).write.option("path", loc).saveAsTable(
         "apitest_db.pe"
     )

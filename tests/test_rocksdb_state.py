@@ -20,7 +20,6 @@ and runs ~1 min of stateful streaming.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pytest
@@ -52,8 +51,8 @@ def _restore_confs(spark, saved):
             spark.conf.set(k, v)
 
 
-def test_rocksdb_state_spills_under_bounded_memory(spark):
-    src = tempfile.mkdtemp(prefix="rocksdb_keys_")
+def test_rocksdb_state_spills_under_bounded_memory(spark, tmp_path):
+    src = str(tmp_path / "keys")
     # N_KEYS distinct keys, one event-time column inside the watermark
     (
         spark.range(N_KEYS)
@@ -92,7 +91,7 @@ def test_rocksdb_state_spills_under_bounded_memory(spark):
             .outputMode("update")
             .option(
                 "checkpointLocation",
-                tempfile.mkdtemp(prefix="rocksdb_perf_ckpt_"),
+                str(tmp_path / "ckpt"),
             )
             .queryName(f"rocksdb_perf_{uuid.uuid4().hex[:8]}")
             .trigger(availableNow=True)

@@ -1,5 +1,10 @@
 """Snapshot log / time travel / compaction invariants."""
 
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
 from iceberg_kafka_playgroud_spark import snapshots as S
 
 
@@ -103,3 +108,52 @@ def test_rollback_preserves_history_and_moves_pointer(spark):
         sn.read_snapshot(spark, td, 6).count()
         == sn.read_snapshot(spark, td, 2).count() + 100
     )
+
+
+def _mor_table(spark, t):
+    """200 fabric rows, then an equality delete of id % 10 == 0: 180 live."""
+    S.commit_append(spark, t, S._fabric_slice(spark, 0, 200))
+    idx = ((F.col("timestamp") - 1740787200000) / 5000).cast("long")
+    keys = S._fabric_slice(spark, 0, 200).where(idx % 10 == 0)
+    S.commit_equality_delete(spark, t, keys.select("timestamp"), ["timestamp"])
+    assert S.read_snapshot(spark, t).count() == 180
+
+
+def _append_then_rollback(spark, t):
+    S.commit_append(spark, t, S._fabric_slice(spark, 200, 300))
+    return S.rollback_to(t, 2)
+
+
+@pytest.mark.parametrize(
+    "commit, live",
+    [
+        (S.rewrite_data_files, 180),
+        (lambda spark, t: S.delete_where(spark, t, F.col("user_id") == "user_1"), 179),
+        # ids 195-199 are live and replaced, 200-204 are inserted
+        (
+            lambda spark, t: S.merge_upsert(
+                spark, t, S._fabric_slice(spark, 195, 205), "timestamp"
+            ),
+            185,
+        ),
+        (_append_then_rollback, 180),
+    ],
+    ids=["compaction", "cow_delete", "merge", "rollback"],
+)
+def test_commits_keep_equality_deletes(spark, tmp_path, commit, live):
+    """Every commit on a merge-on-read table keeps the deleted rows
+    deleted: rewrites read live rows, rollback restores the target's
+    delete files."""
+    t = str(tmp_path / "tbl")
+    _mor_table(spark, t)
+    sid = commit(spark, t)
+    assert S.read_snapshot(spark, t, sid).count() == live
+
+
+def test_expire_keeps_live_delete_files(spark, tmp_path):
+    t = str(tmp_path / "tbl")
+    _mor_table(spark, t)
+    S.expire_snapshots(spark, t, keep_last=1)
+    (delete_file,) = S.load_manifest(t, 2)["delete_files"]
+    assert os.path.exists(os.path.join(t, S.DATA_DIR, delete_file["path"]))
+    assert S.read_snapshot(spark, t).count() == 180

@@ -31,42 +31,26 @@ sys.path.insert(0, str(ROOT))
 # EDIT EACH ROUND: the round being prepared (enforces the
 # run-at-round-start invariant: this round's CORRECTNESS file must
 # not exist yet, or the staleness ordering would double-credit it).
-ROUND = 18
+ROUND = 19
 
 # the driver's correctness window: the first WINDOW _PRIORITY entries
 WINDOW = 50
 
 # EDIT EACH ROUND: this round's dirty set, most-critical first.
-# r18: transitive consumers of this round's optimization commits
-# (AST call-graph trace from the registry to the changed functions:
-# the minhash verify cascade, the CC loop symmetrization, the
-# co-purchase pair packing, the trade-edge/dbscan symmetrization,
-# the simhash/payload/grams scan spreads, the PQ qrow paths, and the
-# rebalance single-slice RDD).  Headline bench queries first.
+# r19: snapshots.py's commit and read paths were folded into one each
+# (_manifest/_publish, read_snapshot with the equality-delete apply),
+# so every registry entry that commits or reads a snapshot table is
+# dirty: the merge-on-read, rewrite, rollback and expiry paths first,
+# then the append/read-only lifecycles and the streaming commit loop.
 DIRTY = [
-    # headline rows whose executed plan changed
-    "dedup_connected_components", "dedup_cluster_canonical",
-    "dedup_incremental_cc", "dedup_minhash_lsh", "dedup_weighted_jaccard",
-    "dedup_similarity_histogram", "dedup_simhash", "dedup_simhash_hamming",
-    "graph_triangle_count", "graph_label_propagation",
-    "embedding_dbscan_core", "ann_pq_adc_topk", "ann_ivf_rebalance",
-    "multimodal_phash_near_dup", "text_boilerplate_coverage",
-    # registry consumers of the same changed builds
-    "dedup_incremental_minhash", "dedup_cluster_stats",
-    "dedup_cluster_cohesion", "dedup_loss_by_source",
-    "dedup_lexical_semantic_eval", "decontaminate_fuzzy_minhash",
-    "stream_incremental_dedup", "stream_decontaminate_gate",
-    "embedding_cluster_components", "embedding_cluster_canonical",
-    "item_item_cosine", "basket_association_rules",
-    "graph_link_prediction", "graph_kcore_peel", "graph_pagerank",
-    "graph_bfs_reachability",
-    "ann_ivfpq_residual_topk", "ann_topk_ivf", "ann_ivf_nprobe_curve",
-    "ann_ivf_balance_audit", "ann_index_persist_probe",
-    "multimodal_payload_dedup", "multimodal_audio_fingerprint",
-    "multimodal_scene_changes", "multimodal_silence_trim",
-    "multimodal_aspect_bucket", "multimodal_color_histogram",
-    "multimodal_features", "multimodal_frame_sample",
-    "multimodal_resize", "multimodal_audio_rms",
+    "snapshot_mor_read", "snapshot_expire", "snapshot_orphan_audit",
+    "snapshot_rollback", "snapshot_delete_rows", "snapshot_upsert_rows",
+    "snapshot_time_travel", "snapshot_sorted_rewrite",
+    "snapshot_partition_evolution", "snapshot_wap_publish",
+    "snapshot_changelog_diff", "snapshot_incremental_view_maintenance",
+    "snapshot_incremental_read", "snapshot_files",
+    "snapshot_metadata_only_count", "snapshot_file_size_audit",
+    "snapshot_branch_tag", "stream_snapshot_ingest",
 ]
 
 
