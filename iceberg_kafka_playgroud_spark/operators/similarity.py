@@ -45,10 +45,23 @@ The LSH sketch goes further: embeddings are quantized to integers
 (floor(x·1000)) and projected through a ±1 hyperplane matrix derived
 from md5, so every sketch bit is integer arithmetic — bit-identical
 across Spark, NumPy, and DuckDB regardless of summation order.
+
+Fixed-point vectors: k-means, product quantization (PQ), IVF-PQ,
+power iteration, SemDeDup and the per-dimension audits compute in one
+int64 format, q = floor(x·PI_XSCALE + 0.5), so every distance, mean
+and Gram product is integer-exact and every oracle replays it
+bit-for-bit.  One section below owns that format: ``fixed_point`` is
+the quantizer, ``_quantized`` the one cached (vec_id, qx) corpus
+(owned by its session memo — no operator unpersists it, because Spark
+caches by plan and an unpersist would drop every other holder's copy
+too), ``_nearest`` the integer-L2 argmin over a codebook, ``_lloyd``
+the one Lloyd loop (PQ's subspaces; k-means is one subspace), and
+``_query_row`` the PQ query vector's lookup.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 import shutil
@@ -206,6 +219,172 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+# --- fixed-point vectors: the one owner of the int64 format -------------
+
+PI_XSCALE = 1000  # embedding fixed-point scale
+
+# (applicationId, sf) → the cached (vec_id, qx) corpus
+_QUANTIZED_MEMO = session_memo("derived", release=unpersist_frames)
+
+
+def fixed_point(arr: Column) -> Column:
+    """An embedding array as int64 fixed-point: q = floor(x·PI_XSCALE
+    + 0.5) per element — exact in IEEE, identical in every engine."""
+    return F.transform(
+        arr,
+        lambda x: F.floor(x.cast("double") * PI_XSCALE + F.lit(0.5)).cast(
+            "long"
+        ),
+    )
+
+
+def _quantized(spark: SparkSession, sf: str) -> DataFrame:
+    """The quantized corpus (vec_id, qx), cached once per session × sf
+    for every k-means, PQ, IVF-PQ and power-iteration caller.  The memo
+    owns the cache: a reset releases it, and no caller unpersists it —
+    Spark caches by plan, so one caller's unpersist would drop it from
+    under the others."""
+    key = (spark.sparkContext.applicationId, sf.rstrip("/"))
+    if key not in _QUANTIZED_MEMO:
+        _QUANTIZED_MEMO[key] = (
+            load_table(spark, sf, "embeddings")
+            .select("vec_id", fixed_point(F.col("embedding")).alias("qx"))
+            .cache()
+        )
+    return _QUANTIZED_MEMO[key]
+
+
+def _nearest(vec_sql: str, book: dict) -> Column:
+    """struct(dist, cid) of the codeword in ``book`` (cid → int list)
+    nearest to the int64 array SQL expression ``vec_sql``: integer
+    Σ(v−c)² distances, ties broken on (dist, cid) — a total order, so
+    training, encoding and every oracle pick the same codeword."""
+    # Built as ONE SQL string parsed JVM-side: the K×DIM centroid
+    # literals as py4j Column algebra cost ~2 s of driver round trips
+    # PER BUILD (measured r12 — 75% of the k-means/PQ recompute
+    # totals); the parsed expression tree and execution plan are
+    # identical.
+    structs = ", ".join(
+        f"struct({_l2_sql(vec_sql, book[j])} AS dist, {j} AS cid)"
+        for j in sorted(book)
+    )
+    return F.expr(f"array_min(array({structs}))")
+
+
+def _l2_sql(vec_sql: str, codeword: list) -> str:
+    """Integer Σ(v−c)² of an int64 array SQL expression against a
+    literal codeword."""
+    arr = ", ".join(f"{int(c)}L" for c in codeword)
+    return (
+        f"aggregate(zip_with({vec_sql}, array({arr}), "
+        "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
+    )
+
+
+def _l2(a: list, b: list) -> int:
+    """Driver-side twin of ``_l2_sql``."""
+    return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+
+def _adc(queries: dict, books: list, cell: Column) -> Column:
+    """Asymmetric PQ distance Σ_m d(q_m, books[m][code_m]) as a lookup
+    into ONE driver-computed literal map (constant, O(cells·M·K) — no
+    distance-table join): ``queries`` maps a cell id to the query
+    vector scored in it (flat PQ: {0: q}; IVF-PQ: each probed cell's
+    query residual), keyed cell·(M·K) + m·K + code."""
+    w, span = len(books[0][0]), len(books) * PQ_CODES
+    lut = F.expr(
+        "map("
+        + ", ".join(
+            f"{c * span + m * PQ_CODES + j}, "
+            f"{_l2(q[m * w : (m + 1) * w], cw)}L"
+            for c, q in queries.items()
+            for m, book in enumerate(books)
+            for j, cw in book.items()
+        )
+        + ")"
+    )
+    terms = [
+        F.element_at(lut, cell * span + m * PQ_CODES + F.col(f"code_{m}"))
+        for m in range(len(books))
+    ]
+    return functools.reduce(lambda a, b: a + b, terms).cast("long")
+
+
+def _codes(books: list) -> list:
+    """Per subspace m, the cid of ``books[m]``'s codeword nearest to
+    the m-th equal-width slice of ``qx`` (the PQ code columns)."""
+    w = len(books[0][0])
+    return [
+        _nearest(f"slice(qx, {m * w + 1}, {w})", book)["cid"]
+        for m, book in enumerate(books)
+    ]
+
+
+def _lloyd(base: DataFrame, k: int, n_sub: int, iters: int):
+    """Lloyd's algorithm over a (vec_id, qx) frame split into ``n_sub``
+    independent equal-width subspaces — PQ's sub-codebooks; k-means is
+    the ``n_sub=1`` case.  Seeds are the k lowest vec_ids; each round
+    assigns by ``_nearest`` and re-quantizes every (subspace, cell,
+    dim) mean as floor(s/n + 0.5), the same two IEEE ops the oracles
+    run; an empty cell receives no row and keeps its codeword.  Returns
+    (seed_rows, books) with books[m] = {cid: codeword}.
+
+    Each round fuses ALL subspaces into ONE aggregation job: a single
+    scan emits (m, cid_m, pos, q) via one explode and partial-aggregates
+    map-side — ``iters`` jobs in total, not n_sub·iters (the
+    per-stage-floor fix from the MMR rerank rewrite, NOTES round-8
+    lesson #2).  Centroids are driver state, O(k·dim); the corpus
+    is scanned, never collected.
+    """
+    seed_rows = base.orderBy("vec_id").limit(k).collect()
+    w = len(seed_rows[0]["qx"]) // n_sub
+    books = [
+        {
+            j: [int(q) for q in r["qx"][m * w : (m + 1) * w]]
+            for j, r in enumerate(seed_rows)
+        }
+        for m in range(n_sub)
+    ]
+    for _ in range(iters):
+        fused = F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(m).alias("m"),
+                        code.alias("cid"),
+                        F.slice("qx", m * w + 1, w).alias("sub"),
+                    )
+                    for m, code in enumerate(_codes(books))
+                ]
+            )
+        ).alias("e")
+        sums = (
+            base.select(fused)
+            .select("e.m", "e.cid", F.posexplode("e.sub").alias("pos", "q"))
+            .groupBy("m", "cid", "pos")
+            .agg(F.sum("q").alias("s"), F.count("*").alias("n"))
+            .collect()
+        )
+        for r in sums:
+            books[r["m"]][r["cid"]][r["pos"]] = int(
+                math.floor(int(r["s"]) / int(r["n"]) + 0.5)
+            )
+    return seed_rows, books
+
+
+def _query_row(base: DataFrame, seed_rows: list) -> list:
+    """The PQ query vector (vec_id PQ_QUERY_VEC) of a quantized frame.
+    Seeds are the lowest vec_ids and ids are dense from 0, so the query
+    row is usually among the seed rows already collected — reusing it
+    skips a filter+collect job per build (r17 job-floor pass); a corpus
+    without it in the seed pays that one job."""
+    hit = next((r for r in seed_rows if r["vec_id"] == PQ_QUERY_VEC), None)
+    if hit is None:
+        hit = base.filter(F.col("vec_id") == PQ_QUERY_VEC).collect()[0]
+    return [int(v) for v in hit["qx"]]
+
+
 def _topk_cosine(spark: SparkSession, sf: str, proj) -> DataFrame:
     """Brute-force per-query top-k over ``proj(embedding)`` — ONE
     definition of the query filter / broadcast cross / round-6 cosine
@@ -235,24 +414,30 @@ def ann_topk_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
     return _topk_cosine(spark, sf, lambda e: e)
 
 
+def _query_rows(em: DataFrame) -> list:
+    """The ANN query set (vec_id < N_QUERIES) collected to the driver.
+    The broadcast pattern is only valid while it fits there, so past
+    MAX_QUERY_ROWS this raises instead of OOMing the driver."""
+    rows = (
+        em.filter(F.col("vec_id") < N_QUERIES)
+        .limit(MAX_QUERY_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > MAX_QUERY_ROWS:
+        raise ValueError(
+            f"query set exceeds {MAX_QUERY_ROWS} rows; "
+            "use a join-based ANN variant instead of driver broadcast"
+        )
+    return rows
+
+
 def ann_topk_blocked(spark: SparkSession, sf: str) -> DataFrame:
     """NumPy-matmul ANN over Arrow batches; identical output contract
     (and oracle) as the brute-force baseline."""
     import numpy as np
 
     em = load_table(spark, sf, "embeddings")
-    qrows = (
-        em.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .limit(MAX_QUERY_ROWS + 1)
-        .collect()
-    )
-    # the broadcast pattern is only valid while the query set fits on
-    # the driver — fail loudly instead of OOMing if it ever grows
-    assert len(qrows) <= MAX_QUERY_ROWS, (
-        f"query set exceeds {MAX_QUERY_ROWS} rows; "
-        "use a join-based ANN variant instead of driver broadcast"
-    )
+    qrows = _query_rows(em.select("vec_id", "embedding"))
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     q_mat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
     q_norm = np.linalg.norm(q_mat, axis=1)
@@ -721,13 +906,8 @@ def _ivf_probe(spark, em, corpus, cent_ids, cent_mat):
     import numpy as np
 
     # probe cells for the tiny query set: computed driver-side from the
-    # same codebook (the query set is bounded — see ann_topk_blocked)
-    q_rows = (
-        em.filter(F.col("vec_id") < N_QUERIES)
-        .limit(MAX_QUERY_ROWS + 1)
-        .collect()
-    )
-    assert len(q_rows) <= MAX_QUERY_ROWS
+    # same codebook (the query set is bounded — see _query_rows)
+    q_rows = _query_rows(em)
     q_mat = np.array([r["vec"] for r in q_rows], dtype=np.float64)
     q_sims = _cell_sim_matrix(q_mat, cent_mat)
     probe_tuples = []
@@ -864,12 +1044,7 @@ def embedding_norm_outliers(spark: SparkSession, sf: str) -> DataFrame:
     broadcast; per-label outlier counts come from one rollup."""
     em = load_table(spark, sf, "embeddings")
     q2 = F.aggregate(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * QUANT + F.lit(0.5)).cast(
-                "long"
-            ),
-        ),
+        fixed_point(F.col("embedding")),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v * v,
     )
@@ -990,7 +1165,6 @@ def embedding_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
 
 
 PI_ITERS = 3  # power-iteration rounds (fixture spectrum converges fast)
-PI_XSCALE = 1000  # embedding fixed-point scale
 PI_VSCALE = 1_000_000  # iterate fixed-point scale
 
 
@@ -1009,21 +1183,13 @@ def embedding_top_component(spark: SparkSession, sf: str) -> DataFrame:
     loop, never an O(n) materialization. int64 bound: per-dim sums are
     ≤ n·max|qx|·max|c| ≈ n·4·10³·2.6·10¹¹ worst-case, i.e. exhausted
     near n ≈ 10⁴ adversarial max-magnitude rows — but real embeddings
-    are zero-mean, so sums grow ~√n and the 2⁶² assert below is the
+    are zero-mean, so sums grow ~√n and the 2⁶² check below is the
     honest guard; on trips, re-scale PI_XSCALE or switch the sum to
     decimal(38,0).
     """
     d_dim = EMB_DIM
-    # cache: the loop re-consumes this frame once per round; without
-    # it each round re-scans and re-quantizes the corpus from parquet
-    base = load_table(spark, sf, "embeddings").select(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(
-                x.cast("double") * PI_XSCALE + F.lit(0.5)
-            ).cast("long"),
-        ).alias("qx")
-    ).cache()
+    # the cached corpus: the loop re-consumes it once per round
+    base = _quantized(spark, sf)
     v = [1.0 / math.sqrt(d_dim)] * d_dim
     for _ in range(PI_ITERS):
         qv = F.array(
@@ -1051,15 +1217,15 @@ def embedding_top_component(spark: SparkSession, sf: str) -> DataFrame:
         sums = [0] * d_dim
         for r in rows:
             sums[r["pos"]] = int(r["s"])
-        assert max(abs(s) for s in sums) < 2**62, (
-            "power-iteration int64 accumulator near overflow; "
-            "re-scale PI_XSCALE for this corpus size"
-        )
+        if max(abs(s) for s in sums) >= 2**62:
+            raise OverflowError(
+                "power-iteration int64 accumulator near overflow; "
+                "re-scale PI_XSCALE for this corpus size"
+            )
         # exact integer norm²; float conversion + sqrt round identically
         # in every IEEE engine
         nrm = math.sqrt(sum(s * s for s in sums))
         v = [float(s) / nrm for s in sums]
-    base.unpersist()
     return spark.createDataFrame(
         [(j, v[j]) for j in range(d_dim)], "pos int, loading double"
     )
@@ -1069,40 +1235,17 @@ KM_K = 8  # clusters
 KM_ITERS = 2  # Lloyd update rounds (final stats on the updated model)
 
 
-# trained model memo per (applicationId, sf): k-means is
-# train-once / assign-many — every production pipeline persists the
+# trained model memo per (applicationId, sf, KM_K, KM_ITERS): k-means
+# is train-once / assign-many — every production pipeline persists the
 # model rather than re-running Lloyd per consumer. The loop costs
 # ~3 driver-synchronized jobs whose dominant cost is Catalyst codegen
 # of the K×dim assignment expression, so re-training per call would
 # multiply that fixed cost into every dependent operator
 # (embedding_kmeans_lloyd, dedup_semantic_semdedup) and every warm
-# bench run. Deterministic model → memoization cannot change results.
+# bench run. Deterministic model → memoization cannot change results;
+# the key carries the constants training reads, so a patched KM_ITERS
+# trains its own model instead of hitting the default one.
 _KM_MODEL_MEMO = session_memo("derived", release=unpersist_frames)
-
-
-def _km_assign_frame(base: DataFrame, cents: dict) -> DataFrame:
-    """Nearest-centroid assignment of a (vec_id, qx) frame against a
-    literal codebook: integer Σ(qx−c)² distances, (dist, cid)
-    tie-break via array_min over structs — the one definition of the
-    assignment expression, shared by the Lloyd training rounds and the
-    streaming per-batch assigner so they can never diverge."""
-    # Built as ONE SQL string parsed JVM-side: the K×DIM centroid
-    # literals as py4j Column algebra cost ~2 s of driver round trips
-    # PER BUILD (measured r12 — 75% of the k-means/PQ recompute
-    # totals); the parsed expression tree and execution plan are
-    # identical.
-    structs = ", ".join(
-        "struct(aggregate(zip_with(qx, array({arr}), "
-        "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x) "
-        "AS dist, {j} AS cid)".format(
-            arr=", ".join(f"{int(c)}L" for c in cents[j]), j=j
-        )
-        for j in sorted(cents)
-    )
-    best = F.expr(f"array_min(array({structs}))")
-    return base.select(
-        "vec_id", "qx", best["cid"].alias("cid"), best["dist"].alias("dist")
-    )
 
 
 def _kmeans_final_assign(
@@ -1110,60 +1253,23 @@ def _kmeans_final_assign(
 ) -> tuple[DataFrame, dict]:
     """Shared Lloyd's loop: returns the FINAL assignment frame
     (vec_id, qx, cid, dist) plus the trained centroid dict — one
-    definition of the quantize/assign/update recipe so
-    ``embedding_kmeans_lloyd`` and ``dedup_semantic_semdedup`` can
-    never train different models.  See ``embedding_kmeans_lloyd`` for
-    the parity recipe and scale shape.
+    model so ``embedding_kmeans_lloyd``, ``dedup_semantic_semdedup``
+    and the streaming cell assigner can never train different ones.
+    See ``embedding_kmeans_lloyd`` for the parity recipe and scale
+    shape.
     """
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"))
-    memo = _KM_MODEL_MEMO.get(key)
-    if memo is not None:
-        return memo
-    base = (
-        load_table(spark, sf, "embeddings")
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.floor(
-                    x.cast("double") * PI_XSCALE + F.lit(0.5)
-                ).cast("long"),
-            ).alias("qx"),
-        )
-        .cache()
-    )
-    seed_rows = base.orderBy("vec_id").limit(KM_K).collect()
-    cents: dict[int, list[int]] = {
-        j: [int(q) for q in r["qx"]] for j, r in enumerate(seed_rows)
-    }
-
-    def assign():
-        return _km_assign_frame(base, cents)
-
-    for _ in range(KM_ITERS):
-        sums = (
-            assign()
-            .select("cid", F.posexplode("qx").alias("pos", "q"))
-            .groupBy("cid", "pos")
-            .agg(F.sum("q").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        for r in sums:
-            # rounded integer mean: ONE double division + floor(x+0.5),
-            # the same two IEEE ops the oracle runs — empty clusters
-            # simply keep their previous centroid (no row arrives)
-            cents[r["cid"]][r["pos"]] = int(
-                math.floor(int(r["s"]) / int(r["n"]) + 0.5)
-            )
-    # cache the assignment: it is the fan-out point every consumer
-    # scans (doc-count-sized, negligible next to the corpus). Eagerly
-    # materialize it so the training-time quantized frame can be
-    # unpersisted — keeping both would pin a redundant corpus-sized
-    # cache in executor storage for the application lifetime.
-    assigned = assign().cache()
-    assigned.count()
-    base.unpersist()
-    _KM_MODEL_MEMO[key] = (assigned, cents)
+    key = (spark.sparkContext.applicationId, sf.rstrip("/"), KM_K, KM_ITERS)
+    if key not in _KM_MODEL_MEMO:
+        base = _quantized(spark, sf)
+        _, (cents,) = _lloyd(base, KM_K, 1, KM_ITERS)
+        best = _nearest("qx", cents)
+        # the assignment is the fan-out point every consumer scans: a
+        # cache the first consumer's action fills (the streaming
+        # assigner only needs the centroids and never fills it)
+        assigned = base.select(
+            "vec_id", "qx", best["cid"].alias("cid"), best["dist"].alias("dist")
+        ).cache()
+        _KM_MODEL_MEMO[key] = (assigned, cents)
     return _KM_MODEL_MEMO[key]
 
 
@@ -2031,154 +2137,46 @@ PQ_ITERS = 2  # Lloyd rounds per subspace codebook
 PQ_TOP = 10
 PQ_QUERY_VEC = 0  # query = vector 0, consistent with HYBRID_QUERY_DOC
 
-# trained PQ models per (session, sf, variant...): codes/codebook
-# tuples, the cached frames they train on, and the query rows
+# trained PQ models, one entry per model: (session, sf, variant,
+# every constant its training and query row read) → the cached code
+# frames, codebooks and query row
 _PQ_MODEL_MEMO = session_memo("derived", release=unpersist_frames)
 
 
-def _pq_train_encode(spark: SparkSession, sf: str):
-    """Train PQ_M independent sub-codebooks (the per-subspace Lloyd
-    recipe of ``_kmeans_final_assign``, bit-exact: int64 fixed-point,
-    rounded-integer-mean updates, (dist, cid) tie-break) and encode
-    every vector to PQ_M small codes. Returns (codes_df, codebooks)
-    where codes_df = (vec_id, qx, code_0..code_{M-1}).
+def _pq_model(spark: SparkSession, sf: str):
+    """Train PQ_M independent sub-codebooks over the quantized corpus
+    (``_lloyd`` with PQ_M subspaces) and encode every vector to PQ_M
+    small codes. Returns (codes, books, qrow) where codes = (vec_id,
+    qx, code_0..code_{M-1}).
 
-    Scale: training cost is M small driver-synchronized aggregations
-    over SUBDIM-wide slices (cheaper than one full-dim k-means);
-    encoding is a narrow pass — the codebook is an O(M·K·SUBDIM)
-    literal expression, no shuffle, and the 8-byte code tuple replaces
-    the 64-float vector in everything downstream (the memory-bound win
-    PQ exists for: a 100 TB embedding corpus compresses ~32× before
-    the distance pass).
+    Scale: training is PQ_ITERS fused aggregations over SUBDIM-wide
+    slices (cheaper than one full-dim k-means); encoding is a narrow
+    pass — the codebook is an O(M·K·SUBDIM) literal expression, no
+    shuffle, and the 8-byte code tuple replaces the 64-float vector in
+    everything downstream (the memory-bound win PQ exists for: a
+    100 TB embedding corpus compresses ~32× before the distance pass).
     """
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"))
-    memo = _PQ_MODEL_MEMO.get(key)
-    if memo is not None:
-        return memo
-    base = (
-        load_table(spark, sf, "embeddings")
-        .select(
+    key = (
+        spark.sparkContext.applicationId, sf.rstrip("/"), "pq",
+        PQ_M, PQ_CODES, PQ_ITERS, PQ_QUERY_VEC,
+    )
+    if key not in _PQ_MODEL_MEMO:
+        base = _quantized(spark, sf)
+        seed_rows, books = _lloyd(base, PQ_CODES, PQ_M, PQ_ITERS)
+        codes = base.select(
             "vec_id",
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.floor(
-                    x.cast("double") * PI_XSCALE + F.lit(0.5)
-                ).cast("long"),
-            ).alias("qx"),
-        )
-        .cache()
-    )
-    _PQ_MODEL_MEMO[(*key, "base")] = base
-    return _pq_train_on(base, key, raw_seed=True)
-
-
-def _pq_sub_assign_expr(m: int, cents: dict):
-    """struct(dist, cid) argmin of subspace ``m``'s slice of ``qx``
-    against a literal sub-codebook — the `_km_assign_frame` expression
-    applied to a slice, so the recipe (integer Σ(qx−c)², (dist, cid)
-    tie-break) stays the single shared definition."""
-    lo = m * PQ_SUBDIM
-    # ONE SQL string parsed JVM-side (same rationale and identical
-    # plan as `_km_assign_frame`'s rewrite — py4j literal algebra cost
-    # ~2 s per build for the M×K×SUBDIM codebook)
-    sub = f"slice(qx, {lo + 1}, {PQ_SUBDIM})"
-    structs = ", ".join(
-        "struct(aggregate(zip_with({sub}, array({arr}), "
-        "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x) "
-        "AS dist, {j} AS cid)".format(
-            sub=sub,
-            arr=", ".join(f"{int(c)}L" for c in cents[j]),
-            j=j,
-        )
-        for j in sorted(cents)
-    )
-    return F.expr(f"array_min(array({structs}))")
-
-
-def _pq_train_on(base: DataFrame, key, raw_seed: bool = False):
-    """Per-subspace Lloyd train + encode over any (vec_id, qx) frame —
-    shared by flat PQ (raw vectors) and IVF-PQ (cell residuals).
-    ``raw_seed=True`` (the raw-vector caller only) additionally stashes
-    the query vector's seed row for ``ann_pq_adc_topk`` — a frame
-    trained on TRANSFORMED vectors (IVF-PQ residuals) must never stash,
-    because any future reader of ``(*key, "seed_qrow")`` would silently
-    get a non-raw vector.
-
-    The PQ_M sub-codebooks are independent, so each Lloyd round fuses
-    ALL subspaces into ONE aggregation job: a single corpus scan emits
-    (m, cid_m, pos, q) via one explode and partial-aggregates map-side
-    — PQ_ITERS jobs total instead of PQ_M·PQ_ITERS (the per-stage-floor
-    fix from the MMR rerank rewrite, NOTES round-8 lesson #2). Encoding
-    is likewise one narrow projection computing all code_m argmins in a
-    single pass — zero joins (previously PQ_M shuffle joins)."""
-    memo = _PQ_MODEL_MEMO.get(key)
-    if memo is not None:
-        return memo
-    seed_rows = base.orderBy("vec_id").limit(PQ_CODES).collect()
-    # the ADC query vector usually sits in the seed head (vec ids are
-    # dense from 0) — stash its full qx so ``ann_pq_adc_topk`` skips a
-    # dedicated filter+collect job per recompute (r17; the guard keeps
-    # a corpus without PQ_QUERY_VEC in the seed on the old path)
-    if raw_seed:
-        for r in seed_rows:
-            if int(r["vec_id"]) == PQ_QUERY_VEC:
-                _PQ_MODEL_MEMO[(*key, "seed_qrow")] = [
-                    int(v) for v in r["qx"]
-                ]
-                break
-    books: list[dict[int, list[int]]] = [
-        {
-            j: [int(q) for q in r["qx"][m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]]
-            for j, r in enumerate(seed_rows)
-        }
-        for m in range(PQ_M)
-    ]
-    for _ in range(PQ_ITERS):
-        fused = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        _pq_sub_assign_expr(m, books[m])["cid"].alias("cid"),
-                        F.slice(
-                            "qx", m * PQ_SUBDIM + 1, PQ_SUBDIM
-                        ).alias("sub"),
-                    )
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("e")
-        sums = (
-            base.select(fused)
-            .select("e.m", "e.cid", F.posexplode("e.sub").alias("pos", "q"))
-            .groupBy("m", "cid", "pos")
-            .agg(F.sum("q").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        for r in sums:
-            books[r["m"]][r["cid"]][r["pos"]] = int(
-                math.floor(int(r["s"]) / int(r["n"]) + 0.5)
-            )
-    codes = base.select(
-        "vec_id",
-        "qx",
-        *[
-            _pq_sub_assign_expr(m, books[m])["cid"].alias(f"code_{m}")
-            for m in range(PQ_M)
-        ],
-    ).cache()
-    # no eager count: the first consumer's action fills the cache — an
-    # eager count here paid one extra driver-synchronized job per
-    # recompute rep for work the consumer's job performs anyway (r17
-    # job-floor pass).  Where the fill reads from depends on the
-    # caller: flat PQ's parent ``base`` cache (or IVF-PQ's cached
-    # ``res`` residual frame) serves it while registered; after a
-    # bench clearCache() both registrations are gone and the memoized
-    # lazy ``codes`` re-derives from parquet on the first consumer
-    # action — still correct (the codebook literals are frozen in the
-    # plan), the first warm rep just absorbs the encode cost the eager
-    # count used to isolate.  Do NOT re-add the count to "fix" that.
-    _PQ_MODEL_MEMO[key] = (codes, books)
+            "qx",
+            *[c.alias(f"code_{m}") for m, c in enumerate(_codes(books))],
+        ).cache()
+        # no eager count: the first consumer's action fills the cache —
+        # an eager count here paid one extra driver-synchronized job per
+        # recompute rep for work the consumer's job performs anyway (r17
+        # job-floor pass).  After a bench clearCache() the memoized lazy
+        # ``codes`` re-derives from parquet on the first consumer action
+        # — still correct (the codebook literals are frozen in the
+        # plan), the first warm rep just absorbs the encode cost the
+        # eager count used to isolate.  Do NOT re-add the count.
+        _PQ_MODEL_MEMO[key] = (codes, books, _query_row(base, seed_rows))
     return _PQ_MODEL_MEMO[key]
 
 
@@ -2206,59 +2204,17 @@ def ann_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
     codes frame (64 multiply-adds per row beats a second scan +
     join-back), and the top-10 is a single TakeOrdered job.
     """
-    codes, books = _pq_train_encode(spark, sf)
-    qkey = (spark.sparkContext.applicationId, sf.rstrip("/"), "pq_qrow")
-    if qkey not in _PQ_MODEL_MEMO:
-        # the training seed usually contains the query vector (ids are
-        # dense from 0) — reuse its collected row instead of paying a
-        # filter+collect job; the fallback keeps sparse-id corpora
-        # correct
-        seed_hit = _PQ_MODEL_MEMO.get(
-            (spark.sparkContext.applicationId, sf.rstrip("/"), "seed_qrow")
-        )
-        if seed_hit is None:
-            seed_hit = [
-                int(v)
-                for v in codes.filter(F.col("vec_id") == PQ_QUERY_VEC)
-                .select("qx")
-                .collect()[0]["qx"]
-            ]
-        _PQ_MODEL_MEMO[qkey] = seed_hit
-    qrow = _PQ_MODEL_MEMO[qkey]
-    # M×K integer distance table as a literal lookup map
-    adc_entries = []
-    for m in range(PQ_M):
-        lo = m * PQ_SUBDIM
-        qsub = [int(v) for v in qrow[lo : lo + PQ_SUBDIM]]
-        for j, cent in books[m].items():
-            d = sum((a - b) * (a - b) for a, b in zip(qsub, cent))
-            adc_entries.append((m * PQ_CODES + j, d))
-    lut = F.expr(
-        "map("
-        + ", ".join(f"{k}, {int(d)}L" for k, d in adc_entries)
-        + ")"
-    )
-    adc = None
-    for m in range(PQ_M):
-        term = F.element_at(lut, F.col(f"code_{m}") + m * PQ_CODES)
-        adc = term if adc is None else adc + term
+    codes, books, qrow = _pq_model(spark, sf)
     # exact distance in the SAME projection as the ADC score: 64
     # multiply-adds per row is cheaper than a second scan + join, so
     # the whole warm query is ONE TakeOrdered job over the cached
     # codes frame (previously: top-k job + join-back job).
-    qlit = F.expr("array(" + ", ".join(f"{int(v)}L" for v in qrow) + ")")
     return (
         codes.filter(F.col("vec_id") != PQ_QUERY_VEC)
         .select(
             "vec_id",
-            adc.cast("long").alias("pq_dist"),
-            F.aggregate(
-                F.zip_with(
-                    F.col("qx"), qlit, lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("exact_dist"),
+            _adc({0: qrow}, books, F.lit(0)).alias("pq_dist"),
+            F.expr(_l2_sql("qx", qrow)).alias("exact_dist"),
         )
         .orderBy(F.col("pq_dist").asc(), F.col("vec_id").asc())
         .limit(PQ_TOP)
@@ -2267,7 +2223,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
 
 def _pq_sub_ctes(m: int, src: str = "pqbase", adc: bool = True) -> str:
     """Per-subspace unrolled Lloyd (seed → 2 rounds) + final encode,
-    mirroring ``_pq_train_encode`` for subspace ``m``. ``src`` names
+    mirroring ``_pq_model`` for subspace ``m``. ``src`` names
     the (vec_id, qx) CTE to train on; ``adc=False`` skips the flat-PQ
     query distance table (IVF-PQ builds per-cell tables instead)."""
     lo, hi = m * PQ_SUBDIM + 1, (m + 1) * PQ_SUBDIM
@@ -2391,12 +2347,7 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
 
     em, corpus, cent_ids, cent_mat = _ivf_build(spark, sf)
-    q_rows = (
-        em.filter(F.col("vec_id") < N_QUERIES)
-        .limit(MAX_QUERY_ROWS + 1)
-        .collect()
-    )
-    assert len(q_rows) <= MAX_QUERY_ROWS
+    q_rows = _query_rows(em)
     q_mat = np.array([r["vec"] for r in q_rows], dtype=np.float64)
     q_sims = _cell_sim_matrix(q_mat, cent_mat)
     probe_tuples = []
@@ -2576,14 +2527,7 @@ def embedding_dim_variance(spark: SparkSession, sf: str) -> DataFrame:
     the bottom-N is a TakeOrdered over a dimension-sized frame.
     """
     base = load_table(spark, sf, "embeddings").select(
-        F.posexplode(
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.floor(
-                    x.cast("double") * PI_XSCALE + F.lit(0.5)
-                ).cast("long"),
-            )
-        ).alias("dim", "q")
+        F.posexplode(fixed_point(F.col("embedding"))).alias("dim", "q")
     )
     agg = base.groupBy("dim").agg(
         F.count("*").cast("long").alias("n"),
@@ -3310,10 +3254,10 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     Integer-exact end to end (the module's fixed-point recipe): the
     coarse assignment is the k-means integer-L2 argmin
-    (``_km_assign_frame``), residuals are integer subtractions, the
-    residual PQ trains with the shared ``_pq_train_on`` Lloyd, and
-    every ADC entry is an exact int64 — the oracle unrolls the
-    identical pipeline. Output: top-PQ_TOP by (per-cell ADC, vec_id)
+    (``_nearest``), residuals are integer subtractions, the residual
+    PQ trains with the shared ``_lloyd`` and encodes the residual frame
+    in place (cell kept, no join back), and every ADC entry is an
+    exact int64 — the oracle unrolls the identical pipeline. Output: top-PQ_TOP by (per-cell ADC, vec_id)
     with the exact quantized distance for the re-rank audit.
 
     Plan at 100 TB: assignment + residual are one narrow pass; PQ
@@ -3322,29 +3266,14 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
     driver-computed literal map of NPROBE·M·K entries, and the top-k
     is a TakeOrdered.
     """
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"), "ivfpq")
-    memo = _PQ_MODEL_MEMO.get(key)
-    if memo is None:
-        base = (
-            load_table(spark, sf, "embeddings")
-            .select(
-                "vec_id",
-                F.transform(
-                    F.col("embedding"),
-                    lambda x: F.floor(
-                        x.cast("double") * PI_XSCALE + F.lit(0.5)
-                    ).cast("long"),
-                ).alias("qx"),
-            )
-            .cache()
-        )
-        cent_rows = base.orderBy("vec_id").limit(IVFPQ_CELLS).collect()
-        cents = {
-            j: [int(v) for v in r["qx"]] for j, r in enumerate(cent_rows)
-        }
-        assign = _km_assign_frame(base, cents).select(
-            "vec_id", "qx", F.col("cid").alias("cell")
-        )
+    key = (
+        spark.sparkContext.applicationId, sf.rstrip("/"), "ivfpq",
+        IVFPQ_CELLS, PQ_M, PQ_CODES, PQ_ITERS, PQ_QUERY_VEC,
+    )
+    base = _quantized(spark, sf)
+    if key not in _PQ_MODEL_MEMO:
+        # coarse cells: the first IVFPQ_CELLS vectors (zero Lloyd rounds)
+        cent_rows, (cents,) = _lloyd(base, IVFPQ_CELLS, 1, 0)
         centlit = F.expr(
             "array("
             + ", ".join(
@@ -3353,88 +3282,54 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
             )
             + ")"
         )
-        res = assign.select(
+        res = (
+            base.select(
+                "vec_id", "qx", _nearest("qx", cents)["cid"].alias("cell")
+            )
+            .select(
+                "vec_id",
+                "cell",
+                F.zip_with(
+                    "qx",
+                    F.element_at(centlit, F.col("cell") + 1),
+                    lambda a, b: a - b,
+                ).alias("qx"),
+            )
+            .cache()
+        )
+        _, books = _lloyd(res, PQ_CODES, PQ_M, PQ_ITERS)
+        codes = res.select(
             "vec_id",
             "cell",
-            F.zip_with(
-                "qx",
-                F.element_at(centlit, F.col("cell") + 1),
-                lambda a, b: a - b,
-            ).alias("qx"),
+            *[c.alias(f"code_{m}") for m, c in enumerate(_codes(books))],
         ).cache()
-        codes, books = _pq_train_on(
-            res.select("vec_id", "qx"), key + ("pq",)
+        # the query row is raw: looked up among the coarse seeds, never
+        # among the residual frame's
+        _PQ_MODEL_MEMO[key] = (
+            codes, res, cents, books, _query_row(base, cent_rows)
         )
-        codes = codes.join(res.select("vec_id", "cell"), "vec_id").cache()
-        # the coarse-centroid seed rows usually contain the query
-        # vector (ids dense from 0) — reuse the collected row instead
-        # of a dedicated filter+collect job (r17 job-floor pass)
-        qhit = next(
-            (r for r in cent_rows if int(r["vec_id"]) == PQ_QUERY_VEC),
-            None,
-        )
-        qrow = [
-            int(v)
-            for v in (
-                qhit["qx"]
-                if qhit is not None
-                else base.filter(F.col("vec_id") == PQ_QUERY_VEC)
-                .collect()[0]["qx"]
-            )
-        ]
-        _PQ_MODEL_MEMO[key + ("res",)] = res
-        _PQ_MODEL_MEMO[key] = (base, cents, codes, books, qrow)
-    base, cents, codes, books, qrow = _PQ_MODEL_MEMO[key]
+    codes, _, cents, books, qrow = _PQ_MODEL_MEMO[key]
 
-    # probe the query's nearest cells (integer L2, (dist, cid) ties)
-    cell_d = sorted(
-        (
-            sum((a - b) * (a - b) for a, b in zip(qrow, cents[j])),
-            j,
-        )
-        for j in sorted(cents)
-    )[:IVFPQ_NPROBE]
-    probes = [j for _, j in cell_d]
-    # per-cell ADC literal map keyed cell·(M·K) + m·K + code
-    entries = []
-    for cell in probes:
-        rq = [a - b for a, b in zip(qrow, cents[cell])]
-        for m in range(PQ_M):
-            lo = m * PQ_SUBDIM
-            rsub = rq[lo : lo + PQ_SUBDIM]
-            for j, cent in books[m].items():
-                d = sum((a - b) * (a - b) for a, b in zip(rsub, cent))
-                entries.append(
-                    (cell * PQ_M * PQ_CODES + m * PQ_CODES + j, int(d))
-                )
-    lut = F.expr(
-        "map(" + ", ".join(f"{k}, {int(d)}L" for k, d in entries) + ")"
-    )
-    adc = None
-    for m in range(PQ_M):
-        term = F.element_at(
-            lut,
-            F.col("cell") * (PQ_M * PQ_CODES)
-            + m * PQ_CODES
-            + F.col(f"code_{m}"),
-        )
-        adc = term if adc is None else adc + term
+    # probe the query's nearest cells (integer L2, (dist, cid) ties),
+    # each scored with the query's residual against that cell
+    probes = sorted(cents, key=lambda j: (_l2(qrow, cents[j]), j))[:IVFPQ_NPROBE]
+    residuals = {
+        j: [a - b for a, b in zip(qrow, cents[j])] for j in probes
+    }
     top = (
         codes.filter(
             F.col("cell").isin(*probes) & (F.col("vec_id") != PQ_QUERY_VEC)
         )
-        .select("vec_id", "cell", adc.cast("long").alias("pq_dist"))
+        .select(
+            "vec_id",
+            "cell",
+            _adc(residuals, books, F.col("cell")).alias("pq_dist"),
+        )
         .orderBy(F.col("pq_dist").asc(), F.col("vec_id").asc())
         .limit(PQ_TOP)
     )
-    qlit = F.expr("array(" + ", ".join(f"{int(v)}L" for v in qrow) + ")")
     exact = base.select(
-        "vec_id",
-        F.aggregate(
-            F.zip_with(F.col("qx"), qlit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("exact_dist"),
+        "vec_id", F.expr(_l2_sql("qx", qrow)).alias("exact_dist")
     )
     return (
         top.join(exact, "vec_id")

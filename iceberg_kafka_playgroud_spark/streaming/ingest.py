@@ -1204,9 +1204,9 @@ def stream_ann_cell_assign(spark: SparkSession, sf: str) -> DataFrame:
     Lloyd CTE's final assign).
     """
     from ..operators.similarity import (
-        PI_XSCALE,
-        _km_assign_frame,
         _kmeans_final_assign,
+        _nearest,
+        fixed_point,
     )
     from ..schema import load_table
 
@@ -1215,16 +1215,9 @@ def stream_ann_cell_assign(spark: SparkSession, sf: str) -> DataFrame:
     stream = _staged_docs_stream(spark, sf, em, "embs")
 
     def assign_batch(batch_df: DataFrame) -> DataFrame:
-        base = batch_df.select(
-            "vec_id",
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.floor(
-                    x.cast("double") * PI_XSCALE + F.lit(0.5)
-                ).cast("long"),
-            ).alias("qx"),
-        )
-        return _km_assign_frame(base, cents).select("vec_id", "cid")
+        return batch_df.select(
+            "vec_id", fixed_point(F.col("embedding")).alias("qx")
+        ).select("vec_id", _nearest("qx", cents)["cid"].alias("cid"))
 
     return (
         _replay_batches(spark, stream, assign_batch)

@@ -481,19 +481,14 @@ def test_top_component_round_is_combinable(spark, sf_dir):
     # test so a scale/dimension change keeps the pin meaningful.
     from iceberg_kafka_playgroud_spark.operators.similarity import (
         EMB_DIM,
-        PI_XSCALE,
         _PI_QV0_VAL,
+        fixed_point,
     )
     from iceberg_kafka_playgroud_spark.schema import load_table
     from pyspark.sql import functions as F
 
     base = load_table(spark, sf_dir, "embeddings").select(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(
-                x.cast("double") * PI_XSCALE + F.lit(0.5)
-            ).cast("long"),
-        ).alias("qx")
+        fixed_point(F.col("embedding")).alias("qx")
     )
     qv = F.array(*[F.lit(_PI_QV0_VAL).cast("long")] * EMB_DIM)
     c = F.aggregate(
@@ -914,6 +909,22 @@ def test_reset_without_session_unpersists_memo_frames(spark, sf_dir):
     assert _n_persistent_rdds(spark) > base
     plan_cache.clear_materializations()
     assert _n_persistent_rdds(spark) == base
+
+
+def test_kmeans_keeps_shared_quantized_corpus_cached(spark, sf_dir):
+    """PQ and k-means share one cached quantized corpus that neither
+    unpersists: Spark caches by plan, so an unpersist by k-means would
+    drop PQ's copy too and leave PQ's memoized frames re-reading
+    parquet."""
+    from iceberg_kafka_playgroud_spark import plan_cache
+    from iceberg_kafka_playgroud_spark.operators import similarity
+
+    plan_cache.clear_materializations(spark)
+    similarity.ann_pq_adc_topk(spark, sf_dir).collect()
+    similarity.embedding_kmeans_lloyd(spark, sf_dir).collect()
+    corpus = similarity._quantized(spark, sf_dir)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.lookupCachedData(corpus._jdf).isDefined()
 
 
 def test_reset_removes_ivf_index_dir(spark, sf_dir, tmp_path, monkeypatch):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import struct
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -329,7 +330,10 @@ def test_pagerank_mass_conserved_and_positive(spark, sf_dir):
 
 def test_kmeans_inertia_not_worse_than_seed_assignment(spark, sf_dir):
     """Lloyd monotonicity: inertia under the trained (2-round) model
-    must not exceed inertia under the seed centroids."""
+    falls below inertia under the seed centroids.  The patched call
+    must train its own seed-only model without a reset — the model
+    memo keys on KM_ITERS — so a stale hit would compare the trained
+    model with itself."""
     from iceberg_kafka_playgroud_spark.operators import similarity as sim
 
     trained = (
@@ -346,7 +350,25 @@ def test_kmeans_inertia_not_worse_than_seed_assignment(spark, sf_dir):
             .agg(F.sum("inertia"))
             .collect()[0][0]
         )
-    assert trained <= seed
+    assert trained < seed
+
+
+def test_pq_model_memo_keys_on_training_constants(spark, sf_dir):
+    """A patched PQ_ITERS trains its own (seed-only) codebooks without
+    a reset, so the ADC top-10 changes; a model memo blind to the
+    constant would serve the trained model under the new plan key."""
+    import unittest.mock as mock
+
+    from iceberg_kafka_playgroud_spark.operators import similarity as sim
+
+    def top():
+        rows = sim.ann_pq_adc_topk(spark, sf_dir).collect()
+        return [r["vec_id"] for r in rows]
+
+    trained = top()
+    with mock.patch.object(sim, "PQ_ITERS", 0):
+        seed_only = top()
+    assert seed_only != trained
 
 
 def test_phash_near_dup_full_recall_vs_bruteforce(spark, sf_dir):
@@ -705,6 +727,32 @@ def test_lsh_regime_guard_warns_and_raises():
         _w.simplefilter("always")
         sim.check_lsh_regime(0.45, band_bits=4, n_bands=32)
         assert any(issubclass(r.category, RuntimeWarning) for r in rec)
+
+
+@pytest.mark.parametrize(
+    "op", ["ann_topk_blocked", "ann_topk_ivf", "ann_ivf_nprobe_curve"]
+)
+def test_query_set_guard_raises(spark, sf_dir, monkeypatch, op):
+    """The driver-collect guard on the ANN query set raises (an assert
+    would vanish under python -O) once the set passes MAX_QUERY_ROWS."""
+    from iceberg_kafka_playgroud_spark.operators import similarity as sim
+
+    monkeypatch.setattr(sim, "MAX_QUERY_ROWS", 2)
+    with pytest.raises(ValueError, match="query set exceeds 2 rows"):
+        getattr(sim, op)(spark, sf_dir)
+
+
+def test_power_iteration_overflow_guard_raises(spark, sf_dir, monkeypatch):
+    """The power-iteration int64 guard raises, not asserts.  At
+    PI_VSCALE = 3e12 the sf0.001 corpus's largest per-dim sum is
+    ~2^62.15: past the guard's 2^62, still inside int64 (running sums
+    peak at the same ~2^62.15), so the guard, not Spark's overflow
+    check, is what trips."""
+    from iceberg_kafka_playgroud_spark.operators import similarity as sim
+
+    monkeypatch.setattr(sim, "PI_VSCALE", 3 * 10**12)
+    with pytest.raises(OverflowError, match="re-scale PI_XSCALE"):
+        sim.embedding_top_component(spark, sf_dir)
 
 
 def test_lsh_geometry_router():

@@ -42,6 +42,10 @@ WINDOW = 50
 # so every registry entry that commits or reads a snapshot table is
 # dirty: the merge-on-read, rewrite, rollback and expiry paths first,
 # then the append/read-only lifecycles and the streaming commit loop.
+# Also r19: similarity.py's fixed-point path (quantizer, cached corpus,
+# argmin builder, Lloyd loop, query-row lookup) was folded into one,
+# so every k-means, PQ, IVF-PQ and power-iteration consumer and the
+# two per-dimension audits follow the snapshot set.
 DIRTY = [
     "snapshot_mor_read", "snapshot_expire", "snapshot_orphan_audit",
     "snapshot_rollback", "snapshot_delete_rows", "snapshot_upsert_rows",
@@ -51,6 +55,10 @@ DIRTY = [
     "snapshot_incremental_read", "snapshot_files",
     "snapshot_metadata_only_count", "snapshot_file_size_audit",
     "snapshot_branch_tag", "stream_snapshot_ingest",
+    "ann_pq_adc_topk", "ann_ivfpq_residual_topk", "embedding_kmeans_lloyd",
+    "dedup_semantic_semdedup", "stream_ann_cell_assign",
+    "embedding_top_component", "embedding_dim_variance",
+    "embedding_norm_outliers",
 ]
 
 
