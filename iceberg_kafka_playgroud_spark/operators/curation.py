@@ -29,13 +29,15 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint
-from ..plan_cache import plan_memo
+from ..plan_cache import cached, plan_memo
 from ..schema import load_table
 from ..tmpdirs import tmpdir_reclaimed_at_exit
 from .dedup import (
     _MINHASH_BANDS_CTE,
     _SHINGLES_CTE,
     JACCARD_THRESHOLD,
+    minhash_bands,
+    minhash_probe,
     shingle_set,
 )
 from .text import tokens
@@ -1262,6 +1264,41 @@ FROM ranked
 """
 
 
+def contamination_hits(train_docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``(d_tr, source, hit)`` per doc of ``train_docs``: ``hit`` is 1
+    when a ``minhash_probe`` pair joins it to an eval doc —
+    ``stream_decontaminate_gate``'s per-batch body, and
+    ``decontaminate_fuzzy_minhash`` applied to the whole training set."""
+    hits = (
+        pairs.select(F.col("probe").alias("d_tr"))
+        .distinct()
+        .withColumn("hit", F.lit(1))
+    )
+    # no broadcast hint on the hit set: it is contamination-sized,
+    # usually tiny but in principle unbounded (a poisoned corpus), so
+    # AQE picks broadcast vs shuffle from the measured size at runtime
+    return (
+        train_docs.select(F.col("doc_id").alias("d_tr"), "source")
+        .join(hits, "d_tr", "left")
+        .select("d_tr", "source", F.coalesce("hit", F.lit(0)).alias("hit"))
+    )
+
+
+def contamination_rollup(hits: DataFrame) -> DataFrame:
+    """Per-source train / flagged counts of ``contamination_hits`` rows."""
+    return (
+        hits.groupBy("source")
+        .agg(
+            F.count("*").cast("long").alias("n_train"),
+            F.sum("hit").cast("long").alias("n_fuzzy_contaminated"),
+            F.sum(F.when(F.col("hit") == 1, F.col("d_tr")))
+            .cast("long")
+            .alias("contaminated_id_sum"),
+        )
+        .orderBy("source")
+    )
+
+
 def decontaminate_fuzzy_minhash(spark: SparkSession, sf: str) -> DataFrame:
     """Fuzzy benchmark decontamination — the MinHash third pass after
     ``decontaminate_exact`` (hash collision) and
@@ -1271,64 +1308,17 @@ def decontaminate_fuzzy_minhash(spark: SparkSession, sf: str) -> DataFrame:
     copies that survive both cheaper passes (the Dolma/LLM-pipeline
     standard treatment).
 
-    Plan shape mirrors ``dedup_incremental_minhash``: the band split
-    happens BEFORE the join (eval side = build, train side = probe),
-    so candidate generation is an eval×train equi-join on
-    (band_idx, band_val) — never train×train work, and the eval side
-    is corpus-independent-small. Verification (exact Jaccard) runs on
-    candidates only via the shared ``_jaccard_on_candidates``.
+    Plan shape mirrors ``dedup_incremental_minhash``: one cached
+    shingle table and one band table, split BEFORE the join into the
+    eval (build) and train (probe) sides of ``minhash_probe`` — never
+    train×train work, and the eval side is corpus-independent-small.
     """
-    from .dedup import (
-        _cand_count,
-        _jaccard_on_candidates,
-        lsh_bands,
-        minhash_signatures,
-    )
-
     d = load_table(spark, sf, "documents")
-    sh = shingle_set(d).cache()
-    bands = lsh_bands(minhash_signatures(sh))
+    sh = cached(shingle_set(d))
+    bands = minhash_bands(sh)
     is_eval = (F.col("doc_id") % DECON_MOD) == 0
-    eb = bands.filter(is_eval).select(
-        F.col("doc_id").alias("d_ev"), "band_idx", "band_val"
-    )
-    tb = bands.filter(~is_eval).select(
-        F.col("doc_id").alias("d_tr"), "band_idx", "band_val"
-    )
-    cand = (
-        eb.join(tb, ["band_idx", "band_val"])
-        .select("d_ev", "d_tr")
-        .distinct()
-        .cache()  # two consumers: the gate count + the verifier probe
-    )
-    hits = (
-        _jaccard_on_candidates(
-            sh, cand, "d_ev", "d_tr", n_cand=_cand_count(cand)
-        )
-        .select("d_tr")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    train = d.filter(~is_eval).select(
-        F.col("doc_id").alias("d_tr"), "source"
-    )
-    # no broadcast hint on the hit set: it is contamination-sized,
-    # usually tiny but in principle unbounded (a poisoned corpus), so
-    # AQE picks broadcast vs shuffle from the measured size at runtime
-    return (
-        train.join(hits, "d_tr", "left")
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_train"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("long")
-            .alias("n_fuzzy_contaminated"),
-            F.sum(F.when(F.col("hit") == 1, F.col("d_tr")))
-            .cast("long")
-            .alias("contaminated_id_sum"),
-        )
-        .orderBy("source")
-    )
+    pairs = minhash_probe(sh, bands.filter(is_eval), bands.filter(~is_eval))
+    return contamination_rollup(contamination_hits(d.filter(~is_eval), pairs))
 
 
 QUERIES["decontaminate_fuzzy_minhash"] = decontaminate_fuzzy_minhash

@@ -156,6 +156,11 @@ def lsh_bands(sig: DataFrame, k: int = N_HASHES, bands: int = N_BANDS) -> DataFr
     )
 
 
+def minhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_val) LSH band table of a shingle table."""
+    return lsh_bands(minhash_signatures(sh))
+
+
 # Forced-broadcast budgets for candidate-derived frames (candidate
 # pairs, candidate-doc sets, their size/signature/shingle tables): all
 # of them grow with the CANDIDATE volume, not the corpus — a healthy
@@ -178,14 +183,14 @@ WJ_PRUNE_CAND_DOC_PCT = 10
 
 
 # candidate pair count per (session, cand plan) — ``by_plan`` buckets.
-# The count only chooses whether four operators add a broadcast hint
-# (both branches return identical rows), and the candidate set is
-# deterministic for a session's source tables, so the count is a
-# plan-shaping statistic like a footer row count: retained across
-# resets, it runs ONCE per session instead of once per rebuilt plan
-# (a bare tiny-job count still costs a full stage-scheduling round
-# trip).  No release: the cand frame's cache belongs to the plan that
-# built it.
+# The count only chooses whether the candidate consumers add a
+# broadcast hint (both branches return identical rows), and the
+# candidate set is deterministic for a session's source tables, so the
+# count is a plan-shaping statistic like a footer row count: retained
+# across resets, it runs ONCE per session instead of once per rebuilt
+# plan (a bare tiny-job count still costs a full stage-scheduling
+# round trip).  No release: the cand frame's cache belongs to whoever
+# owns its ``cached()`` (a plan entry, or the cached-frame memo).
 _N_CAND_MEMO = session_memo("retained")
 
 
@@ -285,7 +290,7 @@ def _minhash_candidates(spark: SparkSession, sf: str):
     # side re-ran the whole md5 signature pipeline from the cached
     # shingles (r13 event-log profile: two concurrent ~0.4 s
     # md5-heavy stages per recompute, cpu 9 + 3 s across cores)
-    bands = cached(lsh_bands(minhash_signatures(sh)))
+    bands = cached(minhash_bands(sh))
     b1 = bands.alias("a")
     b2 = bands.alias("b")
     cand = (
@@ -334,6 +339,68 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
 NEW_BATCH_MOD, NEW_BATCH_RESIDUE = 10, 3  # doc_id % 10 == 3 → "today's batch"
 
 
+def minhash_probe(
+    sh: DataFrame, ref_bands: DataFrame, probe_bands: DataFrame, per_batch: bool = False
+) -> DataFrame:
+    """Verified ``(ref, probe, jaccard)`` doc pairs of a reference-index
+    probe — the one dataflow behind incremental dedup and fuzzy
+    decontamination, batch and streaming.  Candidates are the
+    ref×probe equi-join on (band_idx, band_val) — never ref×ref or
+    probe×probe work — and ``_jaccard_on_candidates`` verifies them
+    against ``sh``, which holds both sides' shingles.
+
+    A whole-set probe caches its candidates (the gate count and the
+    verifier both read them) and gates the membership broadcast on
+    their count.  A ``per_batch`` probe does neither: each micro-batch
+    is a new plan, and batch size bounds its candidates."""
+    cand = (
+        ref_bands.withColumnRenamed("doc_id", "ref")
+        .join(
+            probe_bands.withColumnRenamed("doc_id", "probe"), ["band_idx", "band_val"]
+        )
+        .select("ref", "probe")
+        .distinct()
+    )
+    n_cand = None
+    if not per_batch:
+        cand = cached(cand)
+        n_cand = _cand_count(cand)
+    return _jaccard_on_candidates(sh, cand, "ref", "probe", n_cand=n_cand)
+
+
+def match_new_docs(new_docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """One row per doc of ``new_docs`` from its ``minhash_probe`` pairs
+    against the old corpus: match count, best Jaccard, and the
+    best-match tie-break (min old doc id among the argmax jaccard,
+    deterministic in both engines) — ``stream_incremental_dedup``'s
+    per-batch body, and ``dedup_incremental_minhash`` applied to the
+    whole new batch."""
+    from pyspark.sql import Window as W
+
+    best_j = F.max("jaccard").over(W.partitionBy("probe"))
+    agg = (
+        pairs.withColumn("best_j", best_j)
+        .groupBy("probe")
+        .agg(
+            F.count("*").alias("n_matches"),
+            F.max("jaccard").alias("best_jaccard"),
+            F.min(
+                F.when(F.col("jaccard") == F.col("best_j"), F.col("ref"))
+            ).alias("best_old_id"),
+        )
+    )
+    return (
+        new_docs.select(F.col("doc_id").alias("probe"))
+        .join(agg, "probe", "left")
+        .select(
+            F.col("probe").alias("new_doc_id"),
+            F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
+            "best_jaccard",
+            "best_old_id",
+        )
+    )
+
+
 def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental (ingest-time) near-dup check: probe a NEW batch of
     documents against the EXISTING corpus without ever comparing
@@ -341,55 +408,17 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     corpus-wide pair join (``dedup_minhash_lsh``) would redo quadratic
     work that was already done on previous days.
 
-    The band split happens BEFORE the join (old side = build, new side
-    = probe), so candidate generation is an old×new equi-join on
-    (band_idx, band_val) only. Verification and scoring touch candidate
-    docs only; the best-match tie-break (min old doc id among argmax
-    jaccard) is deterministic in both engines. One row per new doc,
-    matched or not.
+    One cached corpus shingle table and one band table, split BEFORE
+    the join into the old (build) and new (probe) sides of
+    ``minhash_probe``; verification and scoring touch candidate docs
+    only.  One row per new doc, matched or not (``match_new_docs``).
     """
     d = load_table(spark, sf, "documents")
-    sh = shingle_set(_spread_for_compute(d)).cache()
-    bands = lsh_bands(minhash_signatures(sh))
+    sh = cached(shingle_set(_spread_for_compute(d)))
+    bands = minhash_bands(sh)
     is_new = (F.col("doc_id") % NEW_BATCH_MOD) == NEW_BATCH_RESIDUE
-    nb = bands.filter(is_new).select(
-        F.col("doc_id").alias("d_new"), "band_idx", "band_val"
-    )
-    ob = bands.filter(~is_new).select(
-        F.col("doc_id").alias("d_old"), "band_idx", "band_val"
-    )
-    cand = (
-        ob.join(nb, ["band_idx", "band_val"])
-        .select("d_old", "d_new")
-        .distinct()
-        .cache()
-    )
-    scored = _jaccard_on_candidates(sh, cand, "d_old", "d_new")
-    from pyspark.sql import Window as W
-
-    best_j = F.max("jaccard").over(W.partitionBy("d_new"))
-    agg = (
-        scored.withColumn("best_j", best_j)
-        .groupBy("d_new")
-        .agg(
-            F.count("*").alias("n_matches"),
-            F.max("jaccard").alias("best_jaccard"),
-            F.min(
-                F.when(F.col("jaccard") == F.col("best_j"), F.col("d_old"))
-            ).alias("best_old_id"),
-        )
-    )
-    return (
-        d.filter(is_new)
-        .select(F.col("doc_id").alias("d_new"))
-        .join(agg, "d_new", "left")
-        .select(
-            F.col("d_new").alias("new_doc_id"),
-            F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
-            "best_jaccard",
-            "best_old_id",
-        )
-    )
+    pairs = minhash_probe(sh, bands.filter(~is_new), bands.filter(is_new))
+    return match_new_docs(d.filter(is_new), pairs)
 
 
 NGRAM_DF_CUTOFF = 50
@@ -402,7 +431,7 @@ def _rare_shingle_intersection(spark: SparkSession, sf: str):
     intersection counts — ONE definition so jaccard and containment
     candidates can never desynchronize. Returns (inter, sizes)."""
     d = load_table(spark, sf, "documents")
-    sh = shingle_set(d).cache()
+    sh = cached(shingle_set(d))
     # hot-shingle list is tiny (only shingles shared by >cutoff docs)
     # → broadcast anti-join keeps the pruning narrow
     hot = (
@@ -1265,7 +1294,7 @@ def text_ngram_novelty(spark: SparkSession, sf: str) -> DataFrame:
     rollup; docs with fewer than 3 tokens have no shingles and no row
     (same in the oracle)."""
     d = load_table(spark, sf, "documents")
-    sh = shingle_set(d).cache()
+    sh = cached(shingle_set(d))
     firsts = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         sh.join(firsts, "shingle")
@@ -1535,7 +1564,7 @@ def dedup_minhash_band_skew_audit(spark: SparkSession, sf: str) -> DataFrame:
     """
     d = _spread_for_compute(load_table(spark, sf, "documents"))
     sh = shingle_set(d)
-    bands = lsh_bands(minhash_signatures(sh))
+    bands = minhash_bands(sh)
     sizes = bands.groupBy("band_idx", "band_val").agg(
         F.count("*").alias("s")
     )

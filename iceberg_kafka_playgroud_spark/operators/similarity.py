@@ -1048,7 +1048,7 @@ def embedding_norm_outliers(spark: SparkSession, sf: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, v: acc + v * v,
     )
-    base = em.select("vec_id", "label", q2.alias("norm2")).cache()
+    base = cached(em.select("vec_id", "label", q2.alias("norm2")))
     th = base.agg(
         F.expr("percentile(norm2, array(0.01, 0.99))").alias("q")
     ).select(

@@ -37,7 +37,9 @@ are doc-count-sized tables any production system would persist.
 
 A plan's ``cached()`` intermediates are owned by its entry: dropping
 the entry — with or without a session — unpersists them, and a build
-that raises unpersists the ones it registered before failing.
+that raises unpersists the ones it registered before failing.  A frame
+cached outside any build is owned by one ``"derived"`` memo keyed by
+its logical plan, so every reset releases it too.
 
 Rules for wrapping an operator:
 
@@ -53,7 +55,10 @@ Rules for wrapping an operator:
    monkeypatches a broadcast budget or prune gate gets a fresh build
    (and the patched plan), never a stale hit.
 3. CACHE INTERMEDIATES WITH ``cached()``, never a bare ``.cache()``,
-   so the entry can release them.
+   so a reset can release them: inside a build the plan entry owns
+   them, outside one the session's cached-frame memo does.  Never
+   ``cached()`` a per-micro-batch frame — each batch is a new plan, so
+   the memo would grow once per batch.
 """
 
 from __future__ import annotations
@@ -158,14 +163,27 @@ _PLAN_CACHE = session_memo(
 _TLS = threading.local()
 
 
+def _unpersist_bucket(bucket: list) -> None:
+    """``release`` for ``_CACHED_FRAMES``' ``by_plan`` buckets."""
+    unpersist_frames([frame for _, frame in bucket])
+
+
+# frames ``cached()`` outside any plan build, per (session, logical
+# plan) — ``by_plan`` buckets, so a repeat call returns the frame
+# already cached instead of registering a second handle
+_CACHED_FRAMES = session_memo("derived", release=_unpersist_bucket)
+
+
 def cached(df: DataFrame) -> DataFrame:
-    """``df.cache()`` that also registers the handle with an enclosing
-    ``plan_memo`` build, whose entry then owns it (plain cache
-    otherwise)."""
-    df = df.cache()
+    """``df.cache()`` with an owner that a reset releases: an enclosing
+    ``plan_memo`` build's entry, or outside a build ``_CACHED_FRAMES``
+    (which may return an earlier frame of the same plan — use the
+    return value, by column name)."""
     collect = getattr(_TLS, "collect", None)
-    if collect is not None:
-        collect.append(df)
+    if collect is None:
+        return _CACHED_FRAMES.by_plan(df, df.cache)
+    df = df.cache()
+    collect.append(df)
     return df
 
 

@@ -41,7 +41,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..plan_cache import session_memo
+from ..plan_cache import cached, session_memo
 from ..schema import normalize_event_ts
 from ..session import scoped_conf
 from ..tmpdirs import tmpdir_reclaimed_at_exit
@@ -743,6 +743,41 @@ def stream_anomaly_zscore(spark: SparkSession, sf: str) -> DataFrame:
     return out.groupBy("event_type").agg(F.count("*").alias("n_anomalies"))
 
 
+def _replay_minhash_probe(
+    spark: SparkSession,
+    sf: str,
+    ref_docs: DataFrame,
+    new_docs: DataFrame,
+    subset: str,
+    per_batch: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """Replay ``new_docs`` as a staged 4-file drop zone (one file per
+    trigger — the bounded stand-in for the Kafka doc topic) against a
+    STATIC MinHash index of ``ref_docs``: the index's shingles and
+    bands are cached ONCE and reused by every micro-batch, each batch
+    shingles and bands only its own documents, and ``per_batch`` —
+    the batch operator's own body (``dedup.match_new_docs``,
+    ``curation.contamination_hits``) — probes it.  Batch size bounds
+    per-trigger work."""
+    from ..operators import dedup
+
+    sh_ref = cached(dedup.shingle_set(ref_docs))
+    bands_ref = cached(dedup.minhash_bands(sh_ref))
+
+    def probe(batch_df: DataFrame) -> DataFrame:
+        sh_new = dedup.shingle_set(batch_df)
+        pairs = dedup.minhash_probe(
+            sh_ref.unionByName(sh_new),
+            bands_ref,
+            dedup.minhash_bands(sh_new),
+            per_batch=True,
+        )
+        return per_batch(batch_df, pairs)
+
+    stream = _staged_docs_stream(spark, sf, new_docs, subset)
+    return _replay_batches(spark, stream, probe)
+
+
 def stream_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Ingest-time near-dup gate as a STREAMING query: new documents
     arrive in micro-batches and each batch is probed against the
@@ -765,54 +800,8 @@ def stream_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     d = load_table(spark, sf, "documents")
     is_new = (F.col("doc_id") % dedup.NEW_BATCH_MOD) == dedup.NEW_BATCH_RESIDUE
-    sh_old = dedup.shingle_set(d.filter(~is_new)).cache()
-    bands_old = (
-        dedup.lsh_bands(dedup.minhash_signatures(sh_old))
-        .select(F.col("doc_id").alias("d_old"), "band_idx", "band_val")
-        .cache()
-    )
-    # stage today's documents as a 4-file drop zone (memoized per
-    # session) and replay it one file per trigger — the bounded
-    # stand-in for the Kafka doc topic
-    stream = _staged_docs_stream(spark, sf, d.filter(is_new), "newbatch")
-
-    def probe(batch_df: DataFrame) -> DataFrame:
-        sh_new = dedup.shingle_set(batch_df)
-        nb = dedup.lsh_bands(dedup.minhash_signatures(sh_new)).select(
-            F.col("doc_id").alias("d_new"), "band_idx", "band_val"
-        )
-        cand = (
-            bands_old.join(nb, ["band_idx", "band_val"])
-            .select("d_old", "d_new")
-            .distinct()
-        )
-        scored = dedup._jaccard_on_candidates(
-            sh_old.unionByName(sh_new), cand, "d_old", "d_new"
-        )
-        best_j = F.max("jaccard").over(W.partitionBy("d_new"))
-        agg = (
-            scored.withColumn("best_j", best_j)
-            .groupBy("d_new")
-            .agg(
-                F.count("*").alias("n_matches"),
-                F.max("jaccard").alias("best_jaccard"),
-                F.min(
-                    F.when(F.col("jaccard") == F.col("best_j"), F.col("d_old"))
-                ).alias("best_old_id"),
-            )
-        )
-        return (
-            batch_df.select(F.col("doc_id").alias("d_new"))
-            .join(agg, "d_new", "left")
-            .select(
-                F.col("d_new").alias("new_doc_id"),
-                F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
-                F.col("best_jaccard").cast("double").alias("best_jaccard"),
-                F.col("best_old_id").cast("long").alias("best_old_id"),
-            )
-        )
-
-    return _replay_batches(spark, stream, probe)
+    ref, new = d.filter(~is_new), d.filter(is_new)
+    return _replay_minhash_probe(spark, sf, ref, new, "newbatch", dedup.match_new_docs)
 
 
 def stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
@@ -1262,56 +1251,16 @@ def stream_decontaminate_gate(spark: SparkSession, sf: str) -> DataFrame:
     depend only on (doc, eval index), so micro-batch boundaries cannot
     change the rollup — the batch formulation is the oracle.
     """
-    from ..operators import dedup
-    from ..operators.curation import DECON_MOD
+    from ..operators import curation
     from ..schema import load_table
 
     d = load_table(spark, sf, "documents")
-    is_eval = (F.col("doc_id") % DECON_MOD) == 0
-    sh_eval = dedup.shingle_set(d.filter(is_eval)).cache()
-    bands_eval = (
-        dedup.lsh_bands(dedup.minhash_signatures(sh_eval))
-        .select(F.col("doc_id").alias("d_ev"), "band_idx", "band_val")
-        .cache()
+    is_eval = (F.col("doc_id") % curation.DECON_MOD) == 0
+    ref, new = d.filter(is_eval), d.filter(~is_eval)
+    hits = _replay_minhash_probe(
+        spark, sf, ref, new, "trainset", curation.contamination_hits
     )
-    stream = _staged_docs_stream(spark, sf, d.filter(~is_eval), "trainset")
-
-    def probe(batch_df: DataFrame) -> DataFrame:
-        sh_new = dedup.shingle_set(batch_df)
-        nb = dedup.lsh_bands(dedup.minhash_signatures(sh_new)).select(
-            F.col("doc_id").alias("d_tr"), "band_idx", "band_val"
-        )
-        cand = (
-            bands_eval.join(nb, ["band_idx", "band_val"])
-            .select("d_ev", "d_tr")
-            .distinct()
-        )
-        hits = (
-            dedup._jaccard_on_candidates(
-                sh_eval.unionByName(sh_new), cand, "d_ev", "d_tr"
-            )
-            .select("d_tr")
-            .distinct()
-            .withColumn("hit", F.lit(1))
-        )
-        return (
-            batch_df.select(F.col("doc_id").alias("d_tr"), "source")
-            .join(hits, "d_tr", "left")
-            .select("d_tr", "source", F.coalesce("hit", F.lit(0)).alias("hit"))
-        )
-
-    return (
-        _replay_batches(spark, stream, probe)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_train"),
-            F.sum("hit").cast("long").alias("n_fuzzy_contaminated"),
-            F.sum(F.when(F.col("hit") == 1, F.col("d_tr")))
-            .cast("long")
-            .alias("contaminated_id_sum"),
-        )
-        .orderBy("source")
-    )
+    return curation.contamination_rollup(hits)
 
 
 QUERIES["stream_decontaminate_gate"] = stream_decontaminate_gate

@@ -6,8 +6,11 @@ At 100 TB these properties are the difference between a working plan
 and a dead cluster.
 """
 
+import pytest
+
 from iceberg_kafka_playgroud_spark.operators import (
     advanced,
+    curation,
     dedup,
     relational,
     similarity,
@@ -455,14 +458,22 @@ def test_oov_vocab_topk_and_broadcast_probe(spark, sf_dir):
     assert "partial_count" in plan or "partial_sum" in plan
 
 
-def test_incremental_minhash_splits_before_join(spark, sf_dir):
-    # the old/new split must reach both band-join inputs as filters
-    # (old x new only — never the corpus-wide self-join), and the
+@pytest.mark.parametrize(
+    "op, split",
+    [
+        (dedup.dedup_incremental_minhash, "% 10)"),
+        (curation.decontaminate_fuzzy_minhash, "% 97)"),
+    ],
+    ids=["dedup_incremental_minhash", "decontaminate_fuzzy_minhash"],
+)
+def test_incremental_minhash_splits_before_join(spark, sf_dir, op, split):
+    # the ref/probe split must reach both band-join inputs as filters
+    # (ref x probe only — never the corpus-wide self-join), and the
     # verify stage must broadcast candidates, not shuffle shingles
-    plan = physical_plan(dedup.dedup_incremental_minhash(spark, sf_dir))
+    plan = physical_plan(op(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan
-    assert plan.count("% 10)") >= 2  # both sides filtered pre-join
+    assert plan.count(split) >= 2  # both sides filtered pre-join
 
 
 def test_session_funnel_single_user_partitioning(spark, sf_dir):
@@ -820,6 +831,33 @@ def test_candidate_broadcast_gate_fallback_matches(spark, sf_dir, monkeypatch):
     assert [r.asDict() for r in wj.collect()] == [r.asDict() for r in base_wj]
 
 
+@pytest.mark.parametrize(
+    "op",
+    [dedup.dedup_incremental_minhash, curation.decontaminate_fuzzy_minhash],
+    ids=lambda op: op.__name__,
+)
+def test_reference_probe_gates_broadcast_on_candidates(
+    spark, sf_dir, monkeypatch, op
+):
+    """Both batch reference probes gate the candidate-membership
+    broadcast on the candidate pair count: past the budget (0) the
+    hint is gone from the plan and the rows are unchanged."""
+
+    def hints(df):
+        return df._jdf.queryExecution().analyzed().toString().count(
+            "strategy=broadcast"
+        )
+
+    base = op(spark, sf_dir)
+    assert hints(base) > 0
+    monkeypatch.setattr(dedup, "CAND_BROADCAST_MAX_PAIRS", 0)
+    gated = op(spark, sf_dir)
+    assert hints(gated) == 0
+    assert sorted(map(tuple, gated.collect())) == sorted(
+        map(tuple, base.collect())
+    )
+
+
 SOME_GATE = 7
 
 
@@ -899,13 +937,26 @@ def test_reset_without_session_unpersists_memo_frames(spark, sf_dir):
     the cached frames memos and prepared plans hold."""
     from iceberg_kafka_playgroud_spark import plan_cache
     from iceberg_kafka_playgroud_spark.operators import dedup, similarity
+    from iceberg_kafka_playgroud_spark.streaming import ingest
 
     plan_cache.clear_materializations(spark)
     base = _n_persistent_rdds(spark)
-    similarity.embedding_near_dup_pairs(spark, sf_dir).collect()
-    similarity.ann_pq_adc_topk(spark, sf_dir).collect()
-    similarity.embedding_dbscan_core(spark, sf_dir).collect()
-    dedup.dedup_connected_components(spark, sf_dir).collect()
+    for op in (
+        similarity.embedding_near_dup_pairs,
+        similarity.ann_pq_adc_topk,
+        similarity.embedding_dbscan_core,
+        dedup.dedup_connected_components,
+        # frames cached() outside any plan build
+        dedup.dedup_incremental_minhash,
+        curation.decontaminate_fuzzy_minhash,
+        ingest.stream_incremental_dedup,
+        ingest.stream_decontaminate_gate,
+        similarity.embedding_norm_outliers,
+        dedup.dedup_ngram_jaccard,
+        dedup.text_ngram_novelty,
+        dedup.dedup_similarity_histogram,
+    ):
+        op(spark, sf_dir).collect()
     assert _n_persistent_rdds(spark) > base
     plan_cache.clear_materializations()
     assert _n_persistent_rdds(spark) == base

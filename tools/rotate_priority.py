@@ -46,6 +46,10 @@ WINDOW = 50
 # argmin builder, Lloyd loop, query-row lookup) was folded into one,
 # so every k-means, PQ, IVF-PQ and power-iteration consumer and the
 # two per-dimension audits follow the snapshot set.
+# Also r19: the four reference-index MinHash probes (incremental dedup
+# and fuzzy decontamination, batch and streaming) were folded into one
+# probe path, and ``cached()`` outside a plan build became memo-owned,
+# so those four and the other ops that cache outside a build follow.
 DIRTY = [
     "snapshot_mor_read", "snapshot_expire", "snapshot_orphan_audit",
     "snapshot_rollback", "snapshot_delete_rows", "snapshot_upsert_rows",
@@ -59,6 +63,10 @@ DIRTY = [
     "dedup_semantic_semdedup", "stream_ann_cell_assign",
     "embedding_top_component", "embedding_dim_variance",
     "embedding_norm_outliers",
+    "dedup_incremental_minhash", "decontaminate_fuzzy_minhash",
+    "stream_incremental_dedup", "stream_decontaminate_gate",
+    "dedup_ngram_jaccard", "dedup_containment_pairs", "text_ngram_novelty",
+    "dedup_similarity_histogram",
 ]
 
 
