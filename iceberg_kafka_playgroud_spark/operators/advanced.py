@@ -23,10 +23,22 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint, release_local_checkpoint
-from ..plan_cache import plan_memo, session_memo, unpersist_frames
+from ..plan_cache import cached, plan_memo, session_memo, unpersist_frames
 from ..functions.scalar import money
 from ..schema import load_table, table_row_count
 from ..session import default_parallelism, scoped_conf
+from .similarity import (
+    N_QUERIES,
+    TOP_K,
+    _DOT,
+    _NORM,
+    _TOPK_ORACLE,
+    _query_set,
+    _query_sims,
+    _top_ranked,
+    _vectors,
+    ann_topk_bruteforce,
+)
 
 
 def asof_last_purchase(spark: SparkSession, sf: str) -> DataFrame:
@@ -368,40 +380,16 @@ def ann_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     own bucket. Deterministic → exact oracle. This is the shape that
     scales: the bucket id is the shuffle key, candidate sets shrink
     ~256×, and recall tunes via bands/probing like MinHash."""
-    em = load_table(spark, sf, "embeddings")
     bucket = F.concat(
         *[
             F.when(F.element_at("embedding", i + 1) >= 0, "1").otherwise("0")
             for i in range(8)
         ]
     )
-    vecs = em.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-        bucket.alias("bucket"),
-    )
-    q = vecs.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("bucket").alias("qbucket"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qvec", "vec", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x)
-    )
-    pairs = F.broadcast(q).join(
-        vecs,
-        (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    sims = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(dot / (nrm(F.col("qvec")) * nrm(F.col("vec"))), 6).alias("sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
+    vecs = _vectors(spark, sf, bucket.alias("bucket"))
+    q = _query_set(vecs, F.col("bucket").alias("qbucket"))
+    sims = _query_sims(q, vecs, on=F.col("bucket") == F.col("qbucket"))
+    return _top_ranked(sims, TOP_K)
 
 
 def ann_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
@@ -411,8 +399,6 @@ def ann_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
     recall is a per-query left join + count over two k-row-per-query
     frames, so the eval itself adds only query-set-sized work.
     """
-    from .similarity import ann_topk_bruteforce
-
     bf = ann_topk_bruteforce(spark, sf).select(
         F.col("query_id").alias("q"), F.col("neighbor_id").alias("exact_id")
     )
@@ -1013,13 +999,15 @@ def sketch_countmin_terms(spark: SparkSession, sf: str) -> DataFrame:
     )
     # three consumers (both sketch rows + the truth audit) — cache so
     # the explode+md5 pass runs once, not per consumer
-    hashed = terms.select(
-        "t",
-        (F.conv(F.substring(F.md5("t"), 1, 8), 16, 10).cast("long")
-         % CM_WIDTH).alias("b0"),
-        (F.conv(F.substring(F.md5(F.concat(F.lit("s:"), F.col("t"))), 1, 8),
-                16, 10).cast("long") % CM_WIDTH).alias("b1"),
-    ).cache()
+    hashed = cached(
+        terms.select(
+            "t",
+            (F.conv(F.substring(F.md5("t"), 1, 8), 16, 10).cast("long")
+             % CM_WIDTH).alias("b0"),
+            (F.conv(F.substring(F.md5(F.concat(F.lit("s:"), F.col("t"))), 1, 8),
+                    16, 10).cast("long") % CM_WIDTH).alias("b1"),
+        )
+    )
     sk0 = hashed.groupBy("b0").agg(F.count("*").alias("c0"))
     sk1 = hashed.groupBy("b1").agg(F.count("*").alias("c1"))
     top = (
@@ -1387,7 +1375,7 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """
     edges = _trade_edges(spark, sf)
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    nodes = deg.select(F.col("src").alias("node"), "outdeg").cache()
+    nodes = cached(deg.select(F.col("src").alias("node"), "outdeg"))
     n_nodes = nodes.count()
     base_term = (PR_SCALE // n_nodes) * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
     ranks = nodes.select(
@@ -1397,9 +1385,9 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # each iteration joins just ranks against it, not a fresh
     # edges⋈nodes⋈ranks three-way.  (The raw edge table is the shared
     # _trade_edges memo entry — NOT released here; BFS/LPA reuse it.)
-    edges_deg = edges.join(
-        nodes.select(F.col("node").alias("src"), "outdeg"), "src"
-    ).cache()
+    edges_deg = cached(
+        edges.join(nodes.select(F.col("node").alias("src"), "outdeg"), "src")
+    )
     edges_deg.count()
     for _ in range(PR_ITERS):
         contrib = (
@@ -2082,11 +2070,6 @@ QUERIES = {
     "join_asof_nearest": join_asof_nearest,
 }
 
-_DOT = (
-    "list_sum(list_transform(list_zip({a}, {b}), "
-    "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-)
-_NORM = "sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 _BUCKET = (
     "list_aggregate(list_transform(embedding[1:8], "
     "x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), 'string_agg', '')"
@@ -2095,7 +2078,7 @@ _BUCKET = (
 _ANN_LSH_ORACLE = f"""
     WITH v AS (SELECT vec_id, embedding, {_BUCKET} AS bucket FROM embeddings),
     q AS (SELECT vec_id AS query_id, embedding AS qe, bucket AS qbucket
-          FROM v WHERE vec_id < 5),
+          FROM v WHERE vec_id < {N_QUERIES}),
     sims AS (
       SELECT q.query_id, v.vec_id AS neighbor_id,
              round({_DOT.format(a='q.qe', b='v.embedding')}
@@ -2108,7 +2091,7 @@ _ANN_LSH_ORACLE = f"""
              ROW_NUMBER() OVER (PARTITION BY query_id
                                 ORDER BY sim DESC, neighbor_id) AS rank
       FROM sims
-    ) WHERE rank <= 5
+    ) WHERE rank <= {TOP_K}
 """
 
 def _sessions_cte(extra: str = "") -> str:
@@ -2812,10 +2795,8 @@ ORACLES = {
 # composes the two full pipeline oracles: recall is exact by
 # construction because both sides are exact replicas of their Spark
 # twins (a WITH inside a parenthesized subquery is valid DuckDB)
-from .similarity import _TOPK_ORACLE as _BF_ORACLE  # noqa: E402
-
 ORACLES["ann_recall_eval"] = f"""
-    WITH bf AS ({_BF_ORACLE}), ap AS ({_ANN_LSH_ORACLE})
+    WITH bf AS ({_TOPK_ORACLE}), ap AS ({_ANN_LSH_ORACLE})
     SELECT bf.query_id, COUNT(*) AS n_exact,
            CAST(SUM(CASE WHEN ap.neighbor_id IS NOT NULL
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plan_cache import cached
 from ..schema import load_table
 
 
@@ -384,9 +385,9 @@ def multimodal_phash_near_dup(spark: SparkSession, sf: str) -> DataFrame:
     doc-count-sized and cached; at 100 TB the payload bytes are
     touched exactly once (the mapInPandas scan).
     """
-    sigs = phash_signatures(
-        with_payload(load_table(spark, sf, "documents"))
-    ).cache()
+    sigs = cached(
+        phash_signatures(with_payload(load_table(spark, sf, "documents")))
+    )
     bw = PHASH_BITS // PHASH_BANDS
     bands = sigs.select(
         "doc_id",

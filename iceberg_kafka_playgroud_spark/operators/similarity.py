@@ -1,41 +1,24 @@
 """Similarity search over embeddings (SURVEY §2.9 X2).
 
-Four operators:
-
-- ``ann_topk_bruteforce`` — exact top-k cosine via pure JVM-side array
-  expressions (zip_with + aggregate). The correctness baseline; also
-  the oracle twin for the vectorized path.
-- ``ann_topk_blocked`` — the scale path: Arrow-batched ``mapInPandas``
-  with a NumPy matmul per batch. Queries broadcast (they're tiny);
-  the corpus streams through executors in columnar batches; a final
-  per-query window takes the top-k. Same results as brute force, so
-  it shares the same SQL oracle. At 100 TB this is the
-  block-partitioned matmul pattern (queries × corpus-block per task)
-  with per-block top-k pushed before the shuffle.
-- ``embedding_near_dup_pairs`` — EXACT cosine-threshold pair join,
-  implemented as a block-partitioned pair scan: the corpus is hashed
-  into ``N_BLOCKS`` blocks, each of the K(K+1)/2 block pairs becomes
-  one task, and each task runs a NumPy matmul over exactly two blocks.
-  Per-task memory is bounded by two blocks — no full-table broadcast,
-  no BroadcastNestedLoopJoin, no driver collect (plan-pinned in
-  tests/test_plans.py). The O(n²) *compute* is irreducible: an exact
-  threshold join at t = 0.45 admits no sub-quadratic candidate
-  scheme — measured on this corpus, every sign-bit LSH banding with
-  100 % recall leaves 64–100 % of all pairs as candidates
-  (128 bits r=4: 86 %; 512 bits r=6: 72 %; 64 bits r=4: 64 % but
-  misses 3 true pairs at sf0.1), because the qualifying pairs sit at
-  cosine 0.45–0.51 against a background whose p99.9 is 0.38. LSH
-  separates near-dups from noise only at high thresholds — that
-  regime is ``embedding_near_dup_lsh`` below.
-- ``embedding_near_dup_lsh`` — the 100 TB-shaped variant: quantized
-  sign-sketch (integer-exact, engine-portable), banded buckets in the
-  style of ``dedup.lsh_bands``, candidate equi-join on
-  (band_idx, band_val), exact cosine verification on candidates only.
-  Its DuckDB oracle replicates the ENTIRE pipeline (sketch → bands →
-  candidates → verify), so parity is exact by construction, and the
-  operator's recall vs the exact join is measured in
-  tests/test_properties.py (100 % on both fixture scales with the
-  committed parameters).
+Two pair-scoring shapes, one owner each.  Query×corpus: every
+brute-force, IVF, LSH, radius, MMR, triplet and hybrid operator scores
+through ``_vectors`` (the corpus as (vec_id, …, vec) doubles),
+``_query_sims`` (a broadcast cross join, or a join ``on`` an IVF cell
+or LSH bucket, minus the query itself, at the round-6 cosine) and
+``_top_ranked`` (the one row_number cut over (sim DESC, id ASC)) —
+the parity contract every top-k oracle replays; ``_probe_cells`` ranks
+the IVF cells a query probes.  All pairs: ``_block_pair_scan`` owns
+the exact block-partitioned layout — vec_id % N_BLOCKS blocks, one
+applyInPandas group per block pair (K(K+1)/2 tasks, two blocks of
+memory each, no full-table broadcast, no nested-loop join, no driver
+collect; plan-pinned in tests/test_plans.py) — and its callers
+(``embedding_near_dup_pairs``, ``embedding_knn_label_eval``) bring
+only a NumPy kernel.  The exact near-dup threshold join stays O(n²)
+compute: at t = 0.45 every sign-bit LSH banding with 100 % recall
+keeps 64–100 % of all pairs as candidates, because the qualifying
+pairs sit at cosine 0.45–0.51 against a background whose p99.9 is
+0.38; ``embedding_near_dup_lsh`` bands only where a geometry separates
+them and routes to the exact scan otherwise.
 
 Engine-parity: similarity is rounded to 6 decimals *before* ranking /
 thresholding in BOTH engines, so FP association differences (Spark
@@ -385,33 +368,62 @@ def _query_row(base: DataFrame, seed_rows: list) -> list:
     return [int(v) for v in hit["qx"]]
 
 
-def _topk_cosine(spark: SparkSession, sf: str, proj) -> DataFrame:
-    """Brute-force per-query top-k over ``proj(embedding)`` — ONE
-    definition of the query filter / broadcast cross / round-6 cosine
-    / row_number tie-break, shared by the full-dimension baseline and
-    the Matryoshka-truncated variant so a ranking fix can never be
-    applied to one and missed in the other."""
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", _to_double(proj(F.col("embedding"))).alias("vec")
+# --- query×corpus scoring: the one cosine and top-k recipe ---------------
+
+
+def _vectors(spark: SparkSession, sf: str, *keep, proj=None) -> DataFrame:
+    """The corpus as (vec_id, *keep, vec): ``proj(embedding)`` (the
+    whole embedding by default) as a double array."""
+    emb = F.col("embedding")
+    return load_table(spark, sf, "embeddings").select(
+        "vec_id", *keep, _to_double(emb if proj is None else proj(emb)).alias("vec")
     )
-    q = em.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+
+
+def _query_set(vecs: DataFrame, *keep) -> DataFrame:
+    """The ANN query set (vec_id < N_QUERIES) of a ``_vectors`` frame,
+    as (query_id, *keep, qvec)."""
+    return vecs.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), *keep, F.col("vec").alias("qvec")
     )
-    pairs = F.broadcast(q).crossJoin(em).filter(F.col("vec_id") != F.col("query_id"))
-    sims = pairs.select(
+
+
+def _query_sims(queries: DataFrame, corpus: DataFrame, *keep, on=None) -> DataFrame:
+    """(query_id, neighbor_id, *keep, sim): every (query_id, qvec, ...)
+    row scored against the (vec_id, vec, ...) corpus rows it meets — a
+    broadcast cross join, or a broadcast join ``on`` a key (IVF cell,
+    LSH bucket) — minus the query itself, at the round-6 cosine every
+    oracle replays.  THE one scoring block of the query×corpus
+    operators, so a parity fix can never reach one and miss another."""
+    q = F.broadcast(queries)
+    pairs = q.crossJoin(corpus) if on is None else q.join(corpus, on)
+    return pairs.filter(F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
+        *keep,
         F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("sim"),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+
+
+def _top_ranked(
+    sims: DataFrame, k: int, rank: str = "rank", by: str = "query_id"
+) -> DataFrame:
+    """The first ``k`` rows per ``by`` in (sim DESC, neighbor_id ASC)
+    order, numbered in column ``rank`` — the one top-k cut (and
+    tie-break) every ranking oracle's ROW_NUMBER replays."""
+    w = W.partitionBy(by).orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return sims.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _topk_cosine(spark: SparkSession, sf: str, proj=None) -> DataFrame:
+    """Brute-force per-query top-k over ``proj(embedding)`` — the
+    full-dimension baseline and the Matryoshka-truncated variant."""
+    em = _vectors(spark, sf, proj=proj)
+    return _top_ranked(_query_sims(_query_set(em), em), TOP_K)
 
 
 def ann_topk_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
-    return _topk_cosine(spark, sf, lambda e: e)
+    return _topk_cosine(spark, sf)
 
 
 def _query_rows(em: DataFrame) -> list:
@@ -462,45 +474,30 @@ def ann_topk_blocked(spark: SparkSession, sf: str) -> DataFrame:
     sims = em.select("vec_id", "embedding").mapInPandas(
         block_sims, schema="query_id long, neighbor_id long, sim double"
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+    return _top_ranked(
+        sims.filter(F.col("neighbor_id") != F.col("query_id")), TOP_K
     )
 
 
-# (applicationId, sf, threshold) → pair frame.  A dict memo, not just
-# cache(): the plan embeds a per-call Python closure, so two builds
-# are NEVER sameSemantics and each would register a fresh cache entry
-# — the memo pins ONE frame (hence one cache entry) per threshold.
-_PAIRS_MEMO = session_memo("derived", release=unpersist_frames)
+# --- all-pairs scoring: the one block-pair layout -----------------------
 
 
-def embedding_near_dup_pairs(
-    spark: SparkSession, sf: str, threshold: float | None = None
-) -> DataFrame:
-    """Exact cosine-threshold pairs via block-partitioned pair scan.
+def _block_pair_scan(spark: SparkSession, sf: str, kernel, schema: str) -> DataFrame:
+    """Exact all-pairs scan over the corpus, block-partitioned.
 
-    ``threshold=None`` resolves to the module's ``NEAR_DUP_THRESHOLD``
-    at CALL time (not def time), so monkeypatching the global behaves
-    the way the pre-r11 closure did — the patched value wins.
+    Every vector lands in block ``vec_id % N_BLOCKS``; block pair
+    (bi, bj) with bi ≤ bj is one applyInPandas group holding exactly
+    the rows of those two blocks, so per-task memory is 2·(corpus/K)
+    rows and the shuffle volume is K+1 copies of the corpus — never a
+    full-table broadcast.  Each unordered pair (u, v) meets in exactly
+    one group: (min(bu,bv), max(bu,bv)).
 
-    Every vector lands in block ``vec_id % K``; block-pair (bi, bj)
-    with bi ≤ bj is one applyInPandas group holding exactly the rows
-    of those two blocks, so per-task memory is 2·(corpus/K) rows and
-    the shuffle volume is K+1 copies of the corpus — never a
-    full-table broadcast. Each unordered pair (u, v) appears in
-    exactly one group: (min(bu,bv), max(bu,bv)).
+    ``kernel(ids_a, mat_a, ids_b, mat_b, same)`` scores one group:
+    a diagonal group (``same``, both sides the one block, ≥ 2 rows)
+    or the L×R rows of two different blocks (both non-empty).  It
+    returns a dict of ``schema``'s columns, or None for no rows.
     """
     import numpy as np
-
-    if threshold is None:
-        threshold = NEAR_DUP_THRESHOLD
-    memo_key = (spark.sparkContext.applicationId, sf.rstrip("/"), threshold)
-    hit = _PAIRS_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
 
     em = load_table(spark, sf, "embeddings").select(
         "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(N_BLOCKS)).alias("bid")
@@ -516,66 +513,87 @@ def embedding_near_dup_pairs(
         F.broadcast(keys.filter(F.col("bi") < F.col("bj"))), em.bid == keys.bj
     ).select("bi", "bj", "vec_id", "embedding", F.lit("R").alias("side"))
     both = left.unionByName(right)
+    dtypes = {
+        name: {"long": "int64", "double": "float64"}[kind]
+        for name, kind in (f.split() for f in schema.split(","))
+    }
 
-    def block_pairs(key, pdf):
-        bi, bj = key
-        out_d1, out_d2, out_sim = [], [], []
+    def scan(key, pdf):
+        def rows(part):
+            mat = np.array(part["embedding"].tolist(), dtype=np.float64)
+            return part["vec_id"].to_numpy(), mat
 
-        def emit(ids_a, mat_a, ids_b, mat_b, triangular: bool) -> None:
-            # BLAS matmul is only a PRE-filter (pairwise summation can
-            # differ from the engines' sequential fold in the last ulp,
-            # which np.round could flip at a 6-decimal boundary); the
-            # slack margin keeps every possible boundary pair, then the
-            # survivors are recomputed with the bit-exact Catalyst-fold
-            # kernel and half-up rounding shared with the LSH/IVF paths.
-            na = np.linalg.norm(mat_a, axis=1)
-            nb = np.linalg.norm(mat_b, axis=1)
-            approx = (mat_a @ mat_b.T) / (na[:, None] * nb[None, :])
-            if triangular:
-                ii, jj = np.triu_indices(len(ids_a), k=1)
-            else:
-                ii, jj = np.indices(approx.shape).reshape(2, -1)
-            near = approx[ii, jj] >= threshold - 1e-6
-            ii, jj = ii[near], jj[near]
-            if not len(ii):
-                return
-            sims = _round_half_up(_fold_cosine(mat_a[ii], mat_b[jj]))
-            keep = sims >= threshold
-            ii, jj, sims = ii[keep], jj[keep], sims[keep]
-            d1 = np.minimum(ids_a[ii], ids_b[jj])
-            d2 = np.maximum(ids_a[ii], ids_b[jj])
-            out_d1.append(d1)
-            out_d2.append(d2)
-            out_sim.append(sims)
-
-        if bi == bj:
-            sub = pdf
-            if len(sub) >= 2:
-                ids = sub["vec_id"].to_numpy()
-                mat = np.array(sub["embedding"].tolist(), dtype=np.float64)
-                emit(ids, mat, ids, mat, triangular=True)
+        out = None
+        if key[0] == key[1]:
+            if len(pdf) >= 2:
+                ids, mat = rows(pdf)
+                out = kernel(ids, mat, ids, mat, True)
         else:
             lrows = pdf[pdf["side"] == "L"]
             rrows = pdf[pdf["side"] == "R"]
             if len(lrows) and len(rrows):
-                emit(
-                    lrows["vec_id"].to_numpy(),
-                    np.array(lrows["embedding"].tolist(), dtype=np.float64),
-                    rrows["vec_id"].to_numpy(),
-                    np.array(rrows["embedding"].tolist(), dtype=np.float64),
-                    triangular=False,
-                )
-        if not out_d1:
-            return pd.DataFrame({"d1": [], "d2": [], "sim": []}).astype(
-                {"d1": "int64", "d2": "int64", "sim": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "d1": np.concatenate(out_d1),
-                "d2": np.concatenate(out_d2),
-                "sim": np.concatenate(out_sim),
-            }
-        )
+                out = kernel(*rows(lrows), *rows(rrows), False)
+        if out is None:
+            return pd.DataFrame({c: [] for c in dtypes}).astype(dtypes)
+        return pd.DataFrame(out)
+
+    return both.groupBy("bi", "bj").applyInPandas(scan, schema=schema)
+
+
+# (applicationId, sf, threshold, N_BLOCKS) → pair frame.  A dict memo,
+# not just cache(): the plan embeds a per-call Python closure, so two
+# builds are NEVER sameSemantics and each would register a fresh cache
+# entry — the memo pins ONE frame (hence one cache entry) per key.
+_PAIRS_MEMO = session_memo("derived", release=unpersist_frames)
+
+
+def embedding_near_dup_pairs(
+    spark: SparkSession, sf: str, threshold: float | None = None
+) -> DataFrame:
+    """Exact cosine-threshold pairs via the block-pair scan
+    (``_block_pair_scan``).
+
+    ``threshold=None`` resolves to the module's ``NEAR_DUP_THRESHOLD``
+    at CALL time (not def time), so monkeypatching the global behaves
+    the way the pre-r11 closure did — the patched value wins.
+    """
+    import numpy as np
+
+    if threshold is None:
+        threshold = NEAR_DUP_THRESHOLD
+    memo_key = (
+        spark.sparkContext.applicationId, sf.rstrip("/"), threshold, N_BLOCKS
+    )
+    hit = _PAIRS_MEMO.get(memo_key)
+    if hit is not None:
+        return hit
+
+    def near_pairs(ids_a, mat_a, ids_b, mat_b, same: bool):
+        # BLAS matmul is only a PRE-filter (pairwise summation can
+        # differ from the engines' sequential fold in the last ulp,
+        # which np.round could flip at a 6-decimal boundary); the
+        # slack margin keeps every possible boundary pair, then the
+        # survivors are recomputed with the bit-exact Catalyst-fold
+        # kernel and half-up rounding shared with the LSH/IVF paths.
+        na = np.linalg.norm(mat_a, axis=1)
+        nb = np.linalg.norm(mat_b, axis=1)
+        approx = (mat_a @ mat_b.T) / (na[:, None] * nb[None, :])
+        if same:
+            ii, jj = np.triu_indices(len(ids_a), k=1)
+        else:
+            ii, jj = np.indices(approx.shape).reshape(2, -1)
+        near = approx[ii, jj] >= threshold - 1e-6
+        ii, jj = ii[near], jj[near]
+        if not len(ii):
+            return None
+        sims = _round_half_up(_fold_cosine(mat_a[ii], mat_b[jj]))
+        keep = sims >= threshold
+        ii, jj, sims = ii[keep], jj[keep], sims[keep]
+        return {
+            "d1": np.minimum(ids_a[ii], ids_b[jj]),
+            "d2": np.maximum(ids_a[ii], ids_b[jj]),
+            "sim": sims,
+        }
 
     # cache the RESULT frame (plan-keyed): the pair set is
     # near-dup-sized (tiny), and it has multiple consumers — the
@@ -584,8 +602,7 @@ def embedding_near_dup_pairs(
     # whole block-pair scan (Spark does not auto-materialize shared
     # subplans) — the same pattern as dedup_minhash_lsh's pair cache
     out = (
-        both.groupBy("bi", "bj")
-        .applyInPandas(block_pairs, schema="d1 long, d2 long, sim double")
+        _block_pair_scan(spark, sf, near_pairs, "d1 long, d2 long, sim double")
         # coalesce before caching (the _copurchase_edges rule): the
         # pair set is near-dup-sized, but it inherits the block
         # shuffle's partition count — every downstream consumer (and
@@ -793,7 +810,7 @@ def embedding_near_dup_lsh(
 
         return cand.mapInPandas(verify, schema="d1 long, d2 long, sim double")
     # beyond-broadcast fallback: join the vectors back by id
-    v = em.select("vec_id", _to_double(F.col("embedding")).alias("vec"))
+    v = _vectors(spark, sf)
     v1 = v.select(F.col("vec_id").alias("d1"), F.col("vec").alias("v1"))
     v2 = v.select(F.col("vec_id").alias("d2"), F.col("vec").alias("v2"))
     return (
@@ -857,9 +874,7 @@ def _ivf_build(spark: SparkSession, sf: str):
     (em, corpus, cent_ids, cent_mat)."""
     import numpy as np
 
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", _to_double(F.col("embedding")).alias("vec")
-    )
+    em = _vectors(spark, sf)
     cent_rows = (
         em.filter(F.col("vec_id") < K_CELLS).orderBy("vec_id").collect()
     )
@@ -900,40 +915,32 @@ def ann_topk_ivf(spark: SparkSession, sf: str) -> DataFrame:
     return _ivf_probe(spark, em, corpus, cent_ids, cent_mat)
 
 
+def _probe_cells(spark, q_rows: list, cent_ids, cent_mat, nprobe: int):
+    """(query_id, cell, probe_rank, qvec): each collected query row's
+    ``nprobe`` nearest cells, ranked 1.. by (sim desc, cell id asc) —
+    computed driver-side from the codebook (the query set is bounded,
+    see _query_rows) with the same kernel the build assigns by."""
+    import numpy as np
+
+    q_mat = np.array([r["vec"] for r in q_rows], dtype=np.float64)
+    q_sims = _cell_sim_matrix(q_mat, cent_mat)
+    probes = []
+    for i, r in enumerate(q_rows):
+        order = sorted(
+            range(len(cent_ids)), key=lambda k: (-q_sims[i, k], cent_ids[k])
+        )[:nprobe]
+        for pr, k in enumerate(order, start=1):
+            probes.append((r["vec_id"], int(cent_ids[k]), pr, list(r["vec"])))
+    return spark.createDataFrame(
+        probes, "query_id long, cell long, probe_rank int, qvec array<double>"
+    )
+
+
 def _ivf_probe(spark, em, corpus, cent_ids, cent_mat):
     """Probe phase shared by the inline and persisted-index IVF
     variants: NPROBE nearest cells per query, exact top-k inside."""
-    import numpy as np
-
-    # probe cells for the tiny query set: computed driver-side from the
-    # same codebook (the query set is bounded — see _query_rows)
-    q_rows = _query_rows(em)
-    q_mat = np.array([r["vec"] for r in q_rows], dtype=np.float64)
-    q_sims = _cell_sim_matrix(q_mat, cent_mat)
-    probe_tuples = []
-    for i, r in enumerate(q_rows):
-        # sort by (sim desc, cell id asc): argsort on (-sim, id) pairs
-        order = sorted(
-            range(len(cent_ids)), key=lambda k: (-q_sims[i, k], cent_ids[k])
-        )[:NPROBE]
-        for k in order:
-            probe_tuples.append((r["vec_id"], int(cent_ids[k]), list(r["vec"])))
-    probes = spark.createDataFrame(
-        probe_tuples, "query_id long, cell long, qvec array<double>"
-    )
-    cands = F.broadcast(probes).join(corpus, "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sims = cands.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    probes = _probe_cells(spark, _query_rows(em), cent_ids, cent_mat, NPROBE)
+    return _top_ranked(_query_sims(probes, corpus, on="cell"), TOP_K)
 
 
 # persisted-index location per (applicationId, sf): the index is the
@@ -960,9 +967,7 @@ def ann_index_persist_probe(spark: SparkSession, sf: str) -> DataFrame:
     SAME ``_ivf_build`` the inline variant runs.
     """
     index_dir, cent_ids, cent_mat = _ivf_index_on_disk(spark, sf)
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", _to_double(F.col("embedding")).alias("vec")
-    )
+    em = _vectors(spark, sf)
     corpus = spark.read.parquet(index_dir).select("vec_id", "cell", "vec")
     return _ivf_probe(spark, em, corpus, cent_ids, cent_mat)
 
@@ -1350,20 +1355,11 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     lex_rank = lex_top.select(
         "doc_id", F.row_number().over(W.orderBy(*lex_order)).alias("rank_lex")
     )
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", _to_double(F.col("embedding")).alias("vec")
-    )
+    em = _vectors(spark, sf)
     q = em.filter(F.col("vec_id") == HYBRID_QUERY_DOC).select(
-        F.col("vec").alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
     )
-    sims = (
-        em.filter(F.col("vec_id") != HYBRID_QUERY_DOC)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("sim"),
-        )
-    )
+    sims = _query_sims(q, em).select(F.col("neighbor_id").alias("doc_id"), "sim")
     sem_order = [F.col("sim").desc(), F.col("doc_id").asc()]
     sem_top = sims.orderBy(*sem_order).limit(RRF_HORIZON)
     sem_rank = sem_top.select(
@@ -1528,7 +1524,7 @@ _DOT = (
 _NORM = "sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
 _TOPK_ORACLE = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
+WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < {N_QUERIES}),
 sims AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
          round({_DOT.format(a='q.qe', b='e.embedding')}
@@ -1539,7 +1535,7 @@ SELECT query_id, neighbor_id, sim, rank FROM (
   SELECT query_id, neighbor_id, sim,
          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
   FROM sims
-) WHERE rank <= 5
+) WHERE rank <= {TOP_K}
 """
 
 # full-pipeline oracle for the LSH variant: identical sketch (integer
@@ -1848,9 +1844,7 @@ def ann_incremental_assign(spark: SparkSession, sf: str) -> DataFrame:
     """
     import numpy as np
 
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", _to_double(F.col("embedding")).alias("vec")
-    )
+    em = _vectors(spark, sf)
     old_first = (
         em.filter(F.pmod(F.col("vec_id"), IVF_NEW_MOD) != IVF_NEW_RES)
         .orderBy("vec_id")
@@ -2344,81 +2338,31 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf: str) -> DataFrame:
     Scale: the probe join stays cell-keyed; the sweep multiplies only
     the candidate-set-sized rank pass, not the corpus work.
     """
-    import numpy as np
-
     em, corpus, cent_ids, cent_mat = _ivf_build(spark, sf)
     q_rows = _query_rows(em)
-    q_mat = np.array([r["vec"] for r in q_rows], dtype=np.float64)
-    q_sims = _cell_sim_matrix(q_mat, cent_mat)
-    probe_tuples = []
-    for i, r in enumerate(q_rows):
-        order = sorted(
-            range(len(cent_ids)), key=lambda k: (-q_sims[i, k], cent_ids[k])
-        )
-        for pr, k in enumerate(order, start=1):
-            probe_tuples.append(
-                (r["vec_id"], int(cent_ids[k]), pr, list(r["vec"]))
-            )
-    probes = spark.createDataFrame(
-        probe_tuples,
-        "query_id long, cell long, probe_rank int, qvec array<double>",
-    )
+    probes = _probe_cells(spark, q_rows, cent_ids, cent_mat, len(cent_ids))
     scored = (
-        F.broadcast(probes)
-        .join(corpus, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(
-            F.min("probe_rank").alias("mpr"),
-            F.first(
-                F.round(cosine(F.col("qvec"), F.col("vec")), 6), True
-            ).alias("sim"),
-        )
+        _query_sims(probes, corpus, "probe_rank", on="cell")
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.min("probe_rank").alias("mpr"), F.first("sim", True).alias("sim"))
     )
     # memoized: the recall-curve plan fans out over this bounded
     # (queries × probed candidates) frame once per nprobe point; the
     # memo keeps ONE resident copy per session instead of leaking a
     # fresh instance-keyed checkpoint per call (see checkpoints.py)
     scored = memo_local_checkpoint(scored, eager=False)
-    brute = (
-        em.filter(F.col("vec_id") >= N_QUERIES)
-        .crossJoin(
-            F.broadcast(
-                spark.createDataFrame(
-                    [(r["vec_id"], list(r["vec"])) for r in q_rows],
-                    "query_id long, qvec array<double>",
-                )
-            )
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("sim"),
-        )
+    # the brute side excludes EVERY query id from the corpus, not
+    # just the query itself (the oracle's truth set)
+    queries = spark.createDataFrame(
+        [(r["vec_id"], list(r["vec"])) for r in q_rows],
+        "query_id long, qvec array<double>",
     )
-    wq = W.partitionBy("query_id")
-    btop = (
-        brute.withColumn(
-            "rank",
-            F.row_number().over(
-                wq.orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-            ),
-        )
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    brute = _query_sims(queries, em.filter(F.col("vec_id") >= N_QUERIES))
+    btop = _top_ranked(brute, TOP_K).select("query_id", "neighbor_id")
     out = None
     for np_ in NPROBE_CURVE:
-        itop = (
-            scored.filter(F.col("mpr") <= np_)
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    wq.orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-                ),
-            )
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id")
+        itop = _top_ranked(scored.filter(F.col("mpr") <= np_), TOP_K).select(
+            "query_id", "neighbor_id"
         )
         hits = itop.join(btop, ["query_id", "neighbor_id"]).agg(
             F.count("*").cast("long").alias("n_hits")
@@ -2601,26 +2545,15 @@ def ann_radius_count(spark: SparkSession, sf: str) -> DataFrame:
     Plan: queries broadcast (bounded by N_QUERIES), corpus streams
     through executors once; the aggregate is map-side-combined per
     query so only N_QUERIES partials shuffle. Same round-6 cosine as
-    the top-k baseline (``_topk_cosine``), so FP association cannot
+    every top-k operator (``_query_sims``), so FP association cannot
     flip a threshold decision. At 100 TB the same plan holds — it is
     one narrow pass; an IVF variant would prune cells whose centroid
     bound caps the radius, but the exact pass is already linear.
     """
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", _to_double(F.col("embedding")).alias("vec")
-    )
-    q = em.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    pairs = F.broadcast(q).crossJoin(em).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sims = pairs.select(
-        "query_id",
-        F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("sim"),
-    )
+    em = _vectors(spark, sf)
     return (
-        sims.groupBy("query_id")
+        _query_sims(_query_set(em), em)
+        .groupBy("query_id")
         .agg(
             F.sum((F.col("sim") >= RADIUS_T).cast("long"))
             .cast("long")
@@ -2663,37 +2596,20 @@ def embedding_knn_label_eval(spark: SparkSession, sf: str) -> DataFrame:
     probe run before trusting vectors for clustering or dedup.
 
     Plan (the all-vectors kNN, not the bounded-query top-k): the
-    corpus is hashed into N_BLOCKS blocks; each block-pair group
-    computes its cross-block cosines with the bit-exact fold kernel
-    shared with ``embedding_near_dup_pairs`` (kNN keeps whole rows, so
-    no threshold prefilter applies) and emits at most KNN_K candidates
-    per vector per group, so the downstream
-    per-vector window ranks ≤ KNN_K·N_BLOCKS rows per vector —
-    partitioned by vec_id, never global. Per-task memory is two
-    blocks; nothing collects.
+    ``_block_pair_scan`` layout ``embedding_near_dup_pairs`` runs on;
+    each block-pair group computes its cosines with the bit-exact
+    fold kernel (kNN keeps whole rows, so no threshold prefilter
+    applies) and emits at most KNN_K candidates per vector per group,
+    so the downstream per-vector window ranks ≤ KNN_K·N_BLOCKS rows
+    per vector — partitioned by vec_id, never global. Per-task memory
+    is two blocks; nothing collects.
     """
     import numpy as np
 
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(N_BLOCKS)).alias("bid")
-    )
-    keys = spark.createDataFrame(
-        [(i, j) for i in range(N_BLOCKS) for j in range(i, N_BLOCKS)],
-        "bi int, bj int",
-    )
-    left = em.join(F.broadcast(keys), em.bid == keys.bi).select(
-        "bi", "bj", "vec_id", "embedding", F.lit("L").alias("side")
-    )
-    right = em.join(
-        F.broadcast(keys.filter(F.col("bi") < F.col("bj"))), em.bid == keys.bj
-    ).select("bi", "bj", "vec_id", "embedding", F.lit("R").alias("side"))
-    both = left.unionByName(right)
-
-    def block_knn(key, pdf):
-        bi, bj = key
+    def block_knn(ids_a, mat_a, ids_b, mat_b, same: bool):
         out_q, out_n, out_s = [], [], []
 
-        def emit(ids_a, mat_a, ids_b, mat_b, self_block: bool) -> None:
+        def emit(ids_a, mat_a, ids_b, mat_b) -> None:
             # exact kernel on ALL cross pairs (no threshold prefilter —
             # kNN needs full rows); per-vector top-K inside the group
             sims = np.empty((len(ids_a), len(ids_b)))
@@ -2703,7 +2619,7 @@ def embedding_knn_label_eval(spark: SparkSession, sf: str) -> DataFrame:
                         np.repeat(mat_a[r][None, :], len(ids_b), axis=0), mat_b
                     )
                 )
-            if self_block:
+            if same:
                 np.fill_diagonal(sims, -np.inf)
             k = min(KNN_K, sims.shape[1])
             for r in range(len(ids_a)):
@@ -2715,40 +2631,19 @@ def embedding_knn_label_eval(spark: SparkSession, sf: str) -> DataFrame:
                 out_n.append(ids_b[order][keep])
                 out_s.append(row[order][keep])
 
-        if bi == bj:
-            if len(pdf) >= 2:
-                ids = pdf["vec_id"].to_numpy()
-                mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                emit(ids, mat, ids, mat, self_block=True)
-        else:
-            lrows = pdf[pdf["side"] == "L"]
-            rrows = pdf[pdf["side"] == "R"]
-            if len(lrows) and len(rrows):
-                la = lrows["vec_id"].to_numpy()
-                lm = np.array(lrows["embedding"].tolist(), dtype=np.float64)
-                ra = rrows["vec_id"].to_numpy()
-                rm = np.array(rrows["embedding"].tolist(), dtype=np.float64)
-                emit(la, lm, ra, rm, self_block=False)
-                emit(ra, rm, la, lm, self_block=False)
-        if not out_q:
-            return pd.DataFrame(
-                {"vec_id": [], "neighbor_id": [], "sim": []}
-            ).astype({"vec_id": "int64", "neighbor_id": "int64", "sim": "float64"})
-        return pd.DataFrame(
-            {
-                "vec_id": np.concatenate(out_q).astype("int64"),
-                "neighbor_id": np.concatenate(out_n).astype("int64"),
-                "sim": np.concatenate(out_s),
-            }
-        )
+        emit(ids_a, mat_a, ids_b, mat_b)
+        if not same:
+            emit(ids_b, mat_b, ids_a, mat_a)
+        return {
+            "vec_id": np.concatenate(out_q).astype("int64"),
+            "neighbor_id": np.concatenate(out_n).astype("int64"),
+            "sim": np.concatenate(out_s),
+        }
 
-    cand = both.groupBy("bi", "bj").applyInPandas(
-        block_knn, "vec_id long, neighbor_id long, sim double"
+    cand = _block_pair_scan(
+        spark, sf, block_knn, "vec_id long, neighbor_id long, sim double"
     )
-    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    topk = cand.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= KNN_K
-    )
+    topk = _top_ranked(cand, KNN_K, "rk", by="vec_id")
     labels = load_table(spark, sf, "embeddings").select(
         "vec_id", F.col("label").cast("long").alias("label")
     )
@@ -2961,7 +2856,7 @@ def ann_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     in the last ulp).
 
     Plan at 100 TB: the corpus-touching work is ONE pass (the
-    shortlist, shared shape with ``_topk_cosine``); the greedy stage
+    shortlist, ``_query_sims`` + ``_top_ranked``); the greedy stage
     is a single applyInPandas over queries×MMR_POOL rows — per-task
     memory one pool (POOL² sims computed locally), no unrolled join
     cascade (the first cut ran MMR_K rounds of joins+windows: ~25
@@ -2969,31 +2864,9 @@ def ann_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     measured 14 s warm at sf0.1 vs ~1 s for this shape)."""
     import numpy as np
 
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", _to_double(F.col("embedding")).alias("vec")
-    )
-    q = em.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    sims = (
-        F.broadcast(q)
-        .crossJoin(em)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("sim"),
-            "vec",
-        )
-    )
-    wrel = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        sims.withColumn("rn", F.row_number().over(wrel))
-        .filter(F.col("rn") <= MMR_POOL)
-        .drop("rn")
-    )
+    em = _vectors(spark, sf)
+    sims = _query_sims(_query_set(em), em, "vec")
+    cand = _top_ranked(sims, MMR_POOL, "rn").drop("rn")
 
     def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
@@ -3134,7 +3007,7 @@ def embedding_triplet_mining(spark: SparkSession, sf: str) -> DataFrame:
     margin = an active triplet the loss would push on).
 
     Parity: the round-6 JVM cosines and (sim DESC, id) tie-break are
-    the ``_topk_cosine``/MMR recipe; MIN over same-label sims is
+    the ``_query_sims``/``_top_ranked`` recipe; MIN over same-label sims is
     order-insensitive; the margin is one IEEE subtraction of two
     already-identical doubles in both engines.
 
@@ -3146,53 +3019,31 @@ def embedding_triplet_mining(spark: SparkSession, sf: str) -> DataFrame:
     block-partitioned scan (``ann_topk_blocked``) or the IVF route —
     the mining semantics downstream are unchanged.
     """
-    em = load_table(spark, sf, "embeddings").select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("vec")
-    )
-    anchors = em.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("anchor_label"),
-        F.col("vec").alias("avec"),
-    )
-    sims = (
-        F.broadcast(anchors)
-        .crossJoin(em)
-        .filter(F.col("vec_id") != F.col("anchor_id"))
-        .select(
-            "anchor_id",
-            "anchor_label",
-            F.col("vec_id").alias("cand_id"),
-            F.col("label").alias("cand_label"),
-            F.round(cosine(F.col("avec"), F.col("vec")), 6).alias("sim"),
-        )
-    )
+    em = _vectors(spark, sf, "label")
+    anchors = _query_set(em, F.col("label").alias("anchor_label"))
+    sims = _query_sims(anchors, em, "anchor_label", "label")
     # ONE anchor-keyed shuffle computes both sides: the hardest-
     # positive MIN rides a plain partition window over the same rows
     # the negative ranking windows over, so the corpus is scanned
     # once and there is no join back (the first cut ran pos/neg as
     # separate branches — two corpus passes + a join on a 15-row
     # frame)
-    wa = W.partitionBy("anchor_id")
-    wneg = W.partitionBy("anchor_id").orderBy(
-        F.col("sim").desc(), F.col("cand_id")
-    )
-    same = F.col("cand_label") == F.col("anchor_label")
+    same = F.col("label") == F.col("anchor_label")
     scored = sims.withColumn(
-        "hardest_pos_sim", F.min(F.when(same, F.col("sim"))).over(wa)
+        "hardest_pos_sim",
+        F.min(F.when(same, F.col("sim"))).over(W.partitionBy("query_id")),
     )
+    # an anchor with NO same-label peer has no positive to mine a
+    # triplet against — drop it (matches the oracle's inner join;
+    # without this, Spark would emit its negatives with NULL
+    # hardest_pos_sim while DuckDB emits nothing)
+    negs = scored.filter(~same).filter(F.col("hardest_pos_sim").isNotNull())
     return (
-        scored.filter(~same)
-        # an anchor with NO same-label peer has no positive to mine a
-        # triplet against — drop it (matches the oracle's inner join;
-        # without this, Spark would emit its negatives with NULL
-        # hardest_pos_sim while DuckDB emits nothing)
-        .filter(F.col("hardest_pos_sim").isNotNull())
-        .withColumn("rn", F.row_number().over(wneg))
-        .filter(F.col("rn") <= TRIPLET_NEG_K)
+        _top_ranked(negs, TRIPLET_NEG_K, "rn")
         .select(
-            "anchor_id",
+            F.col("query_id").alias("anchor_id"),
             F.col("rn").cast("long").alias("neg_rank"),
-            F.col("cand_id").alias("hard_neg_id"),
+            F.col("neighbor_id").alias("hard_neg_id"),
             F.col("sim").alias("neg_sim"),
             "hardest_pos_sim",
             (F.col("hardest_pos_sim") - F.col("sim")).alias("margin"),

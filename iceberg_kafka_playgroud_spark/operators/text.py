@@ -303,9 +303,9 @@ def text_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     everything else is the one explode shuffle.
     """
     d = load_table(spark, sf, "documents")
-    words = d.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("w")
-    ).cache()  # 2 consumers: the count table + the scoring join
+    words = cached(  # 2 consumers: the count table + the scoring join
+        d.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("w"))
+    )
     freqs = words.groupBy("w").agg(F.count("*").alias("c"))
     total = freqs.agg(F.sum("c").cast("long").alias("tot"))
     per_doc = (
@@ -374,20 +374,22 @@ def text_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     idx = F.when(
         F.size(toks) >= 2, F.sequence(F.lit(1), F.size(toks) - 1)
     ).otherwise(F.expr("array()").cast("array<int>"))
-    bigrams = with_toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at(toks, i).alias("w1"),
-                    F.concat_ws(
-                        " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-                    ).alias("bg"),
-                ),
-            )
-        ).alias("g"),
-    ).select("doc_id", "g.w1", "g.bg").cache()  # 3 consumers: counts ×2 + scoring
+    bigrams = cached(  # 3 consumers: counts ×2 + scoring
+        with_toks.select(
+            "doc_id",
+            F.explode(
+                F.transform(
+                    idx,
+                    lambda i: F.struct(
+                        F.element_at(toks, i).alias("w1"),
+                        F.concat_ws(
+                            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
+                        ).alias("bg"),
+                    ),
+                )
+            ).alias("g"),
+        ).select("doc_id", "g.w1", "g.bg")
+    )
     bg_counts = bigrams.groupBy("bg").agg(F.count("*").alias("cb"))
     w1_counts = bigrams.groupBy("w1").agg(F.count("*").alias("cw"))
     scored = (
@@ -431,9 +433,9 @@ def text_keyword_extraction(spark: SparkSession, sf: str) -> DataFrame:
     tok = d.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("w")
     )
-    tf = tok.groupBy("doc_id", "w").agg(
-        F.count("*").alias("tf")
-    ).cache()  # 2 consumers: the df table + the scoring join
+    tf = cached(  # 2 consumers: the df table + the scoring join
+        tok.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
+    )
     dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
     from pyspark.sql import Window as W
 

@@ -936,7 +936,12 @@ def test_reset_without_session_unpersists_memo_frames(spark, sf_dir):
     """``clear_materializations()`` without a session still unpersists
     the cached frames memos and prepared plans hold."""
     from iceberg_kafka_playgroud_spark import plan_cache
-    from iceberg_kafka_playgroud_spark.operators import dedup, similarity
+    from iceberg_kafka_playgroud_spark.operators import (
+        dedup,
+        multimodal,
+        similarity,
+        text,
+    )
     from iceberg_kafka_playgroud_spark.streaming import ingest
 
     plan_cache.clear_materializations(spark)
@@ -955,6 +960,12 @@ def test_reset_without_session_unpersists_memo_frames(spark, sf_dir):
         dedup.dedup_ngram_jaccard,
         dedup.text_ngram_novelty,
         dedup.dedup_similarity_histogram,
+        text.text_unigram_logprob,
+        text.text_bigram_logprob,
+        text.text_keyword_extraction,
+        multimodal.multimodal_phash_near_dup,
+        advanced.sketch_countmin_terms,
+        advanced.graph_pagerank,
     ):
         op(spark, sf_dir).collect()
     assert _n_persistent_rdds(spark) > base
@@ -1155,6 +1166,31 @@ def test_near_dup_threshold_binds_at_call_time(spark, sf_dir, monkeypatch):
     # at a sim threshold of ~1.0 the fixture corpus has (near) zero
     # pairs while the 0.45 default has a verified non-empty set
     assert n_base > 0 and n_tight < n_base
+
+
+@pytest.mark.parametrize("n_blocks", [1, 3])
+def test_block_pair_layouts(spark, ddb, sf_dir, monkeypatch, n_blocks):
+    """Both block-pair operators give their oracles' rows at any block
+    count (1 = the single diagonal group), and the near-dup pair memo
+    keys on N_BLOCKS: a patched count builds a fresh pair frame
+    instead of serving the frame of the default layout."""
+    import __spark_entry__ as entry
+    from iceberg_kafka_playgroud_spark.verify import (
+        compare,
+        duckdb_result,
+        spark_result,
+    )
+
+    default = similarity.embedding_near_dup_pairs(spark, sf_dir)
+    monkeypatch.setattr(similarity, "N_BLOCKS", n_blocks)
+    assert similarity.embedding_near_dup_pairs(spark, sf_dir) is not default
+    oracles = entry.oracle_sql()
+    for name in ("embedding_near_dup_pairs", "embedding_knn_label_eval"):
+        df = getattr(similarity, name)(spark, sf_dir)
+        errs = compare(
+            name, spark_result(df), duckdb_result(ddb, oracles[name])
+        )
+        assert not errs, "\n".join(errs)
 
 
 def test_triplet_mining_one_corpus_pass_no_python(spark, sf_dir):

@@ -50,6 +50,11 @@ WINDOW = 50
 # and fuzzy decontamination, batch and streaming) were folded into one
 # probe path, and ``cached()`` outside a plan build became memo-owned,
 # so those four and the other ops that cache outside a build follow.
+# Also r19: the query×corpus cosine and top-k blocks and the block-pair
+# layout were folded into one owner each (_query_sims, _top_ranked,
+# _block_pair_scan), so the ops rewritten onto them follow, then the
+# three that consume the block-pair frame; this fills the window, so
+# the other consumers wait for ROUND 20 (ROADMAP, rotation item).
 DIRTY = [
     "snapshot_mor_read", "snapshot_expire", "snapshot_orphan_audit",
     "snapshot_rollback", "snapshot_delete_rows", "snapshot_upsert_rows",
@@ -67,6 +72,13 @@ DIRTY = [
     "stream_incremental_dedup", "stream_decontaminate_gate",
     "dedup_ngram_jaccard", "dedup_containment_pairs", "text_ngram_novelty",
     "dedup_similarity_histogram",
+    "ann_topk_bruteforce", "ann_topk_blocked", "ann_matryoshka_recall",
+    "ann_topk_ivf", "ann_index_persist_probe", "ann_ivf_nprobe_curve",
+    "ann_radius_count", "hybrid_rrf_retrieval", "ann_mmr_rerank",
+    "embedding_triplet_mining", "embedding_near_dup_pairs",
+    "embedding_knn_label_eval", "ann_topk_lsh",
+    "embedding_near_dup_lsh", "embedding_dbscan_core",
+    "dedup_cross_lingual_pairs",
 ]
 
 
