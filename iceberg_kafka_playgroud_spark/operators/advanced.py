@@ -23,9 +23,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint, release_local_checkpoint
-from ..plan_cache import cached, plan_memo, session_memo, unpersist_frames
+from ..plan_cache import cached, memoized
 from ..functions.scalar import money
-from ..schema import load_table, table_row_count
+from ..schema import load_table, table_column_bounds, table_row_count
 from ..session import default_parallelism, scoped_conf
 from .similarity import (
     N_QUERIES,
@@ -1271,31 +1271,25 @@ PR_ITERS = 3
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an integer ratio
 
 
-# (applicationId, sf) → cached undirected trade-graph edge list.
-# PageRank, BFS and LPA all derive the IDENTICAL frame; before the
-# memo each call re-ran the lineitem⋈orders distinct (≈4.7 s at sf0.1)
-# and re-cached/re-checkpointed its own copy.  One bounded resident
-# entry per (session, sf) — the graph family's "signature table",
-# same policy as the simhash signature cache (dedup.py).
-_TRADE_EDGES_MEMO = session_memo("derived", release=unpersist_frames)
-
-
+# PageRank, BFS and LPA all derive the IDENTICAL trade-edge frame;
+# before the memo each call re-ran the lineitem⋈orders distinct
+# (≈4.7 s at sf0.1) and re-cached/re-checkpointed its own copy.  One
+# bounded resident entry per (session, sf) — the graph family's
+# "signature table", same policy as the simhash signature cache
+# (dedup.py).
+@memoized("derived")
 def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Undirected supplier↔customer trade edges: distinct
     lineitem⋈orders pairs with bipartite node ids (2·suppkey /
     2·custkey+1), both directions materialized, cached once per
-    session+sf (memo above — do NOT unpersist; the memo owns it)."""
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"))
-    hit = _TRADE_EDGES_MEMO.get(key)
-    if hit is not None:
-        return hit
+    session+sf (do NOT unpersist; the memo entry owns it)."""
     li = load_table(spark, sf, "lineitem").select(
         (F.col("l_suppkey") * 2).alias("a"), F.col("l_orderkey")
     )
     o = load_table(spark, sf, "orders").select(
         "o_orderkey", (F.col("o_custkey") * 2 + 1).alias("b")
     )
-    # scoped 1 MB advisory for the BUILD (set before .cache(): the
+    # scoped 1 MB advisory for the BUILD (set before cached(): the
     # cached plan captures the session conf at registration): the
     # build's distinct reduce is a 12 MB exchange that the global
     # 64 MB advisory coalesced to 1-2 tasks (0.45 s serial inside
@@ -1311,7 +1305,7 @@ def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
             .select("a", "b")
             .distinct()
         )
-        edges = (
+        edges = cached(
             # symmetrize via explode, not union(pairs, flip): one scan
             # of the distinct-pairs subtree emitting both directions
             # instead of two plan branches (r18: the union shape
@@ -1341,7 +1335,6 @@ def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
             # edges-sized shuffles into k narrow map-side-combined
             # stages over co-located cached partitions.
             .repartition(default_parallelism(), "dst")
-            .cache()
         )
         # materialize EAGERLY inside the scope: every iterative
         # consumer launches concurrent jobs (broadcast builds +
@@ -1349,7 +1342,6 @@ def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
         # each of them (the MinHash race class).  The eager count is
         # the once-a-session index-build cost.
         edges.count()
-    _TRADE_EDGES_MEMO[key] = edges
     return edges
 
 
@@ -1631,22 +1623,19 @@ COSINE_TOP = 20
 KMV_K = 32  # k-minimum-values sketch size
 
 
-# (applicationId, sf, PAIR_MIN_SUPPORT) → (edges, n_edges, n_nodes).
-# The edge list is cached by plan (CacheManager dedupes identical
-# plans), but WITHOUT this memo every cold consumer re-paid the
-# materializing count job, and the triangle stats paid TWO more count
-# jobs (e.count + deg.count) over the cached frame — pure job-boundary
-# floor at local scale.  The stats are computed inside the ONE
-# materializing job below.
-_COPURCHASE_MEMO = session_memo("derived", release=unpersist_frames)
-
-
 def _copurchase_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Support-pruned co-purchase edge list (see ``_copurchase_stats``,
     which owns the build + the memoized scalar graph stats)."""
     return _copurchase_stats(spark, sf)[0]
 
 
+# The edge list is cached by plan (CacheManager dedupes identical
+# plans), but WITHOUT this memo every cold consumer re-paid the
+# materializing count job, and the triangle stats paid TWO more count
+# jobs (e.count + deg.count) over the cached frame — pure job-boundary
+# floor at local scale.  The stats are computed inside the ONE
+# materializing job below.
+@memoized("derived")
 def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
     """Undirected co-purchase part graph: (pa < pb, n_orders) pairs
     co-occurring in >= PAIR_MIN_SUPPORT orders, plus the scalar graph
@@ -1675,10 +1664,6 @@ def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
     # construction AND the materializing count (the cached plan
     # captures session conf at registration); consumers see only the
     # committed cache.
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"), PAIR_MIN_SUPPORT)
-    hit = _COPURCHASE_MEMO.get(key)
-    if hit is not None:
-        return hit
     with scoped_conf(
         spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(1024 * 1024)
     ):
@@ -1687,17 +1672,19 @@ def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
             .groupBy(F.col("l_orderkey").alias("o"))
             .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
         )
-        # pack each ordered pair into ONE int64 (pa<<32 | pb) when the
-        # part-id domain provably fits 31 bits (footer row count; TPC-H
-        # partkeys are 1..|part|): the basket-reduce stage carries the
-        # O(basket²) pair fan-out AND the pair partial-aggregation —
-        # the dominant compute of this build (r18 event-log profile:
-        # 622 ms of the 1.8 s build) — and an 8-byte key halves its
-        # agg/shuffle width vs two longs while skipping per-pair struct
-        # allocation (guide §2.3 "narrower types", proven safe, with
-        # the wide-domain fallback below keeping 100 TB-scale corpora
-        # on the exact same dataflow over two-long keys).
-        if table_row_count(sf, "part") < (1 << 31):
+        # pack each ordered pair into ONE int64 (pa<<32 | pb) when
+        # every l_partkey provably lies in [0, 2^31) (footer min/max
+        # statistics of the key itself): the basket-reduce stage
+        # carries the O(basket²) pair fan-out AND the pair
+        # partial-aggregation — the dominant compute of this build
+        # (r18 event-log profile: 622 ms of the 1.8 s build) — and an
+        # 8-byte key halves its agg/shuffle width vs two longs while
+        # skipping per-pair struct allocation (guide §2.3 "narrower
+        # types", proven safe, with the wide-domain fallback below
+        # keeping 100 TB-scale corpora on the exact same dataflow over
+        # two-long keys).
+        lo, hi = table_column_bounds(sf, "lineitem", "l_partkey")
+        if lo is not None and 0 <= lo and hi < (1 << 31):
             pairs = baskets.select(
                 F.explode(
                     F.flatten(
@@ -1742,7 +1729,7 @@ def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
         # over a few-KB relation. A handful of cached partitions keeps
         # downstream stages at O(1) tasks; on a real cluster AQE's
         # advisory sizing makes the same call from runtime statistics.
-        edges = counted.coalesce(4).cache()
+        edges = cached(counted.coalesce(4))
         # ONE materializing job that also yields both scalar graph
         # stats (count(*) of the exploded endpoints = 2·n_edges;
         # count_distinct = n_nodes) — replacing the three separate
@@ -1757,9 +1744,7 @@ def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
             )
             .collect()[0]
         )
-        stats = (edges, int(srow["two_e"]) // 2, int(srow["n_nodes"]))
-    _COPURCHASE_MEMO[key] = stats
-    return stats
+        return edges, int(srow["two_e"]) // 2, int(srow["n_nodes"])
 
 
 # edge-list broadcast budget: 5M edges × ~24 B/row ≈ 120 MB, inside
@@ -1816,7 +1801,7 @@ def _oriented_copurchase(spark: SparkSession, sf: str):
     return memo_local_checkpoint(oriented), n_edges, n_nodes
 
 
-@plan_memo("TRIANGLE_BROADCAST_MAX", "PAIR_MIN_SUPPORT")
+@memoized("derived")
 def graph_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     """Triangle counting over the co-purchase graph with DEGREE-ORDERED
     orientation (compact-forward): each undirected edge is directed

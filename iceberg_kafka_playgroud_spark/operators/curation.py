@@ -29,7 +29,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint
-from ..plan_cache import cached, plan_memo
+from ..plan_cache import cached, memoized
 from ..schema import load_table
 from ..tmpdirs import tmpdir_reclaimed_at_exit
 from .dedup import (
@@ -1207,7 +1207,7 @@ GLOBAL_SHUFFLE_SALT = "epoch0"  # seed: change per epoch for a new order
 GLOBAL_SHUFFLE_SHARD = 256  # docs per training shard
 
 
-@plan_memo("GLOBAL_SHUFFLE_SALT", "GLOBAL_SHUFFLE_SHARD")
+@memoized("derived")
 def curation_global_shuffle(spark: SparkSession, sf: str) -> DataFrame:
     """Seeded global shuffle + shard assignment — the reproducible
     pseudorandom permutation a training run needs before packing

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoints import release_checkpoint_bucket, release_local_checkpoint
-from ..plan_cache import cached, plan_memo, session_memo
+from ..plan_cache import cached, memoized, session_memo
 from ..schema import load_table, table_row_count
 from .text import normalized, tokens
 
@@ -190,7 +190,7 @@ WJ_PRUNE_CAND_DOC_PCT = 10
 # across resets, it runs ONCE per session instead of once per rebuilt
 # plan (a bare tiny-job count still costs a full stage-scheduling
 # round trip).  No release: the cand frame's cache belongs to whoever
-# owns its ``cached()`` (a plan entry, or the cached-frame memo).
+# owns its ``cached()`` (a memoized entry, or the cached-frame memo).
 _N_CAND_MEMO = session_memo("retained")
 
 
@@ -308,7 +308,7 @@ def _minhash_candidates(spark: SparkSession, sf: str):
     return sh, cand
 
 
-@plan_memo("CAND_BROADCAST_MAX_PAIRS")
+@memoized("derived")
 def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs via MinHash LSH + exact-Jaccard verification.
 
@@ -594,7 +594,7 @@ def dedup_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@plan_memo()
+@memoized("derived")
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash Hamming-0 bucket sizes: doc_id, signature, and how many
     docs share it exactly (near-dup group size). The signature table is
@@ -635,7 +635,7 @@ SIMHASH_BANDS = K_HAMMING + 1  # pigeonhole: d(x,y) ≤ k ⇒ ≥1 band equal
 SIMHASH_BITS = 128
 
 
-@plan_memo("K_HAMMING", "SIMHASH_BANDS", "SIMHASH_BITS")
+@memoized("derived")
 def dedup_simhash_hamming(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs at Hamming distance ≤ 3 via banded 128-bit SimHash.
 
@@ -1599,7 +1599,7 @@ FROM sizes GROUP BY band_idx ORDER BY band_idx
 """
 
 
-@plan_memo("CAND_BROADCAST_MAX_PAIRS", "CAND_SHINGLE_BROADCAST_MAX_PAIRS")
+@memoized("derived")
 def dedup_minhash_calibration(spark: SparkSession, sf: str) -> DataFrame:
     """Signature-calibration audit: how well does MinHash agreement
     predict exact Jaccard? For every banded candidate pair, count the
@@ -2051,11 +2051,7 @@ ORDER BY n_stitch_pairs DESC, t.gram LIMIT {STITCH_TOP}
 # -- IDF-weighted Jaccard scoring -------------------------------------
 
 
-@plan_memo(
-    "WJ_PRUNE_CAND_DOC_PCT",
-    "CAND_BROADCAST_MAX_PAIRS",
-    "CAND_SHINGLE_BROADCAST_MAX_PAIRS",
-)
+@memoized("derived")
 def dedup_weighted_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     """IDF-weighted Jaccard over the MinHash candidate pairs: rare
     shingles count more than boilerplate ones, so two docs sharing a

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..plan_cache import session_memo
+from ..plan_cache import memoized
 from ..schema import load_table
 from ..session import scoped_conf
 from ..tmpdirs import tmpdir_reclaimed_at_exit
@@ -474,9 +474,21 @@ def events_time_rollup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# staged alternate-format copies of the orders table per
-# (applicationId, sf, fmt) — written once, reclaimed at exit
-_FMT_STAGE_MEMO = session_memo("retained")
+# staged alternate-format copies of the orders table per (session,
+# sf, fmt) — written once, reclaimed at exit
+@memoized("retained")
+def _staged_orders(spark: SparkSession, sf: str, fmt: str) -> str:
+    stage = tmpdir_reclaimed_at_exit(f"orders_{fmt}_")
+    w = load_table(spark, sf, "orders").write.mode("overwrite")
+    if fmt == "csv":
+        w.option("header", "true").csv(stage)
+    elif fmt == "orc":
+        w.orc(stage)
+    elif fmt == "xml":
+        w.format("xml").option("rowTag", "order").save(stage)
+    else:
+        w.json(stage)
+    return stage
 
 
 def _orders_in_format(spark: SparkSession, sf: str, fmt: str) -> DataFrame:
@@ -487,21 +499,8 @@ def _orders_in_format(spark: SparkSession, sf: str, fmt: str) -> DataFrame:
     schema, exercising its field-name-based resolution. Timestamps
     round-trip as ISO-8601 text in both formats under the UTC session.
     """
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"), fmt)
-    stage = _FMT_STAGE_MEMO.get(key)
     o = load_table(spark, sf, "orders")
-    if stage is None:
-        stage = tmpdir_reclaimed_at_exit(f"orders_{fmt}_")
-        w = o.write.mode("overwrite")
-        if fmt == "csv":
-            w.option("header", "true").csv(stage)
-        elif fmt == "orc":
-            w.orc(stage)
-        elif fmt == "xml":
-            w.format("xml").option("rowTag", "order").save(stage)
-        else:
-            w.json(stage)
-        _FMT_STAGE_MEMO[key] = stage
+    stage = _staged_orders(spark, sf, fmt)
     if fmt == "csv":
         return (
             spark.read.schema(o.schema).option("header", "true").csv(stage)

@@ -35,7 +35,7 @@ int64 format, q = floor(x·PI_XSCALE + 0.5), so every distance, mean
 and Gram product is integer-exact and every oracle replays it
 bit-for-bit.  One section below owns that format: ``fixed_point`` is
 the quantizer, ``_quantized`` the one cached (vec_id, qx) corpus
-(owned by its session memo — no operator unpersists it, because Spark
+(owned by its memo entry — no operator unpersists it, because Spark
 caches by plan and an unpersist would drop every other holder's copy
 too), ``_nearest`` the integer-L2 argmin over a codebook, ``_lloyd``
 the one Lloyd loop (PQ's subspaces; k-means is one subspace), and
@@ -58,7 +58,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint
-from ..plan_cache import cached, plan_memo, session_memo, unpersist_frames
+from ..plan_cache import cached, memoized
 from ..schema import load_table, table_row_count
 from ..tmpdirs import tmpdir_reclaimed_at_exit
 
@@ -206,9 +206,6 @@ def cosine(a: Column, b: Column) -> Column:
 
 PI_XSCALE = 1000  # embedding fixed-point scale
 
-# (applicationId, sf) → the cached (vec_id, qx) corpus
-_QUANTIZED_MEMO = session_memo("derived", release=unpersist_frames)
-
 
 def fixed_point(arr: Column) -> Column:
     """An embedding array as int64 fixed-point: q = floor(x·PI_XSCALE
@@ -221,20 +218,18 @@ def fixed_point(arr: Column) -> Column:
     )
 
 
+@memoized("derived")
 def _quantized(spark: SparkSession, sf: str) -> DataFrame:
     """The quantized corpus (vec_id, qx), cached once per session × sf
     for every k-means, PQ, IVF-PQ and power-iteration caller.  The memo
-    owns the cache: a reset releases it, and no caller unpersists it —
-    Spark caches by plan, so one caller's unpersist would drop it from
-    under the others."""
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"))
-    if key not in _QUANTIZED_MEMO:
-        _QUANTIZED_MEMO[key] = (
-            load_table(spark, sf, "embeddings")
-            .select("vec_id", fixed_point(F.col("embedding")).alias("qx"))
-            .cache()
+    entry owns the cache: a reset releases it, and no caller unpersists
+    it — Spark caches by plan, so one caller's unpersist would drop it
+    from under the others."""
+    return cached(
+        load_table(spark, sf, "embeddings").select(
+            "vec_id", fixed_point(F.col("embedding")).alias("qx")
         )
-    return _QUANTIZED_MEMO[key]
+    )
 
 
 def _nearest(vec_sql: str, book: dict) -> Column:
@@ -540,13 +535,6 @@ def _block_pair_scan(spark: SparkSession, sf: str, kernel, schema: str) -> DataF
     return both.groupBy("bi", "bj").applyInPandas(scan, schema=schema)
 
 
-# (applicationId, sf, threshold, N_BLOCKS) → pair frame.  A dict memo,
-# not just cache(): the plan embeds a per-call Python closure, so two
-# builds are NEVER sameSemantics and each would register a fresh cache
-# entry — the memo pins ONE frame (hence one cache entry) per key.
-_PAIRS_MEMO = session_memo("derived", release=unpersist_frames)
-
-
 def embedding_near_dup_pairs(
     spark: SparkSession, sf: str, threshold: float | None = None
 ) -> DataFrame:
@@ -557,16 +545,18 @@ def embedding_near_dup_pairs(
     at CALL time (not def time), so monkeypatching the global behaves
     the way the pre-r11 closure did — the patched value wins.
     """
-    import numpy as np
-
     if threshold is None:
         threshold = NEAR_DUP_THRESHOLD
-    memo_key = (
-        spark.sparkContext.applicationId, sf.rstrip("/"), threshold, N_BLOCKS
-    )
-    hit = _PAIRS_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
+    return _near_dup_pairs(spark, sf, threshold)
+
+
+# memoized, not just cached(): the plan embeds a per-call Python
+# closure, so two builds are NEVER sameSemantics and each would
+# register a fresh cache entry — the memo pins ONE frame (hence one
+# cache entry) per key.
+@memoized("derived")
+def _near_dup_pairs(spark: SparkSession, sf: str, threshold: float) -> DataFrame:
+    import numpy as np
 
     def near_pairs(ids_a, mat_a, ids_b, mat_b, same: bool):
         # BLAS matmul is only a PRE-filter (pairwise summation can
@@ -601,7 +591,7 @@ def embedding_near_dup_pairs(
     # degree/border/roles subtrees would otherwise each re-run the
     # whole block-pair scan (Spark does not auto-materialize shared
     # subplans) — the same pattern as dedup_minhash_lsh's pair cache
-    out = (
+    return cached(
         _block_pair_scan(spark, sf, near_pairs, "d1 long, d2 long, sim double")
         # coalesce before caching (the _copurchase_edges rule): the
         # pair set is near-dup-sized, but it inherits the block
@@ -610,10 +600,7 @@ def embedding_near_dup_pairs(
         # near-empty tasks per scan.  On a real cluster AQE advisory
         # sizing makes the same call from runtime statistics.
         .coalesce(8)
-        .cache()
     )
-    _PAIRS_MEMO[memo_key] = out
-    return out
 
 
 # --- LSH sketch (embedding_near_dup_lsh) ----------------------------------
@@ -684,20 +671,21 @@ VERIFY_BROADCAST_MAX = 200_000  # rows; 200k × 64 f64 ≈ 100 MB broadcast
 
 
 def _fold_cosine(x: "np.ndarray", y: "np.ndarray") -> "np.ndarray":  # noqa: F821
-    """Row-wise cosine replicating Catalyst's ``cosine()`` BIT-FOR-BIT:
-    F.aggregate folds left-to-right, so the dot/norm accumulations here
-    run one dimension at a time (vectorized ACROSS rows, sequential
-    across dims) — NumPy's pairwise-summation dot() would differ in the
-    last ulp and could flip a 6-decimal rounding."""
+    """Cosine over the last axis replicating Catalyst's ``cosine()``
+    BIT-FOR-BIT: F.aggregate folds left-to-right, so the dot/norm
+    accumulations here run one dimension at a time (vectorized ACROSS
+    the leading axes, sequential across dims) — NumPy's
+    pairwise-summation dot() would differ in the last ulp and could
+    flip a 6-decimal rounding.  Leading axes broadcast, so
+    ``_fold_cosine(a[:, None], b[None])`` is the all-pairs matrix with
+    every element in the same fold order."""
     import numpy as np
 
-    acc = np.zeros(len(x))
-    nx = np.zeros(len(x))
-    ny = np.zeros(len(x))
-    for j in range(x.shape[1]):
-        acc = acc + x[:, j] * y[:, j]
-        nx = nx + x[:, j] * x[:, j]
-        ny = ny + y[:, j] * y[:, j]
+    acc = nx = ny = 0.0
+    for j in range(x.shape[-1]):
+        acc = acc + x[..., j] * y[..., j]
+        nx = nx + x[..., j] * x[..., j]
+        ny = ny + y[..., j] * y[..., j]
     return acc / (np.sqrt(nx) * np.sqrt(ny))
 
 
@@ -833,14 +821,7 @@ def _cell_sim_matrix(x, cmat):
     """rows × cells rounded cosines, Catalyst fold order per cell —
     the ONE definition shared by build and probe so a parity fix can
     never be applied to one path and missed in another."""
-    import numpy as np
-
-    out = np.empty((len(x), len(cmat)))
-    for k in range(len(cmat)):
-        out[:, k] = _round_half_up(
-            _fold_cosine(x, np.broadcast_to(cmat[k], x.shape))
-        )
-    return out
+    return _round_half_up(_fold_cosine(x[:, None], cmat[None]))
 
 
 def _assign_cells(em, bc, keep_vec: bool):
@@ -943,15 +924,6 @@ def _ivf_probe(spark, em, corpus, cent_ids, cent_mat):
     return _top_ranked(_query_sims(probes, corpus, on="cell"), TOP_K)
 
 
-# persisted-index location per (applicationId, sf): the index is the
-# once-a-day build artifact — rebuilding AND re-writing it per call
-# (bench runs best-of-4) would leak a corpus copy into /tmp each time.
-# A reset removes the index dir: the next build writes a fresh one.
-_IVF_INDEX_MEMO = session_memo(
-    "derived", release=lambda memo: shutil.rmtree(memo[0], ignore_errors=True)
-)
-
-
 def ann_index_persist_probe(spark: SparkSession, sf: str) -> DataFrame:
     """IVF index LIFECYCLE: build the cell-assignment index once,
     persist it as a parquet table partitioned by cell, then serve the
@@ -972,29 +944,30 @@ def ann_index_persist_probe(spark: SparkSession, sf: str) -> DataFrame:
     return _ivf_probe(spark, em, corpus, cent_ids, cent_mat)
 
 
+# the index is the once-a-day build artifact — rebuilding AND
+# re-writing it per call (bench runs best-of-4) would leak a corpus
+# copy into /tmp each time.  A reset removes the index dir: the next
+# build writes a fresh one.
+@memoized(
+    "derived", release=lambda index: shutil.rmtree(index[0], ignore_errors=True)
+)
 def _ivf_index_on_disk(spark: SparkSession, sf: str):
     """Build-once (per session × sf) cell-partitioned on-disk IVF
     index — the nightly artifact both the probe lifecycle op and the
     rebalance op serve from. Returns (index_dir, cent_ids, cent_mat)."""
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"))
-    memo = _IVF_INDEX_MEMO.get(key)
-    if memo is None:
-        _, built, cent_ids, cent_mat = _ivf_build(spark, sf)
-        index_dir = tmpdir_reclaimed_at_exit("ivf_index_")
-        # hash-repartition BY CELL before the dynamic-partition write:
-        # same ≤K_CELLS file count (each task owns whole cells, so
-        # still one file per cell), written MOSTLY in parallel — 16
-        # keys hashed into 16 buckets collide, so expect ~10 occupied
-        # tasks with a few writing 2-3 cells sequentially (r14 A/B:
-        # 0.66 → 0.42 s median at sf0.1).  NOT the refuted round-robin
-        # spread, which fanned every task across every cell (32×16
-        # small files).
-        built.repartition(K_CELLS, "cell").write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(index_dir)
-        memo = (index_dir, cent_ids, cent_mat)
-        _IVF_INDEX_MEMO[key] = memo
-    return memo
+    _, built, cent_ids, cent_mat = _ivf_build(spark, sf)
+    index_dir = tmpdir_reclaimed_at_exit("ivf_index_")
+    # hash-repartition BY CELL before the dynamic-partition write:
+    # same ≤K_CELLS file count (each task owns whole cells, so still
+    # one file per cell), written MOSTLY in parallel — 16 keys hashed
+    # into 16 buckets collide, so expect ~10 occupied tasks with a few
+    # writing 2-3 cells sequentially (r14 A/B: 0.66 → 0.42 s median at
+    # sf0.1).  NOT the refuted round-robin spread, which fanned every
+    # task across every cell (32×16 small files).
+    built.repartition(K_CELLS, "cell").write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(index_dir)
+    return index_dir, cent_ids, cent_mat
 
 
 def ann_ivf_balance_audit(spark: SparkSession, sf: str) -> DataFrame:
@@ -1240,19 +1213,17 @@ KM_K = 8  # clusters
 KM_ITERS = 2  # Lloyd update rounds (final stats on the updated model)
 
 
-# trained model memo per (applicationId, sf, KM_K, KM_ITERS): k-means
-# is train-once / assign-many — every production pipeline persists the
-# model rather than re-running Lloyd per consumer. The loop costs
-# ~3 driver-synchronized jobs whose dominant cost is Catalyst codegen
-# of the K×dim assignment expression, so re-training per call would
-# multiply that fixed cost into every dependent operator
-# (embedding_kmeans_lloyd, dedup_semantic_semdedup) and every warm
-# bench run. Deterministic model → memoization cannot change results;
-# the key carries the constants training reads, so a patched KM_ITERS
-# trains its own model instead of hitting the default one.
-_KM_MODEL_MEMO = session_memo("derived", release=unpersist_frames)
-
-
+# trained model memo: k-means is train-once / assign-many — every
+# production pipeline persists the model rather than re-running Lloyd
+# per consumer. The loop costs ~3 driver-synchronized jobs whose
+# dominant cost is Catalyst codegen of the K×dim assignment
+# expression, so re-training per call would multiply that fixed cost
+# into every dependent operator (embedding_kmeans_lloyd,
+# dedup_semantic_semdedup) and every warm bench run. Deterministic
+# model → memoization cannot change results; the key carries the
+# module constants, so a patched KM_ITERS trains its own model
+# instead of hitting the default one.
+@memoized("derived")
 def _kmeans_final_assign(
     spark: SparkSession, sf: str
 ) -> tuple[DataFrame, dict]:
@@ -1263,19 +1234,18 @@ def _kmeans_final_assign(
     See ``embedding_kmeans_lloyd`` for the parity recipe and scale
     shape.
     """
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"), KM_K, KM_ITERS)
-    if key not in _KM_MODEL_MEMO:
-        base = _quantized(spark, sf)
-        _, (cents,) = _lloyd(base, KM_K, 1, KM_ITERS)
-        best = _nearest("qx", cents)
-        # the assignment is the fan-out point every consumer scans: a
-        # cache the first consumer's action fills (the streaming
-        # assigner only needs the centroids and never fills it)
-        assigned = base.select(
+    base = _quantized(spark, sf)
+    _, (cents,) = _lloyd(base, KM_K, 1, KM_ITERS)
+    best = _nearest("qx", cents)
+    # the assignment is the fan-out point every consumer scans: a cache
+    # the first consumer's action fills (the streaming assigner only
+    # needs the centroids and never fills it)
+    assigned = cached(
+        base.select(
             "vec_id", "qx", best["cid"].alias("cid"), best["dist"].alias("dist")
-        ).cache()
-        _KM_MODEL_MEMO[key] = (assigned, cents)
-    return _KM_MODEL_MEMO[key]
+        )
+    )
+    return assigned, cents
 
 
 def embedding_kmeans_lloyd(spark: SparkSession, sf: str) -> DataFrame:
@@ -2131,12 +2101,8 @@ PQ_ITERS = 2  # Lloyd rounds per subspace codebook
 PQ_TOP = 10
 PQ_QUERY_VEC = 0  # query = vector 0, consistent with HYBRID_QUERY_DOC
 
-# trained PQ models, one entry per model: (session, sf, variant,
-# every constant its training and query row read) → the cached code
-# frames, codebooks and query row
-_PQ_MODEL_MEMO = session_memo("derived", release=unpersist_frames)
 
-
+@memoized("derived")
 def _pq_model(spark: SparkSession, sf: str):
     """Train PQ_M independent sub-codebooks over the quantized corpus
     (``_lloyd`` with PQ_M subspaces) and encode every vector to PQ_M
@@ -2150,31 +2116,27 @@ def _pq_model(spark: SparkSession, sf: str):
     everything downstream (the memory-bound win PQ exists for: a
     100 TB embedding corpus compresses ~32× before the distance pass).
     """
-    key = (
-        spark.sparkContext.applicationId, sf.rstrip("/"), "pq",
-        PQ_M, PQ_CODES, PQ_ITERS, PQ_QUERY_VEC,
-    )
-    if key not in _PQ_MODEL_MEMO:
-        base = _quantized(spark, sf)
-        seed_rows, books = _lloyd(base, PQ_CODES, PQ_M, PQ_ITERS)
-        codes = base.select(
+    base = _quantized(spark, sf)
+    seed_rows, books = _lloyd(base, PQ_CODES, PQ_M, PQ_ITERS)
+    codes = cached(
+        base.select(
             "vec_id",
             "qx",
             *[c.alias(f"code_{m}") for m, c in enumerate(_codes(books))],
-        ).cache()
-        # no eager count: the first consumer's action fills the cache —
-        # an eager count here paid one extra driver-synchronized job per
-        # recompute rep for work the consumer's job performs anyway (r17
-        # job-floor pass).  After a bench clearCache() the memoized lazy
-        # ``codes`` re-derives from parquet on the first consumer action
-        # — still correct (the codebook literals are frozen in the
-        # plan), the first warm rep just absorbs the encode cost the
-        # eager count used to isolate.  Do NOT re-add the count.
-        _PQ_MODEL_MEMO[key] = (codes, books, _query_row(base, seed_rows))
-    return _PQ_MODEL_MEMO[key]
+        )
+    )
+    # no eager count: the first consumer's action fills the cache — an
+    # eager count here paid one extra driver-synchronized job per
+    # recompute rep for work the consumer's job performs anyway (r17
+    # job-floor pass).  After a bench clearCache() the memoized lazy
+    # ``codes`` re-derives from parquet on the first consumer action —
+    # still correct (the codebook literals are frozen in the plan), the
+    # first warm rep just absorbs the encode cost the eager count used
+    # to isolate.  Do NOT re-add the count.
+    return codes, books, _query_row(base, seed_rows)
 
 
-@plan_memo("PQ_M", "PQ_CODES", "PQ_ITERS", "PQ_TOP", "PQ_QUERY_VEC")
+@memoized("derived")
 def ann_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance (ADC) — the
     missing family member next to brute/blocked/LSH/IVF: vectors are
@@ -2612,13 +2574,7 @@ def embedding_knn_label_eval(spark: SparkSession, sf: str) -> DataFrame:
         def emit(ids_a, mat_a, ids_b, mat_b) -> None:
             # exact kernel on ALL cross pairs (no threshold prefilter —
             # kNN needs full rows); per-vector top-K inside the group
-            sims = np.empty((len(ids_a), len(ids_b)))
-            for r in range(len(ids_a)):
-                sims[r] = _round_half_up(
-                    _fold_cosine(
-                        np.repeat(mat_a[r][None, :], len(ids_b), axis=0), mat_b
-                    )
-                )
+            sims = _round_half_up(_fold_cosine(mat_a[:, None], mat_b[None]))
             if same:
                 np.fill_diagonal(sims, -np.inf)
             k = min(KNN_K, sims.shape[1])
@@ -2727,7 +2683,7 @@ GROUP BY e.label ORDER BY label
 DBSCAN_MIN_NEIGHBORS = 2  # core point: ≥ this many eps-neighbors
 
 
-@plan_memo("DBSCAN_MIN_NEIGHBORS", "NEAR_DUP_THRESHOLD", "N_BLOCKS")
+@memoized("derived")
 def embedding_dbscan_core(spark: SparkSession, sf: str) -> DataFrame:
     """DBSCAN density classification of the embedding corpus at
     eps = NEAR_DUP_THRESHOLD cosine: CORE points have ≥
@@ -2836,7 +2792,7 @@ MMR_MU = 0.3  # redundancy weight — an explicit literal, NOT 1-λ: the
 # oracle's parsed 0.3 in the last ulp
 
 
-@plan_memo("N_QUERIES", "MMR_POOL", "MMR_K", "MMR_LAMBDA", "MMR_MU")
+@memoized("derived")
 def ann_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     """Maximal-marginal-relevance diversification (Carbonell &
     Goldstein 1998) — the standard post-ANN re-rank that trades raw
@@ -2876,8 +2832,7 @@ def ann_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
         rel = pdf["sim"].to_numpy()
         mat = np.array(pdf["vec"].tolist(), dtype=np.float64)
         n = len(ids)
-        ii, jj = np.indices((n, n)).reshape(2, -1)
-        psim = _round_half_up(_fold_cosine(mat[ii], mat[jj])).reshape(n, n)
+        psim = _round_half_up(_fold_cosine(mat[:, None], mat[None]))
         qid = int(pdf["query_id"].iloc[0])
         picked: list[int] = []
         steps, out_ids, scores = [], [], []
@@ -3117,49 +3072,8 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
     driver-computed literal map of NPROBE·M·K entries, and the top-k
     is a TakeOrdered.
     """
-    key = (
-        spark.sparkContext.applicationId, sf.rstrip("/"), "ivfpq",
-        IVFPQ_CELLS, PQ_M, PQ_CODES, PQ_ITERS, PQ_QUERY_VEC,
-    )
     base = _quantized(spark, sf)
-    if key not in _PQ_MODEL_MEMO:
-        # coarse cells: the first IVFPQ_CELLS vectors (zero Lloyd rounds)
-        cent_rows, (cents,) = _lloyd(base, IVFPQ_CELLS, 1, 0)
-        centlit = F.expr(
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{int(v)}L" for v in cents[j]) + ")"
-                for j in sorted(cents)
-            )
-            + ")"
-        )
-        res = (
-            base.select(
-                "vec_id", "qx", _nearest("qx", cents)["cid"].alias("cell")
-            )
-            .select(
-                "vec_id",
-                "cell",
-                F.zip_with(
-                    "qx",
-                    F.element_at(centlit, F.col("cell") + 1),
-                    lambda a, b: a - b,
-                ).alias("qx"),
-            )
-            .cache()
-        )
-        _, books = _lloyd(res, PQ_CODES, PQ_M, PQ_ITERS)
-        codes = res.select(
-            "vec_id",
-            "cell",
-            *[c.alias(f"code_{m}") for m, c in enumerate(_codes(books))],
-        ).cache()
-        # the query row is raw: looked up among the coarse seeds, never
-        # among the residual frame's
-        _PQ_MODEL_MEMO[key] = (
-            codes, res, cents, books, _query_row(base, cent_rows)
-        )
-    codes, _, cents, books, qrow = _PQ_MODEL_MEMO[key]
+    codes, cents, books, qrow = _ivfpq_model(spark, sf)
 
     # probe the query's nearest cells (integer L2, (dist, cid) ties),
     # each scored with the query's residual against that cell
@@ -3192,6 +3106,47 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
         )
         .orderBy(F.col("pq_dist").asc(), F.col("vec_id").asc())
     )
+
+
+@memoized("derived")
+def _ivfpq_model(spark: SparkSession, sf: str):
+    """The IVF-PQ model (``ann_ivfpq_residual_topk``): coarse cells,
+    the cached residual frame, residual codebooks and the codes.
+    Returns (codes, cents, books, qrow)."""
+    base = _quantized(spark, sf)
+    # coarse cells: the first IVFPQ_CELLS vectors (zero Lloyd rounds)
+    cent_rows, (cents,) = _lloyd(base, IVFPQ_CELLS, 1, 0)
+    centlit = F.expr(
+        "array("
+        + ", ".join(
+            "array(" + ", ".join(f"{int(v)}L" for v in cents[j]) + ")"
+            for j in sorted(cents)
+        )
+        + ")"
+    )
+    res = cached(
+        base.select("vec_id", "qx", _nearest("qx", cents)["cid"].alias("cell"))
+        .select(
+            "vec_id",
+            "cell",
+            F.zip_with(
+                "qx",
+                F.element_at(centlit, F.col("cell") + 1),
+                lambda a, b: a - b,
+            ).alias("qx"),
+        )
+    )
+    _, books = _lloyd(res, PQ_CODES, PQ_M, PQ_ITERS)
+    codes = cached(
+        res.select(
+            "vec_id",
+            "cell",
+            *[c.alias(f"code_{m}") for m, c in enumerate(_codes(books))],
+        )
+    )
+    # the query row is raw: looked up among the coarse seeds, never
+    # among the residual frame's
+    return codes, cents, books, _query_row(base, cent_rows)
 
 
 _IVFPQ_ORACLE = f"""

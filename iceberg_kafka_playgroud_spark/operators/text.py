@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plan_cache import cached, plan_memo
+from ..plan_cache import cached, memoized
 from ..schema import load_table
 
 # minimal English function-word list for the stopword heuristics
@@ -1249,11 +1249,11 @@ BOILER_N = 3  # n-gram width of the boilerplate unit
 BOILER_MIN_DF = 5  # grams in >= this many docs are boilerplate
 
 # The per-doc gram frame is corpus-sized, so ownership is explicit:
-# plan_cache.plan_memo holds ONE prepared plan per (session, sf,
-# gates), and its entry owns the cached() gram frame until the next
-# reset releases both — see the docstring's "Plan at 100 TB"
+# plan_cache.memoized holds ONE prepared plan per (session, sf,
+# constants), and its entry owns the cached() gram frame until the
+# next reset releases both — see the docstring's "Plan at 100 TB"
 # paragraph for the full policy.
-@plan_memo("BOILER_N", "BOILER_MIN_DF")
+@memoized("derived")
 def text_boilerplate_coverage(spark: SparkSession, sf: str) -> DataFrame:
     """Boilerplate-coverage audit: trigrams appearing in >=
     BOILER_MIN_DF distinct documents are "boilerplate" (the

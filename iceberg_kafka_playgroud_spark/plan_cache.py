@@ -1,10 +1,11 @@
-"""Session-memo registry, and the prepared-plan layer built on it.
+"""Session-memo registry, and the memoized-builder layer built on it.
 
-Every engine memo (the plan cache below, each module's ``_*_MEMO``)
-is a ``session_memo(kind, release)``; resets and dead-session sweeps
-loop over the registry, so this module imports no operator.
+Every engine memo (each ``memoized`` function's ``.memo``, each
+module's ``_*_MEMO``) is a ``session_memo(kind, release)``; resets
+and dead-session sweeps loop over the registry, so this module
+imports no operator.
 
-Prepared plans: memoize built (lazy) DataFrames per session.
+Prepared plans and session artifacts: ``memoized(kind, release)``.
 
 Building a DataFrame plan from Python is not free: every column
 expression, join, and alias is a py4j round trip, and ``cache()`` /
@@ -17,46 +18,60 @@ and (b) inflates further when the driver host is loaded, because it
 is hundreds of serialized py4j latencies (the r10 driver-bench drift
 on exactly these queries).
 
-``plan_memo`` gives an operator prepared-statement semantics: the
-FIRST call per (session, sf, gate-constants) builds the plan; later
-calls return the same DataFrame object.  Two distinct things are
-saved on warm calls: (a) the py4j plan build is skipped for every
-wrapped operator, and (b) where the builder itself owns a
-``cached()`` intermediate (MinHash signatures, the candidate pairs,
-the near-dup pair graph), warm actions read those materialized
-intermediates instead of recomputing them — that is answer-fragment
-caching, not just plan caching, and it is why bench reports a
-separate RECOMPUTE-warm column that calls
-``clear_materializations(spark)`` between timed reps: the block
-cache, every derived memo and every prepared plan are dropped, so a
-rep rebuilds its plan and re-executes the full dataflow, the same
-work DuckDB pays per run (the growth batteries use the same reset).
-At 100 TB the saved plan-build work is the same fixed driver cost
-(plan building does not scale with data); the cached intermediates
-are doc-count-sized tables any production system would persist.
+``memoized`` gives a builder ``fn(spark, *args)`` built-once-per-session
+semantics — a table handle, a trained model, a staged file, a
+prepared operator plan: the FIRST call per key builds; later calls
+return the same object.  Two distinct things are saved on warm
+calls: (a) the py4j plan build is skipped for every wrapped operator,
+and (b) where the builder itself owns a ``cached()`` intermediate
+(MinHash signatures, the candidate pairs, the near-dup pair graph),
+warm actions read those materialized intermediates instead of
+recomputing them — that is answer-fragment caching, not just plan
+caching, and it is why bench reports a separate RECOMPUTE-warm column
+that calls ``clear_materializations(spark)`` between timed reps: the
+block cache, every derived memo and every prepared plan are dropped,
+so a rep rebuilds its plan and re-executes the full dataflow, the
+same work DuckDB pays per run (the growth batteries use the same
+reset).  At 100 TB the saved plan-build work is the same fixed driver
+cost (plan building does not scale with data); the cached
+intermediates are doc-count-sized tables any production system would
+persist.
 
-A plan's ``cached()`` intermediates are owned by its entry: dropping
+A build's ``cached()`` intermediates are owned by its entry: dropping
 the entry — with or without a session — unpersists them, and a build
 that raises unpersists the ones it registered before failing.  A frame
 cached outside any build is owned by one ``"derived"`` memo keyed by
 its logical plan, so every reset releases it too.
 
-Rules for wrapping an operator:
+Two memo mechanisms, one per kind of input:
 
-1. PURE PLAN BUILDERS ONLY.  The function must return a LAZY frame
-   and perform no per-call work a caller could observe (no driver
-   collect of results, no ``createDataFrame`` of computed rows, no
-   streaming-query lifecycle, no sink writes).  Memoizing an eager
-   operator would skip its work entirely — that is caching the
+- ``memoized`` when the artifact is a function of the call's arguments
+  and the module's constants (tables, models, staged files, plans);
+- ``SessionMemo.by_plan`` when it is a function of a DataFrame the
+  caller passes in (labels of a pair graph, checkpoints, counts of a
+  candidate frame, a staged copy of a given frame).
+
+Rules for wrapping a function:
+
+1. PURE PLAN BUILDERS ONLY (for operators).  An operator must return
+   a LAZY frame and perform no per-call work a caller could observe
+   (no driver collect of results, no ``createDataFrame`` of computed
+   rows, no streaming-query lifecycle, no sink writes).  Memoizing an
+   eager operator would skip its work entirely — that is caching the
    answer, not the plan.  (BFS/LPA, the stream harnesses, and the
-   REST paths therefore stay unwrapped.)
-2. DECLARE EVERY MODULE CONSTANT THAT SHAPES THE PLAN.  The memo key
-   includes the named globals read at call time, so a test that
-   monkeypatches a broadcast budget or prune gate gets a fresh build
-   (and the patched plan), never a stale hit.
+   REST paths therefore stay unwrapped; their once-a-session inputs
+   are memoized helpers.)
+2. THE KEY IS ``(applicationId, *args, constants)``.  String args drop
+   a trailing ``/``; ``constants`` is every upper-case global of the
+   function's module whose value is an int, float, str, bytes, bool,
+   tuple, frozenset or None, read at call time — so a test that
+   monkeypatches a broadcast budget, prune gate or training constant
+   gets a fresh build, never a stale hit, and no one keeps a list of
+   the constants a memo depends on.  Upper-case module globals must
+   therefore stay constant at run time.
 3. CACHE INTERMEDIATES WITH ``cached()``, never a bare ``.cache()``,
-   so a reset can release them: inside a build the plan entry owns
-   them, outside one the session's cached-frame memo does.  Never
+   so a reset can release them: inside a build the entry owns them,
+   outside one the session's cached-frame memo does.  Never
    ``cached()`` a per-micro-batch frame — each batch is a new plan, so
    the memo would grow once per batch.
 """
@@ -73,7 +88,7 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = [
     "session_memo",
     "unpersist_frames",
-    "plan_memo",
+    "memoized",
     "cached",
     "evict_dead_sessions",
     "clear_materializations",
@@ -150,16 +165,10 @@ def unpersist_frames(value) -> None:
             v.unpersist()
 
 
-# (applicationId, sf, qualname, gate-values...) →
-# (DataFrame, cache handles its build registered via ``cached()``)
-_PLAN_CACHE = session_memo(
-    "derived", release=lambda entry: unpersist_frames(entry[1])
-)
-
-# collector active during a plan build (nesting-safe via save/restore
-# in the decorator; thread-local so a concurrent build — e.g. a
-# streaming micro-batch thread calling a helper that uses cached() —
-# can never attribute handles to another thread's entry)
+# collector active during a memoized build (nesting-safe via
+# save/restore in the decorator; thread-local so a concurrent build —
+# e.g. a streaming micro-batch thread calling a helper that uses
+# cached() — can never attribute handles to another thread's entry)
 _TLS = threading.local()
 
 
@@ -168,7 +177,7 @@ def _unpersist_bucket(bucket: list) -> None:
     unpersist_frames([frame for _, frame in bucket])
 
 
-# frames ``cached()`` outside any plan build, per (session, logical
+# frames ``cached()`` outside any memoized build, per (session, logical
 # plan) — ``by_plan`` buckets, so a repeat call returns the frame
 # already cached instead of registering a second handle
 _CACHED_FRAMES = session_memo("derived", release=_unpersist_bucket)
@@ -176,7 +185,7 @@ _CACHED_FRAMES = session_memo("derived", release=_unpersist_bucket)
 
 def cached(df: DataFrame) -> DataFrame:
     """``df.cache()`` with an owner that a reset releases: an enclosing
-    ``plan_memo`` build's entry, or outside a build ``_CACHED_FRAMES``
+    ``memoized`` build's entry, or outside a build ``_CACHED_FRAMES``
     (which may return an earlier frame of the same plan — use the
     return value, by column name)."""
     collect = getattr(_TLS, "collect", None)
@@ -230,33 +239,54 @@ def clear_materializations(spark: SparkSession | None = None) -> None:
             memo.drop()
 
 
-def plan_memo(*gate_names: str) -> Callable:
-    """Decorator for ``fn(spark, sf) -> DataFrame`` pure plan builders.
+# the value types a module constant may have to join a memo key
+_CONSTANT_TYPES = (int, float, str, bytes, bool, tuple, frozenset, type(None))
 
-    ``gate_names`` are module-global constants (looked up in the
-    function's own module at CALL time) that alter the built plan —
-    broadcast budgets, prune gates, iteration counts.  Their current
-    values are part of the memo key.  The ``cached()`` handles the
-    build registers are stored with the plan and unpersisted when the
-    entry is dropped, or at once when the build raises.
+
+def _constants(module_globals: dict) -> tuple:
+    """``(name, value)`` of every upper-case global of a module whose
+    value is a plain constant — the part of a ``memoized`` key no one
+    lists by hand."""
+    return tuple(
+        (name, v)
+        for name, v in module_globals.items()
+        if name.isupper() and isinstance(v, _CONSTANT_TYPES)
+    )
+
+
+def memoized(kind: str, release: Callable | None = None) -> Callable:
+    """Decorator for a session artifact ``fn(spark, *args)``: built
+    once per ``(applicationId, *args, constants)`` (module rule 2),
+    stored in its own registry memo ``fn.memo`` as ``(value, handles)``.
+
+    ``handles`` are the frames the build ``cached()``: dropping the
+    entry calls ``release(value)`` (when given) and unpersists them,
+    and a build that raises unpersists them at once.
     """
 
     def deco(fn: Callable) -> Callable:
+        def drop(entry) -> None:
+            value, handles = entry
+            if release is not None:
+                release(value)
+            unpersist_frames(handles)
+
+        memo = session_memo(kind, release=drop)
+
         @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf: str) -> DataFrame:
+        def wrapped(spark: SparkSession, *args):
             key = (
                 spark.sparkContext.applicationId,
-                sf.rstrip("/"),
-                fn.__qualname__,
-                tuple(fn.__globals__[g] for g in gate_names),
+                *(a.rstrip("/") if isinstance(a, str) else a for a in args),
+                _constants(fn.__globals__),
             )
-            hit = _PLAN_CACHE.get(key)
+            hit = memo.get(key)
             if hit is not None:
                 return hit[0]
             prev = getattr(_TLS, "collect", None)
             _TLS.collect = []
             try:
-                df = fn(spark, sf)
+                value = fn(spark, *args)
                 handles = tuple(_TLS.collect)
             except BaseException:
                 # the entry is never stored, so nothing would ever
@@ -265,10 +295,10 @@ def plan_memo(*gate_names: str) -> Callable:
                 raise
             finally:
                 _TLS.collect = prev
-            _PLAN_CACHE[key] = (df, handles)
-            return df
+            memo[key] = (value, handles)
+            return value
 
-        wrapped.__wrapped__ = fn
+        wrapped.memo = memo
         return wrapped
 
     return deco

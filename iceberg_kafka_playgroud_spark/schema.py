@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .plan_cache import session_memo
+from .plan_cache import memoized
 
 # --- canonical PurchaseEvent schema (SURVEY §1.1) -------------------------
 
@@ -146,13 +146,6 @@ def _compacted_source(sf_dir: str, name: str) -> str:
         return src
 
 
-# table-handle memo: a DataFrame is an immutable logical plan, so the
-# handle for (session, dir, table) can be built once and reused — this
-# is what a catalog does; it removes repeated footer reads and
-# driver↔JVM round trips from every query's plan-construction path.
-_TABLE_MEMO = session_memo("retained")
-
-
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the events fixture's ``ts`` to TimestampType (UTC).
 
@@ -198,18 +191,20 @@ def table_row_count(sf_dir: str, name: str) -> int:
         return pads.dataset(path, format="parquet").count_rows()
 
 
-def table_column_max(sf_dir: str, name: str, col: str):
-    """Exact column max from parquet footer statistics — no data scan.
+def table_column_bounds(sf_dir: str, name: str, col: str) -> tuple:
+    """Exact column ``(min, max)`` from parquet footer statistics — no
+    data scan.
 
     The catalog-stats counterpart of ``table_row_count``: reads
     O(row-groups) of metadata, the right way to derive watermark /
-    sentinel bounds at any corpus size (a ``df.agg(max(col))`` is a
-    full extra pass).  Timestamp columns come back as naive-UTC
-    ``datetime`` under BOTH fixture layouts (TIMESTAMP_NTZ-micros
-    yields datetime directly; nanos-long yields ints, truncated here
-    to µs exactly like ``normalize_event_ts``).  Raises if any footer
-    lacks min/max statistics — silent fallback would under-report the
-    max and break watermark proofs.
+    sentinel bounds and key-domain gates at any corpus size (a
+    ``df.agg(min(col), max(col))`` is a full extra pass).  Timestamp
+    columns come back as naive-UTC ``datetime`` under BOTH fixture
+    layouts (TIMESTAMP_NTZ-micros yields datetime directly; nanos-long
+    yields ints, truncated here to µs exactly like
+    ``normalize_event_ts``).  Raises if any footer lacks min/max
+    statistics — a silent fallback would under-report the domain and
+    break watermark and packing proofs.
     """
     import datetime as _dt
 
@@ -223,7 +218,7 @@ def table_column_max(sf_dir: str, name: str, col: str):
         files = pads.dataset(path, format="parquet").files
     else:
         files = [path]
-    best = None
+    lo = hi = None
     is_nanos_ts = False
     for f in files:
         md = pq.ParquetFile(f).metadata
@@ -249,14 +244,15 @@ def table_column_max(sf_dir: str, name: str, col: str):
                 raise ValueError(
                     f"{f} row group {rg} has no min/max stats for {col!r}"
                 )
-            v = st.max
-            best = v if best is None else max(best, v)
-    if isinstance(best, int) and is_nanos_ts:
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    if isinstance(hi, int) and is_nanos_ts:
         # nanos-long fixture layout: ns → µs truncation (normalize_event_ts)
-        best = _dt.datetime(1970, 1, 1) + _dt.timedelta(
-            microseconds=best // 1000
+        epoch = _dt.datetime(1970, 1, 1)
+        lo, hi = (
+            epoch + _dt.timedelta(microseconds=v // 1000) for v in (lo, hi)
         )
-    return best
+    return lo, hi
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -267,8 +263,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     caller layers on top. Scans go through the layout-compaction cache
     above so they parallelize across executor threads.
     """
-    # applicationId is unique per SparkContext, so a restarted session
-    # can never serve plans bound to a dead one
     # Engine contract: all event/order time is UTC (the reference's
     # s3-connector-config.json:21-25). Set on EVERY load — including
     # memoized ones — so a caller that resets the session timezone
@@ -276,10 +270,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # later memo hit. Runtime (not only our session factory) so the
     # engine also works under the correctness driver's own SparkSession.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None:
-        return memo
+    return _table_scan(spark, sf_dir, name)
+
+
+# a DataFrame is an immutable logical plan, so the handle for (session,
+# dir, table) is built once and reused — this is what a catalog does;
+# it removes repeated footer reads and driver↔JVM round trips from
+# every query's plan-construction path
+@memoized("retained")
+def _table_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in FIXTURE_TABLES:
         raise KeyError(f"unknown fixture table {name!r}; have {FIXTURE_TABLES}")
     if name == "events":
@@ -289,7 +288,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(_compacted_source(sf_dir, name))
     if name == "events":
         df = normalize_event_ts(df)
-    _TABLE_MEMO[key] = df
     return df
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from ..plan_cache import session_memo
+from ..plan_cache import memoized
 from ..tmpdirs import tmpdir_reclaimed_at_exit
 
 FABRIC_BASE_MS = 1740787200000
@@ -210,7 +210,21 @@ def _register_sink(spark: SparkSession) -> None:
     _register(spark, JsonlCommitDataSource)
 
 
-_SINK_STAGE_MEMO = session_memo("retained")
+@memoized("retained")
+def _sink_stage(spark: SparkSession) -> str:
+    """The fabric written once per session through the custom Python
+    sink; returns the published directory."""
+    out = tmpdir_reclaimed_at_exit("jsonl_sink_")
+    fab = (
+        spark.read.format("purchase_fabric")
+        .option("n_rows", str(DEFAULT_ROWS))
+        .option("n_parts", str(DEFAULT_PARTS))
+        .load()
+    )
+    fab.write.format("jsonl_commit_dir").option("path", out).mode(
+        "append"
+    ).save()
+    return out
 
 
 def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
@@ -228,20 +242,7 @@ def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
 
     _register(spark)
     _register_sink(spark)
-    key = (spark.sparkContext.applicationId, "jsonl_sink")
-    out = _SINK_STAGE_MEMO.get(key)
-    if out is None:
-        out = tmpdir_reclaimed_at_exit("jsonl_sink_")
-        fab = (
-            spark.read.format("purchase_fabric")
-            .option("n_rows", str(DEFAULT_ROWS))
-            .option("n_parts", str(DEFAULT_PARTS))
-            .load()
-        )
-        fab.write.format("jsonl_commit_dir").option("path", out).mode(
-            "append"
-        ).save()
-        _SINK_STAGE_MEMO[key] = out
+    out = _sink_stage(spark)
     with open(os.path.join(out, "_MANIFEST.json")) as fh:
         manifest_rows = sum(e["n_rows"] for e in _json.load(fh)["files"])
     # pathGlobFilter on the literal dir (not a glob-in-path) keeps the
@@ -503,7 +504,72 @@ class JsonlEpochSinkDataSource(DataSource):
         return JsonlEpochStreamWriter(self.options)
 
 
-_STREAM_SINK_MEMO = session_memo("retained")
+@memoized("retained")
+def _stream_sink_stage(spark: SparkSession) -> str:
+    """The fabric streamed once per session from the custom Python
+    stream source into the custom Python stream sink; returns the sink
+    directory once every row is committed."""
+    import json as _json
+    import os
+    import time
+
+    out = tmpdir_reclaimed_at_exit("jsonl_stream_sink_")
+    ckpt = tmpdir_reclaimed_at_exit("jsonl_stream_sink_ckpt_")
+    stream = (
+        spark.readStream.format("purchase_fabric_stream")
+        .option("n_rows", str(DEFAULT_ROWS))
+        .load()
+    )
+    q = (
+        stream.writeStream.format("jsonl_epoch_sink")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+
+    def _committed() -> int:
+        cdir = os.path.join(out, "_commits")
+        if not os.path.isdir(cdir):
+            return 0
+        tot = 0
+        for f in os.listdir(cdir):
+            if f.startswith("."):
+                continue
+            with open(os.path.join(cdir, f)) as fh:
+                tot += sum(e["n_rows"] for e in _json.load(fh)["files"])
+        return tot
+
+    try:
+        deadline = time.monotonic() + 120
+        while _committed() < DEFAULT_ROWS:
+            # surface the query's own failure immediately instead
+            # of spinning out the deadline and masking it with a
+            # generic TimeoutError
+            exc = q.exception()
+            if exc is not None:
+                raise exc
+            if not q.isActive:
+                # the query may have failed between the exception()
+                # check above and the isActive check — re-check so
+                # the real streaming error isn't masked by the
+                # generic RuntimeError
+                exc = q.exception()
+                if exc is not None:
+                    raise exc
+                raise RuntimeError(
+                    "python stream sink query terminated without "
+                    f"an exception at {_committed()}/{DEFAULT_ROWS}"
+                    " committed rows"
+                )
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"python stream sink stalled: "
+                    f"{_committed()}/{DEFAULT_ROWS} rows committed"
+                )
+            time.sleep(0.3)
+    finally:
+        q.stop()
+    return out
 
 
 def sink_python_stream_writer(spark: SparkSession, sf: str) -> DataFrame:
@@ -523,69 +589,7 @@ def sink_python_stream_writer(spark: SparkSession, sf: str) -> DataFrame:
 
     _register_stream(spark)
     _register(spark, JsonlEpochSinkDataSource)
-    key = (spark.sparkContext.applicationId, "jsonl_stream_sink")
-    out = _STREAM_SINK_MEMO.get(key)
-    if out is None:
-        import time
-
-        out = tmpdir_reclaimed_at_exit("jsonl_stream_sink_")
-        ckpt = tmpdir_reclaimed_at_exit("jsonl_stream_sink_ckpt_")
-        stream = (
-            spark.readStream.format("purchase_fabric_stream")
-            .option("n_rows", str(DEFAULT_ROWS))
-            .load()
-        )
-        q = (
-            stream.writeStream.format("jsonl_epoch_sink")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-        def _committed() -> int:
-            cdir = os.path.join(out, "_commits")
-            if not os.path.isdir(cdir):
-                return 0
-            tot = 0
-            for f in os.listdir(cdir):
-                if f.startswith("."):
-                    continue
-                with open(os.path.join(cdir, f)) as fh:
-                    tot += sum(e["n_rows"] for e in _json.load(fh)["files"])
-            return tot
-
-        try:
-            deadline = time.monotonic() + 120
-            while _committed() < DEFAULT_ROWS:
-                # surface the query's own failure immediately instead
-                # of spinning out the deadline and masking it with a
-                # generic TimeoutError
-                exc = q.exception()
-                if exc is not None:
-                    raise exc
-                if not q.isActive:
-                    # the query may have failed between the exception()
-                    # check above and the isActive check — re-check so
-                    # the real streaming error isn't masked by the
-                    # generic RuntimeError
-                    exc = q.exception()
-                    if exc is not None:
-                        raise exc
-                    raise RuntimeError(
-                        "python stream sink query terminated without "
-                        f"an exception at {_committed()}/{DEFAULT_ROWS}"
-                        " committed rows"
-                    )
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"python stream sink stalled: "
-                        f"{_committed()}/{DEFAULT_ROWS} rows committed"
-                    )
-                time.sleep(0.3)
-        finally:
-            q.stop()
-        _STREAM_SINK_MEMO[key] = out
-
+    out = _stream_sink_stage(spark)
     cdir = os.path.join(out, "_commits")
     files, manifest_rows = [], 0
     for f in sorted(os.listdir(cdir)):

@@ -862,15 +862,16 @@ SOME_GATE = 7
 
 
 def test_plan_memo_contract(spark, sf_dir):
-    """plan_memo: same (session, sf, gates) → the SAME DataFrame object
-    (no rebuild); a changed gate constant → a FRESH build keyed
-    separately (monkeypatched budgets can never hit a stale plan); the
-    wrapper never swallows execution — the returned frame is lazy."""
+    """memoized: same (session, sf, constants) → the SAME DataFrame
+    object (no rebuild); a changed module constant → a FRESH build
+    keyed separately (monkeypatched budgets can never hit a stale
+    plan); the wrapper never swallows execution — the returned frame
+    is lazy."""
     from iceberg_kafka_playgroud_spark import plan_cache
 
     calls = {"n": 0}
 
-    @plan_cache.plan_memo("SOME_GATE")
+    @plan_cache.memoized("derived")
     def build(sp, sf):
         calls["n"] += 1
         from pyspark.sql import functions as F
@@ -917,7 +918,7 @@ def test_memo_eviction_drops_dead_sessions(spark, sf_dir):
     sh, cand = dedup._minhash_candidates(spark, sf_dir)
     dedup._cand_count(cand)
     advanced._trade_edges(spark, sf_dir)
-    for memo in (dedup._N_CAND_MEMO, advanced._TRADE_EDGES_MEMO):
+    for memo in (dedup._N_CAND_MEMO, advanced._trade_edges.memo):
         assert all(k[0] == live for k in memo)
 
     # the no-argument sweep covers every registered memo, and only
@@ -1011,7 +1012,6 @@ def test_boilerplate_docs_single_cache_entry(spark, sf_dir):
     """The corpus-sized boilerplate gram frame must stay ONE bounded
     resident entry across repeat calls (r9 follow-up; the owner is
     the prepared plan, not a bespoke memo)."""
-    from iceberg_kafka_playgroud_spark import plan_cache
     from iceberg_kafka_playgroud_spark.operators import text
 
     text.text_boilerplate_coverage(spark, sf_dir).collect()
@@ -1021,9 +1021,8 @@ def test_boilerplate_docs_single_cache_entry(spark, sf_dir):
     assert _n_persistent_rdds(spark) == base
     entries = [
         k
-        for k in plan_cache._PLAN_CACHE
-        if "text_boilerplate_coverage" in k[2]
-        and k[1] == sf_dir.rstrip("/")
+        for k in text.text_boilerplate_coverage.memo
+        if k[1] == sf_dir.rstrip("/")
     ]
     assert len(entries) == 1
 
@@ -1138,7 +1137,7 @@ def test_sql_scripting_conf_restored(spark, sf_dir):
 
 
 def test_plan_memo_gate_constants_bust_cache(spark, sf_dir, monkeypatch):
-    """Every plan-shaping module constant must be in the plan_memo key:
+    """Every plan-shaping module constant must be in the memoized key:
     monkeypatching a gate after a warm call must produce a FRESH plan,
     never a stale hit (plan_cache.py rule #2). Exercised on the r11
     adjudicated site: graph_triangle_count × PAIR_MIN_SUPPORT."""
@@ -1150,6 +1149,65 @@ def test_plan_memo_gate_constants_bust_cache(spark, sf_dir, monkeypatch):
     )
     fresh = advanced.graph_triangle_count(spark, sf_dir)
     assert fresh is not warm  # patched gate -> fresh build
+
+
+def _ivf_index_cells(spark, sf_dir, monkeypatch):
+    """The IVF index built under a patched K_CELLS has K_CELLS cells,
+    in its codebook and on disk."""
+    import os
+
+    similarity._ivf_index_on_disk(spark, sf_dir)
+    monkeypatch.setattr(similarity, "K_CELLS", 8)
+    index_dir, cent_ids, _ = similarity._ivf_index_on_disk(spark, sf_dir)
+    cells = {
+        int(d.split("=")[1]) for d in os.listdir(index_dir) if d.startswith("cell=")
+    }
+    assert len(cent_ids) == 8
+    assert cells <= set(cent_ids.tolist())
+
+
+def _quantized_scale(spark, sf_dir, monkeypatch):
+    """The quantized corpus under a patched PI_XSCALE equals a fresh
+    ``fixed_point`` of the embeddings."""
+    from pyspark.sql import functions as F
+
+    from iceberg_kafka_playgroud_spark.schema import load_table
+
+    similarity._quantized(spark, sf_dir)
+    monkeypatch.setattr(similarity, "PI_XSCALE", 10)
+    fresh = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", similarity.fixed_point(F.col("embedding")).alias("qx")
+    )
+    got = similarity._quantized(spark, sf_dir)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, fresh.collect())
+    )
+
+
+def _python_sink_rows(spark, sf_dir, monkeypatch):
+    """The custom Python sink writes DEFAULT_ROWS rows: a halved row
+    count must change the audited sink rows."""
+    from iceberg_kafka_playgroud_spark.sources import python_datasource as pds
+
+    warm = pds.sink_python_datasource(spark, sf_dir).collect()
+    monkeypatch.setattr(pds, "DEFAULT_ROWS", pds.DEFAULT_ROWS // 2)
+    rows = pds.sink_python_datasource(spark, sf_dir).collect()
+    assert rows != warm
+    assert {r["manifest_rows"] for r in rows} == {pds.DEFAULT_ROWS}
+    assert sum(r["n_rows"] for r in rows) == pds.DEFAULT_ROWS
+
+
+@pytest.mark.parametrize(
+    "check",
+    [_ivf_index_cells, _quantized_scale, _python_sink_rows],
+    ids=["ivf_index", "quantized", "python_sink"],
+)
+def test_memo_keys_follow_module_constants(spark, sf_dir, monkeypatch, check):
+    """A memo keyed on (session, args) alone serves the artifact built
+    under the old constants after one is patched: each case warms the
+    memo, patches one constant the build reads, and checks that the
+    next call built a fresh artifact under the new value."""
+    check(spark, sf_dir, monkeypatch)
 
 
 def test_near_dup_threshold_binds_at_call_time(spark, sf_dir, monkeypatch):
@@ -1264,7 +1322,7 @@ def test_durable_plan_not_frozen_across_reset(spark, tmp_path):
     src = str(tmp_path / "src")
     spark.range(10).write.mode("overwrite").parquet(src)
 
-    @plan_cache.plan_memo()
+    @plan_cache.memoized("derived")
     def build(sp, sf):
         base = plan_cache.cached(
             sp.read.parquet(src).select(F.col("id").alias("x"))
@@ -1286,7 +1344,7 @@ def test_durable_drop_unpersists_handles(spark):
 
     from iceberg_kafka_playgroud_spark import plan_cache
 
-    @plan_cache.plan_memo()
+    @plan_cache.memoized("derived")
     def build(sp, sf):
         base = plan_cache.cached(
             sp.range(7).select((F.col("id") + 1).alias("x"))
@@ -1294,11 +1352,11 @@ def test_durable_drop_unpersists_handles(spark):
         return base.select(F.sum("x").alias("s"))
 
     assert build(spark, "sf-unpersist").collect()[0]["s"] == 28
-    key = next(k for k in plan_cache._PLAN_CACHE if k[1] == "sf-unpersist")
-    _, handles = plan_cache._PLAN_CACHE[key]
+    key = next(k for k in build.memo if k[1] == "sf-unpersist")
+    _, handles = build.memo[key]
     assert handles and all(h.storageLevel.useMemory for h in handles)
     plan_cache.clear_materializations()
-    assert key not in plan_cache._PLAN_CACHE
+    assert key not in build.memo
     for h in handles:
         lvl = h.storageLevel
         assert not (lvl.useMemory or lvl.useDisk)
@@ -1316,7 +1374,7 @@ def test_durable_build_failure_unpersists_partial_handles(spark):
 
     stash = []
 
-    @plan_cache.plan_memo()
+    @plan_cache.memoized("derived")
     def build(sp, sf):
         stash.append(
             plan_cache.cached(sp.range(3).select(F.col("id").alias("x")))
@@ -1325,13 +1383,13 @@ def test_durable_build_failure_unpersists_partial_handles(spark):
 
     with pytest.raises(RuntimeError, match="mid-build failure"):
         build(spark, "sf-failed-build")
-    assert not any(k[1] == "sf-failed-build" for k in plan_cache._PLAN_CACHE)
+    assert not any(k[1] == "sf-failed-build" for k in build.memo)
     (handle,) = stash
     lvl = handle.storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
     # the collector was restored (finally, not just the except path):
     # a later successful build registers its own handles
-    @plan_cache.plan_memo()
+    @plan_cache.memoized("derived")
     def build_ok(sp, sf):
         base = plan_cache.cached(
             sp.range(4).select(F.col("id").alias("x"))
@@ -1339,8 +1397,6 @@ def test_durable_build_failure_unpersists_partial_handles(spark):
         return base.select(F.sum("x").alias("s"))
 
     assert build_ok(spark, "sf-after-failure").collect()[0]["s"] == 6
-    key = next(
-        k for k in plan_cache._PLAN_CACHE if k[1] == "sf-after-failure"
-    )
-    _, handles = plan_cache._PLAN_CACHE[key]
+    key = next(k for k in build_ok.memo if k[1] == "sf-after-failure")
+    _, handles = build_ok.memo[key]
     assert len(handles) == 1 and handles[0].storageLevel.useMemory

@@ -569,6 +569,34 @@ def test_triangle_count_matches_naive(spark, sf_dir):
     assert row["n_triangles"] == naive
 
 
+def test_copurchase_pack_gate_reads_key_domain(spark, tmp_path):
+    """The co-purchase pair packing (pa<<32 | pb) is safe only when
+    every l_partkey lies in [0, 2^31): part keys above 2^31 with a
+    2-row ``part`` table must take the two-long path and keep their
+    values, not wrap through the packed key."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_kafka_playgroud_spark.operators import advanced
+
+    hi_a, hi_b = (1 << 31) + 5, (1 << 31) + 6
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([1, 1, 2, 2], pa.int64()),
+                "l_partkey": pa.array([hi_a, hi_b, hi_a, hi_b], pa.int64()),
+            }
+        ),
+        tmp_path / "lineitem.parquet",
+    )
+    pq.write_table(
+        pa.table({"p_partkey": pa.array([hi_a, hi_b], pa.int64())}),
+        tmp_path / "part.parquet",
+    )
+    edges = advanced._copurchase_edges(spark, str(tmp_path))
+    assert [tuple(r) for r in edges.collect()] == [(hi_a, hi_b, 2)]
+
+
 def test_kmv_estimate_within_theory_bound(spark, sf_dir):
     """KMV relative error concentrates around 1/sqrt(k-1); assert the
     fixture estimate is within 5 standard errors of exact — loose
@@ -1012,6 +1040,70 @@ def test_stream_sink_epoch_commit_protocol(tmp_path):
         if f.startswith(".tmp-")
     ]
     assert strays == [], strays
+
+
+def test_one_memo_key_rule(spark, sf_dir):
+    """Every session artifact is keyed by ``plan_cache``: no module
+    outside it reads ``applicationId`` to build a key, no operator
+    caches with a bare ``.cache()`` that no memo entry owns, and
+    ``plan_memo`` is gone.  The constants part of every memoized key
+    stays equal across a run of the PQ, LPA and CC ops, so repeat
+    calls hit (an upper-case global rebound at run time would turn
+    every call into a rebuild)."""
+    import ast
+    import importlib
+    import pathlib
+    import pkgutil
+
+    import iceberg_kafka_playgroud_spark as pkg
+    from iceberg_kafka_playgroud_spark import plan_cache
+    from iceberg_kafka_playgroud_spark.operators import (
+        advanced,
+        dedup,
+        similarity,
+    )
+
+    root = pathlib.Path(pkg.__path__[0])
+    app_id, bare_cache = [], []
+    for path in root.rglob("*.py"):
+        src = path.read_text()
+        rel = str(path.relative_to(root))
+        assert "plan_memo" not in src, rel
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.Attribute):
+                continue
+            if node.attr == "applicationId" and rel != "plan_cache.py":
+                app_id.append(f"{rel}:{node.lineno}")
+            if node.attr == "cache" and rel.startswith("operators"):
+                bare_cache.append(f"{rel}:{node.lineno}")
+    assert not app_id, f"hand-built session keys at {app_id}"
+    assert not bare_cache, f"bare .cache() (use plan_cache.cached) at {bare_cache}"
+    assert not hasattr(plan_cache, "plan_memo")
+
+    registry = plan_cache._REGISTRY
+    modules = set()
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        try:
+            mod = importlib.import_module(info.name)
+        except ImportError:
+            continue
+        for val in vars(mod).values():
+            memo = getattr(val, "memo", None)
+            if callable(val) and any(memo is m for m in registry):
+                modules.add(mod)
+    assert {similarity, advanced, dedup} <= modules
+
+    def constants():
+        return {m.__name__: plan_cache._constants(vars(m)) for m in modules}
+
+    before = constants()
+    similarity.ann_pq_adc_topk(spark, sf_dir).collect()
+    advanced.graph_label_propagation(spark, sf_dir).collect()
+    dedup.dedup_connected_components(spark, sf_dir).collect()
+    assert constants() == before
+    assert similarity._pq_model(spark, sf_dir) is similarity._pq_model(
+        spark, sf_dir
+    )
 
 
 def test_every_engine_memo_is_classified(spark, sf_dir):

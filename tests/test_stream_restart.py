@@ -109,17 +109,21 @@ def test_louter_sentinel_contract_over_delays(spark, sf_dir):
 
 
 def test_footer_max_matches_scan(spark, sf_dir):
-    """table_column_max (footer statistics) must equal the scan max —
-    the sentinel bound may never under-report."""
+    """table_column_bounds (footer statistics) must equal the scan
+    min and max — the sentinel bound may never under-report."""
     from iceberg_kafka_playgroud_spark.schema import (
         load_table,
-        table_column_max,
+        table_column_bounds,
     )
 
-    scan_max = (
-        load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
+    scan_min, scan_max = (
+        load_table(spark, sf_dir, "events")
+        .agg(F.min("ts"), F.max("ts"))
+        .collect()[0]
     )
-    assert table_column_max(sf_dir, "events", "ts") == scan_max
+    lo, hi = table_column_bounds(sf_dir, "events", "ts")
+    assert hi == scan_max
+    assert lo == scan_min
 
 
 @pytest.mark.skipif(not os.path.isdir("/dev/shm"), reason="no tmpfs checkpoint base")
